@@ -25,7 +25,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // AQE coalescing floor (r17, measured): the default 1 MB floor
+      // AQE coalescing floor (measured): the default 1 MB floor
       // coalesces KB-sized-but-COMPUTE-heavy exchanges to one task — at
       // sf0.1 the x2 verify stages (1.3 MB of candidate rows carrying
       // seconds of array-intersect work) ran 1-task, serializing 31 of
@@ -62,14 +62,14 @@ object Sessions {
       .config("spark.driver.host", "localhost")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // WindowExec's "No Partition Defined" warning: AUDITED r17 — every
+    // WindowExec's "No Partition Defined" warning: audited — every
     // unpartitioned window in this repo is report- or dimension-sized by
-    // construction (Validator's per-partition offset table, StarSchema /
-    // j5 / w1 bounded dims, t-family alphabet²-sized aggregates, per-day
-    // report tails), so the flood of known-benign repeats was drowning
-    // the one signal that would matter (an unpartitioned window over a
-    // corpus-sized frame). Silenced at the logger; new windows are
-    // guarded by review + PlanAudit instead of log noise.
+    // construction (StarSchema / j5 / w1 bounded dims, t-family
+    // alphabet²-sized aggregates, per-day report tails), so the flood of
+    // known-benign repeats was drowning the one signal that would matter
+    // (an unpartitioned window over a corpus-sized frame). Silenced at
+    // the logger; new windows are guarded by review + PlanAudit instead
+    // of log noise.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)

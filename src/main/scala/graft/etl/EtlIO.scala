@@ -106,19 +106,25 @@ object EtlIO {
         org.apache.spark.sql.functions.lit("DataFrameSchema").as("schema_context"),
         org.apache.spark.sql.functions.lit(null).cast("int").as("check_number"))
 
+  /** an audited CSV read: the clean rows in contract order, the
+    * corrupt-line exceptions, the file's header as read, and the cached
+    * parse both frames read from (the caller unpersists it).
+    */
+  final case class AuditedCsv(clean: DataFrame, exceptions: DataFrame,
+      header: Seq[String], parsed: DataFrame)
+
   /** [[readCsvRaw]] plus a corrupt-record audit channel: malformed lines
     * (wrong delimiter count — with an all-strings schema nothing else
     * can fail) surface as `corrupt_record` exception rows instead of
-    * being silently padded/truncated by PERMISSIVE mode. Returns
-    * (clean rows in contract order, exceptions). The parsed frame is
-    * cached: Spark disallows queries over a raw CSV/JSON scan whose
-    * referenced columns are only the corrupt-record column, and the
-    * exceptions branch is exactly that query — materializing first is
-    * the documented contract (and the pipeline reads both branches, so
-    * the scan is shared, not repeated).
+    * being silently padded/truncated by PERMISSIVE mode. The parsed
+    * frame is cached: Spark disallows queries over a raw CSV/JSON scan
+    * whose referenced columns are only the corrupt-record column, and
+    * the exceptions branch is exactly that query — materializing first
+    * is the documented contract (and the pipeline reads both branches,
+    * so the scan is shared, not repeated).
     */
   def readCsvRawAudited(spark: SparkSession, path: String, schema: StructType,
-      dataset: String): (DataFrame, DataFrame) = {
+      dataset: String): AuditedCsv = {
     val actual = csvHeader(path)
     val asStrings = StructType(actual.map(name =>
       StructField(name, StringType, nullable = true)) :+
@@ -137,7 +143,7 @@ object EtlIO {
     val clean = raw
       .filter(org.apache.spark.sql.functions.col(CorruptCol).isNull)
       .select(cols: _*)
-    (clean, corruptExceptions(raw, dataset))
+    AuditedCsv(clean, corruptExceptions(raw, dataset), actual, raw)
   }
 
   /** schema'd CSV read (for already-trusted inputs like the COA). */

@@ -134,8 +134,8 @@ object Transform {
     * parity), default Revenue/COGS/Expense to 0, derive profits.
     *
     * Scale posture: the pivot domain is pinned from the chart of accounts
-    * (dimension-sized — one KB-scale distinct, never a fact scan), so the
-    * fact is read ONCE: a single shuffle on (entity, month) computing
+    * (dimension-sized — one KB-scale distinct, never a fact scan), so
+    * each fact pass is a single shuffle on (entity, month) computing
     * sum + observation count per type. pandas pivot_table emits only
     * OBSERVED types as columns and (dropna=True) drops groups whose every
     * account_type is unmapped — both reproduced here by filtering null
@@ -158,10 +158,12 @@ object Transform {
       .groupBy("entity", "month")
       .pivot("account_type", coaTypes)
       .agg(sum("amount_base").as("s"), count(lit(1)).as("c"))
-      .cache()
 
     // prune COA types with zero observations anywhere — pandas emits only
-    // observed columns; this global count runs over the tiny wide frame
+    // observed columns; this global count runs over the tiny wide frame.
+    // Not cached: the returned plan re-derives `wide` in a second fact
+    // pass, where a cache would outlive the call with no owner to
+    // release it
     val obsCounts = wide.select(coaTypes.map(t => sum(col(s"${t}_c")).as(t)): _*)
       .collect().headOption
     val observedTypes = coaTypes.filter { t =>

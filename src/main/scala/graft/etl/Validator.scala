@@ -1,8 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import Dq._
 
@@ -26,49 +26,39 @@ object Validator {
   import Dq.rawCol
 
   /** full deterministic ordering: natural keys first, then every other
-    * contract column as tiebreak — duplicate-natural-key rows (the very
-    * case dupKeys reports) still index stably.
+    * contract column, then the raw strings — duplicate-natural-key rows
+    * (the very case dupKeys reports) and rows whose typed values tie
+    * but whose raw strings differ (two different unparseable dates)
+    * still index by file content alone.
     */
-  private def indexOrder(table: TableSchema): Seq[org.apache.spark.sql.Column] =
-    (table.orderKeys ++
-      table.schema.fieldNames.filterNot(table.orderKeys.contains)).map(col)
+  private def indexOrder(table: TableSchema): Seq[Column] = {
+    val names = table.orderKeys ++
+      table.schema.fieldNames.filterNot(table.orderKeys.contains)
+    (names ++ table.schema.fieldNames.map(rawCol)).map(col)
+  }
 
-  /** 0-based rank of each row in `order`, computed scalably and entirely
-    * inside the DataFrame plan (stays lazy, codegen'd, prunable): range
-    * partition on the order keys, rank WITHIN each partition (a
-    * partition-local window — every executor sorts only its slice), then
-    * add each partition's starting offset, computed as a cumulative sum
-    * over the tiny per-partition-count aggregate (rows = #partitions) and
-    * broadcast-joined back. NOT a row_number over a global un-partitioned
-    * Window, which would drag the whole table through a single task; the
-    * range exchange is materialized once and reused by both branches.
+  /** `df` plus `name` = each row's 0-based rank in `order`: one global
+    * sort, numbered in partition order by `zipWithIndex`. The numbering
+    * reads the sorted partitions as AQE left them, so coalescing them
+    * can neither drop nor repeat a row. Eager: building it runs the
+    * sort's sample and shuffle jobs and one per-partition count.
     */
-  private def withGlobalIndex(df: DataFrame,
-      order: Seq[org.apache.spark.sql.Column], name: String): DataFrame = {
-    val ranged = df.repartitionByRange(order: _*)
-      .withColumn("__gidx_pid", spark_partition_id())
-    val local = ranged.withColumn("__gidx_local",
-      row_number().over(
-        Window.partitionBy("__gidx_pid").orderBy(order: _*)).cast("long") - 1)
-    val offsets = ranged.groupBy("__gidx_pid").agg(count(lit(1)).as("__gidx_n"))
-      .withColumn("__gidx_off", coalesce(
-        sum("__gidx_n").over(Window.orderBy("__gidx_pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__gidx_pid", "__gidx_off")
-    local.join(broadcast(offsets), Seq("__gidx_pid"))
-      .withColumn(name, col("__gidx_off") + col("__gidx_local"))
-      .drop("__gidx_pid", "__gidx_local", "__gidx_off")
+  private def withIndex(df: DataFrame, order: Seq[Column], name: String): DataFrame = {
+    val numbered = df.sort(order: _*).rdd.zipWithIndex()
+      .map { case (row, i) => Row.fromSeq(row.toSeq :+ i) }
+    df.sparkSession.createDataFrame(numbered,
+      df.schema.add(name, LongType, nullable = false))
   }
 
   /** typed view of an all-strings frame + per-column raw copies + the
-    * deterministic row index.
+    * deterministic row index (built eagerly, see [[withIndex]]).
     */
   def coerce(raw: DataFrame, table: TableSchema): DataFrame = {
-    val withRaw = table.schema.fields.foldLeft(raw) { (df, f) =>
-      df.withColumn(rawCol(f.name), col(f.name))
-        .withColumn(f.name, col(f.name).cast(f.dataType))
-    }
-    withGlobalIndex(withRaw, indexOrder(table), "__idx")
+    val fields = table.schema.fields.toSeq
+    val typed = raw.select(
+      fields.map(f => col(f.name).cast(f.dataType).as(f.name)) ++
+        fields.map(f => col(f.name).as(rawCol(f.name))): _*)
+    withIndex(typed, indexOrder(table), "__idx")
   }
 
   /** all exception rows for one table (dataset, index, column, check,
@@ -151,19 +141,13 @@ object Validator {
     * (pipeline.py:30–47): rows whose account_code is not in the COA, via
     * broadcast left-anti join (SURVEY J6).
     */
-  def accountInCoa(df: DataFrame, dataset: String, coaCodes: DataFrame, orderKeys: Seq[String]): DataFrame = {
-    val indexed = withGlobalIndex(df, orderKeys.map(col), "__idx")
-    accountInCoaIndexed(indexed, dataset, coaCodes)
-  }
+  def accountInCoa(df: DataFrame, dataset: String, coaCodes: DataFrame, orderKeys: Seq[String]): DataFrame =
+    accountInCoaIndexed(withIndex(df, orderKeys.map(col), "__idx"), dataset, coaCodes)
 
-  /** [[accountInCoa]] over a frame that ALREADY carries the coerce-time
-    * `__idx` (r17): the pipeline's RI checks used to re-derive a global
-    * index — a second range-sample pass, range exchange and window sort
-    * over the two biggest tables — when [[coerce]] had already ranked
-    * the same rows by the SAME natural keys ([[indexOrder]] puts
-    * `orderKeys` first; the remaining columns only break ties, which the
-    * orderKeys-only rank left arbitrary). Reusing it drops both chains
-    * from the close's critical path at identical output.
+  /** [[accountInCoa]] over a frame that already carries the coerce-time
+    * `__idx`: [[indexOrder]] puts the natural keys first, so the
+    * pipeline's RI checks reuse that rank instead of sorting the two
+    * biggest tables a second time.
     */
   def accountInCoaIndexed(indexed: DataFrame, dataset: String,
       coaCodes: DataFrame): DataFrame = {

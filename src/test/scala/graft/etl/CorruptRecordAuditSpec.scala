@@ -70,7 +70,7 @@ class CorruptRecordAuditSpec extends SparkSpec {
       "1,one",
       "2,two,EXTRA-FIELD",
       "3,three"))
-    val (clean, ex) = EtlIO.readCsvRawAudited(spark, p, schema, "csvfeed")
+    val EtlIO.AuditedCsv(clean, ex, _, _) = EtlIO.readCsvRawAudited(spark, p, schema, "csvfeed")
     assert(clean.orderBy("x").collect().map(r => (r.getString(0), r.getString(1))).toSeq
       == Seq(("1", "one"), ("3", "three")))
     val exRows = ex.collect()
