@@ -68,7 +68,7 @@ object Sessions {
     // alphabet²-sized aggregates, per-day report tails), so the flood of
     // known-benign repeats was drowning the one signal that would matter
     // (an unpartitioned window over a corpus-sized frame). Silenced at
-    // the logger; new windows are guarded by review + PlanAudit instead
+    // the logger; new windows are guarded by review + `Profile plan` instead
     // of log noise.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",

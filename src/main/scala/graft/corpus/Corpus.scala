@@ -215,7 +215,7 @@ object Corpus {
     def explain(tag: String, df: DataFrame): Unit =
       if (explainRounds)
         // dev-only plan capture: the loop's OUTPUT is checkpoint-backed,
-        // so PlanAudit over the returned frame can never show the
+        // so `Profile plan` over the returned frame can never show the
         // per-round join strategy — this prints it where plans evidence
         // is cut
         System.err.println(s"[cc $tag]\n" + df.queryExecution

@@ -1,5 +1,7 @@
 package graft.etl
 
+import org.apache.spark.sql.AnalysisException
+
 import graft.core.Sessions
 
 /** CLI ≙ reference cli.py — except actually wired to the pipeline (the
@@ -79,10 +81,12 @@ object Cli {
         val now = spark.conf.getAll
         (now.keySet ++ b.keySet).foreach { k =>
           (b.get(k), now.get(k)) match {
+            // Spark refuses runtime changes to static and core confs
+            // (AnalysisException); getOrCreate cannot have changed them
             case (Some(v), cur) if !cur.contains(v) =>
-              try spark.conf.set(k, v) catch { case _: Throwable => () }
+              try spark.conf.set(k, v) catch { case _: AnalysisException => () }
             case (None, Some(_)) =>
-              try spark.conf.unset(k) catch { case _: Throwable => () }
+              try spark.conf.unset(k) catch { case _: AnalysisException => () }
             case _ => ()
           }
         }

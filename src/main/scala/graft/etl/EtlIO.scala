@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** IO layer ≙ reference io_utils.py + the single-file CSV output contract
@@ -59,26 +59,34 @@ object EtlIO {
     out.toSeq
   }
 
-  /** all-strings CSV read bound BY HEADER NAME (a supplied schema binds
-    * positionally and ignores the header — a reordered file would be
-    * silently misread; pandas binds by name, so must we). Columns are
-    * returned in the target schema's order; contract columns missing
-    * from the file come back as nulls (the strict header check reports
-    * them), extra file columns are dropped.
+  /** the all-strings read schema for a file whose header is `header`,
+    * plus `extra` fields, and the projection back to `contract`. Binding
+    * is BY HEADER NAME: a supplied schema binds positionally and ignores
+    * the header, so a reordered file would be silently misread; pandas
+    * binds by name, so must we. Columns come back in the contract's
+    * order; contract columns missing from the file come back as nulls
+    * (the strict header check reports them), extra file columns are
+    * dropped.
     */
+  private def bindByHeader(header: Seq[String], contract: StructType,
+      extra: StructField*): (StructType, Seq[Column]) = {
+    val asStrings = StructType(header.map(name =>
+      StructField(name, StringType, nullable = true)) ++ extra)
+    val cols = contract.fieldNames.toSeq.map { name =>
+      if (header.contains(name)) org.apache.spark.sql.functions.col(name)
+      else org.apache.spark.sql.functions.lit(null).cast(StringType).as(name)
+    }
+    (asStrings, cols)
+  }
+
+  /** all-strings CSV read, bound by header name ([[bindByHeader]]). */
   def readCsvRaw(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val actual = csvHeader(path)
-    val asStrings = StructType(actual.map(name =>
-      StructField(name, StringType, nullable = true)))
-    val raw = spark.read
+    val (asStrings, cols) = bindByHeader(csvHeader(path), schema)
+    spark.read
       .option("header", "true")
       .schema(asStrings)
       .csv(path)
-    val cols = schema.fieldNames.toSeq.map { name =>
-      if (actual.contains(name)) org.apache.spark.sql.functions.col(name)
-      else org.apache.spark.sql.functions.lit(null).cast(StringType).as(name)
-    }
-    raw.select(cols: _*)
+      .select(cols: _*)
   }
 
   /** name of the corrupt-record channel column on audited reads;
@@ -126,8 +134,7 @@ object EtlIO {
   def readCsvRawAudited(spark: SparkSession, path: String, schema: StructType,
       dataset: String): AuditedCsv = {
     val actual = csvHeader(path)
-    val asStrings = StructType(actual.map(name =>
-      StructField(name, StringType, nullable = true)) :+
+    val (asStrings, cols) = bindByHeader(actual, schema,
       StructField(CorruptCol, StringType, nullable = true))
     val raw = spark.read
       .option("header", "true")
@@ -136,10 +143,6 @@ object EtlIO {
       .schema(asStrings)
       .csv(path)
       .cache()
-    val cols = schema.fieldNames.toSeq.map { name =>
-      if (actual.contains(name)) org.apache.spark.sql.functions.col(name)
-      else org.apache.spark.sql.functions.lit(null).cast(StringType).as(name)
-    }
     val clean = raw
       .filter(org.apache.spark.sql.functions.col(CorruptCol).isNull)
       .select(cols: _*)

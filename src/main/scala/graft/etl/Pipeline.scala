@@ -43,7 +43,7 @@ object Pipeline {
     val mode = FailOn.normalize(failOn)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(curatedDir))
     // phase labels (guide §1.5): job descriptions are thread-local and
-    // cost nothing; they exist so listener-based attribution (Probe) can
+    // cost nothing; they exist so listener-based attribution (Profile) can
     // split the close's AQE-future jobs by pipeline phase
     val sc = spark.sparkContext
     def phase[T](name: String)(body: => T): T = {

@@ -7,9 +7,9 @@ import org.apache.spark.sql.types._
   * IDs/codes are strings (never inferred), money is double (float64 in the
   * reference — NOT decimal, see SURVEY §1.3), dates are day-grain.
   *
-  * Reads go through [[EtlIO.readCsvRaw]] as all-strings first so the DQ
-  * engine can report dtype-coercion failures (pandera `coerce=True`
-  * semantics) before the typed cast.
+  * The close reads through [[EtlIO.readCsvRawAudited]] as all-strings
+  * first so the DQ engine can report dtype-coercion failures (pandera
+  * `coerce=True` semantics) before the typed cast.
   */
 object Schemas {
 

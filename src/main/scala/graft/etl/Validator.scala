@@ -16,8 +16,8 @@ import Dq._
   *    order, not a pandas file index — deterministic under any
   *    partitioning;
   *  - dtype checks mirror pandera coerce=True by validating the raw
-  *    string against the target type (the all-strings read happens in
-  *    [[EtlIO.readCsvRaw]]);
+  *    string against the target type (the close's all-strings read
+  *    happens in [[EtlIO.readCsvRawAudited]]);
   *  - strict=True column-set enforcement compares the actual CSV header
   *    (driver-side) against the contract.
   */

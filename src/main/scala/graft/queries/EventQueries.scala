@@ -129,7 +129,8 @@ object EventQueries {
     def boundedPairs(): DataFrame = {
       import graft.multimodal.Multimodal
       val sampIds = sampled.select("media_id").distinct()
-      val (rep, ev) = repEvidence(fh, dfm)
+      val ev = Multimodal.truthEvidence(fh, dfm, Multimodal.FRAME_TRUTH_DF_CAP)
+      val rep = Multimodal.electReps(ev)
       val cand = Multimodal.repCandidatePairs(
         rep.join(sampIds, Seq("media_id"), "left_semi"),
         ev.join(sampIds, Seq("media_id"), "left_semi"), dfm)
@@ -193,40 +194,6 @@ object EventQueries {
         "keeper_agreement")
   }
 
-  /** m6's evidence split — the r15 remedy for the decay m5 measured
-    * (recall 0.955 → 0.567 → 0.075 across sf0.1 → sf1 → sf3: write-time
-    * eviction discards exactly the replica-shared frames of POPULAR
-    * content, and the loss grows with index size). Instead of evicting
-    * a hash once df crosses the cap, keep its [[graft.multimodal
-    * .Multimodal.FRAME_DF_CAP]] LOWEST media ids as representatives and
-    * pair representatives against ALL holders: per-hash join fan-out
-    * drops from df² (the reason the strict cap exists) to cap·df —
-    * LINEAR in df, Σ over the corpus ≤ cap·|postings| — while a
-    * popular-content cluster stays connected through its lowest-id
-    * members, which are exactly the ids the min-id keeper rule elects.
-    * So every evicted-under-m3 media still pairs with its cluster's
-    * keeper and `keep_id` matches the unbounded answer whenever the
-    * global minimum of the cluster is a representative of a shared
-    * hash (it is, by construction, for any hash it holds). The only
-    * hashes dropped entirely are the true boilerplate past
-    * [[graft.multimodal.Multimodal.FRAME_TRUTH_DF_CAP]] (black frames,
-    * intro cards), where no pairing is evidence of anything. Returns
-    * (representatives, full evidence) on a DISTINCT (media_id,
-    * fhash48) frame + its df table.
-    */
-  private def repEvidence(fh: DataFrame,
-      dfm: DataFrame): (DataFrame, DataFrame) = {
-    val ev = fh.join(
-      dfm.filter(col("dfm") <=
-        graft.multimodal.Multimodal.FRAME_TRUTH_DF_CAP).select("fhash48"),
-      Seq("fhash48"))
-    val rep = ev.withColumn("rk", row_number().over(
-        Window.partitionBy("fhash48").orderBy("media_id")))
-      .filter(col("rk") <= graft.multimodal.Multimodal.FRAME_DF_CAP)
-      .select("media_id", "fhash48")
-    (rep, ev)
-  }
-
   /** the DuckDB md5-bucket gate over `media_id` — the same fold as
     * [[graft.corpus.Corpus.withBucket]]'s native kernel (parity pinned
     * in Md5FoldParitySpec), inlined the way x32's sampled oracle does
@@ -244,8 +211,9 @@ object EventQueries {
     """hset AS (SELECT DISTINCT media_id, fhash FROM hsh),
       |dfm AS (SELECT fhash, count(*) AS d FROM hset GROUP BY 1)""".stripMargin
 
-  /** [[repEvidence]]'s DuckDB twin (ev under the boilerplate bound, rep
-    * = the cap lowest ids per hash), on top of [[frameSetDfCtesSql]].
+  /** the DuckDB twin of `Multimodal.truthEvidence` + `electReps` (ev
+    * under the boilerplate bound, rep = the cap lowest ids per hash), on
+    * top of [[frameSetDfCtesSql]].
     */
   private val repEvidenceCtesSql: String =
     s"""ev AS (
@@ -1179,7 +1147,8 @@ object EventQueries {
           everyN = Multimodal.FRAME_EVERY_N).cache()
         val fh = fh0.select("media_id", "fhash48").distinct()
         val dfm = fh.groupBy("fhash48").agg(count(lit(1)).as("dfm"))
-        val (rep, ev) = repEvidence(fh, dfm)
+        val ev = Multimodal.truthEvidence(fh, dfm, Multimodal.FRAME_TRUTH_DF_CAP)
+        val rep = Multimodal.electReps(ev)
         val sets = ev.groupBy("media_id").agg(collect_set("fhash48").as("fhs"))
         // cached: the two union branches of the partner agg would each
         // re-run the whole candidate+verify subtree (the sf3 profile
