@@ -403,20 +403,20 @@ object Bench {
          else "") +
         (if (allHotEntries.nonEmpty)
           s""""all_hot_entries":${nameArr(allHotEntries)},""" else "")
-    // train/serve split (r17, r16 verdict item 7 — additions-only): the
-    // per-(process, sf dir) artifacts (posting index, LSH segments,
-    // codebooks, BPE merges) train in whichever pass calls FIRST and
-    // serve warm afterwards, so min-of-passes entries report steady-state
-    // serving. These fields record the absorbed training seconds per
-    // artifact family so the per-query numbers can never silently mix
-    // cold-train and warm-serve reps.
-    val trainSnap = graft.core.TrainLog.snapshot
+    // train/serve split: the graft.core.Artifacts entries (posting
+    // index, LSH segments, codebooks, BPE merges, cluster tables) train
+    // in whichever pass calls FIRST and serve warm afterwards, so
+    // min-of-passes entries report steady-state serving. These fields
+    // record the absorbed training seconds per artifact family so the
+    // per-query numbers can never silently mix cold-train and warm-serve
+    // reps.
+    val trainSnap = graft.core.Artifacts.trainSeconds
     val trainJson = if (trainSnap.isEmpty) "" else
       s""""artifact_train_sec":${trainSnap.map { case (k, v) =>
         "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")},"""
     val trainTotalJson =
       if (trainSnap.isEmpty) ""
-      else s""""train_sec_total":${fmt(graft.core.TrainLog.totalSec)},"""
+      else s""""train_sec_total":${fmt(trainSnap.map(_._2).sum)},"""
     val common = s"""$incomplete$extraJson$subsetJson$trainTotalJson"unit":"sec","reps":$reps,"headline_reps":${math.max(reps, 3)},"interleaved":true,"approx_production_shape":true,"loadavg":$loadJson,"noise":${fmt(noise)},"errors":$errJson,"sf":$sfNum"""
     val phasesJson = phaseMin.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")

@@ -17,8 +17,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** the table's path under an sf dir: what [[load]] reads and what an
+    * [[Artifacts]] entry built from the table is keyed by.
+    */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.parquet(path(dir, name))
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

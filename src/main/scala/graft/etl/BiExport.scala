@@ -56,8 +56,8 @@ object BiExport {
     // pandas-list rendering for byte parity with the reference's
     // data_dictionary.txt (data/bi/2025-12/data_dictionary.txt)
     def pyList(cols: Seq[String]): String = cols.map(c => s"'$c'").mkString("[", ", ", "]")
-    val dqSumCols = spark.read.option("header", "true").csv(dqSummaryCsv).columns.toSeq
-    val dqExCols = spark.read.option("header", "true").csv(dqExceptionsCsv).columns.toSeq
+    val dqSumCols = EtlIO.csvHeader(dqSummaryCsv)
+    val dqExCols = EtlIO.csvHeader(dqExceptionsCsv)
     val dd = Seq(
       s"month=$month",
       s"fact_transactions.csv columns=${pyList(factM.columns.toSeq)}",

@@ -1,11 +1,13 @@
 package graft.etl
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.core.Scratch
 
 /** IO layer ≙ reference io_utils.py + the single-file CSV output contract
   * (SURVEY §2.1 S1–S4, §7.4.6).
@@ -239,10 +241,10 @@ object EtlIO {
     (if (partitionCols.isEmpty) writer else writer.partitionBy(partitionCols: _*))
       .parquet(staged)
     val old = Paths.get(s"$path.compact_old")
-    deleteRecursively(old) // leftover from a previous crashed swap
+    Scratch.deleteTree(old) // leftover from a previous crashed swap
     Files.move(Paths.get(path), old)
     Files.move(Paths.get(staged), Paths.get(path))
-    deleteRecursively(old)
+    Scratch.deleteTree(old)
   }
 
   /** single-file CSV sink: the reference writes one `name.csv` per table
@@ -261,21 +263,12 @@ object EtlIO {
       .getOrElse(sys.error(s"no part file written under $tmp"))
     Files.deleteIfExists(target)
     Files.move(part, target)
-    deleteRecursively(Paths.get(tmp))
+    Scratch.deleteTree(Paths.get(tmp))
   }
 
   def writeText(path: String, content: String): Unit = {
     val p = Paths.get(path)
     Option(p.getParent).foreach(Files.createDirectories(_))
     Files.writeString(p, content)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val ls = Files.list(p)
-      try ls.iterator().asScala.toSeq.foreach(deleteRecursively)
-      finally ls.close()
-    }
-    Files.deleteIfExists(p)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.functions.MoneyFunctions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -217,14 +217,14 @@ object SimilarityQueries {
   private[graft] def scaledNprobe(k: Int): Int =
     math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
 
-  /** per-(process, sf dir) PERSISTED trained quantizer — the posting-
-    * index / LSH-index rationale applied to ANN training: on a
-    * production corpus the quantizer is trained once per corpus
-    * version and then READ by every search / cluster / semantic-dedup
-    * pass; re-running Lloyd per query both mis-times the steady state
-    * and burns the cluster. First caller trains [[trainedCentroids]]
-    * (LLOYD_ITERS rounds) and writes the 8-row centroid table to a
-    * process-scoped scratch parquet; x18/x25/x26/x19 then read it
+  /** PERSISTED trained quantizer, once per embeddings table
+    * ([[graft.core.Artifacts]]) — the posting-index / LSH-index
+    * rationale applied to ANN training: on a production corpus the
+    * quantizer is trained once per corpus version and then READ by
+    * every search / cluster / semantic-dedup pass; re-running Lloyd per
+    * query both mis-times the steady state and burns the cluster. First
+    * caller trains [[trainedCentroids]] (LLOYD_ITERS rounds) and writes
+    * the 8-row centroid table to parquet; x18/x25/x26/x19 then read it
     * back. Bit-identical to in-query training: centroid components are
     * 6-dp-rounded doubles, and parquet round-trips doubles exactly —
     * every DuckDB oracle still re-derives the full Lloyd chain in SQL,
@@ -232,18 +232,12 @@ object SimilarityQueries {
     * AnnRecallSpec's iteration sweeps keep calling [[trainedCentroids]]
     * directly with explicit `iters`.
     */
-  private val centroidDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def sharedCentroids(s: SparkSession, dir: String): DataFrame = {
-    val p = DedupQueries.builtOnce(centroidDirs, dir, lockTag = "centroids") {
-      val path = graft.core.Scratch.dir(
-        "ann_centroids_" + graft.core.Scratch.sanitize(dir))
-      trainedCentroids(vecs(s, dir))
-        .write.mode("overwrite").parquet(path)
-      path
-    }
-    s.read.parquet(p)
-  }
+  private def sharedCentroids(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Artifacts.dir("centroids", embeddingsPath(dir)) { p =>
+      trainedCentroids(vecs(s, dir)).write.mode("overwrite").parquet(p)
+    })
+
+  private def embeddingsPath(dir: String): String = Tables.path(dir, "embeddings")
 
   /** [[sharedCentroids]] at the SCALED cluster count (k = ⌈√n⌉) — the
     * scale-path quantizer x36/x37 read. Same persisted-artifact
@@ -252,18 +246,12 @@ object SimilarityQueries {
     * action is training-time work (once per corpus version, like the
     * Lloyd rounds themselves).
     */
-  private def sharedCentroidsScaled(s: SparkSession, dir: String): DataFrame = {
-    val p = DedupQueries.builtOnce(centroidDirs, dir + "#sqrtk",
-        lockTag = "centroids_sqrtk") {
-      val path = graft.core.Scratch.dir(
-        "ann_centroids_sqrtk_" + graft.core.Scratch.sanitize(dir))
+  private def sharedCentroidsScaled(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Artifacts.dir("centroids_sqrtk", embeddingsPath(dir)) { p =>
       val e = vecs(s, dir)
       trainedCentroids(e, LLOYD_ITERS, scaledK(e.count()))
-        .write.mode("overwrite").parquet(path)
-      path
-    }
-    s.read.parquet(p)
-  }
+        .write.mode("overwrite").parquet(p)
+    })
 
   /** x8's IVF search at an arbitrary Lloyd-round count — AnnRecallSpec
     * sweeps this to put recall@3 vs training depth on the record (the
@@ -350,8 +338,8 @@ object SimilarityQueries {
       nprobe: Int, refineR: Int, centroids: DataFrame): DataFrame = {
     val e = vecs(s, dir)
     val subs = pqSubs(s, dir)
-    // r16: the trained codebooks come from the per-(process, dir)
-    // persisted artifact — serving no longer retrains PQ per run
+    // the trained codebooks come from the persisted artifact —
+    // serving does not retrain PQ per run
     val cb = sharedPqCodebook(s, dir)
     val codes = pqAssign(subs, cb)
       .select(col("vec_id").as("cand_id"), col("s"), col("cid"))
@@ -695,38 +683,25 @@ object SimilarityQueries {
     */
   private val PQ_K = 16
 
-  /** per-(process, sf dir) PERSISTED trained PQ codebooks — the
+  /** PERSISTED trained PQ codebooks, once per embeddings table — the
     * [[sharedCentroids]] rationale applied to the OTHER trained
-    * artifact (r16): on a production corpus the M=8 codebooks are
+    * artifact: on a production corpus the M=8 codebooks are
     * trained once per corpus version and then read by every encode /
     * ADC-search pass; x14/x15/x19/x38 each retraining them per run
     * mis-times the steady state. First caller trains [[pqCodebook]]
     * (one Lloyd round per subspace over the full corpus) and writes
-    * the M·K = 128-row table to a process-scoped scratch parquet; the
-    * rest read it back. Bit-identical to in-query training: centroid
-    * components are 6-dp-rounded doubles and parquet round-trips
+    * the M·K = 128-row table to parquet; the rest read it back.
+    * Bit-identical to in-query training: centroid components are
+    * 6-dp-rounded doubles and parquet round-trips
     * doubles exactly — every DuckDB oracle still re-derives the full
     * cb0 → asg0 → cb1 chain in SQL, so the artifact path is re-proved
     * cross-engine on each run. AnnRecallSpec and AnnIndex keep calling
     * [[pqCodebook]] directly where they train over non-corpus frames.
-    * ASSUMPTION (r16 ADVICE): the artifact is keyed by DIR but trained
-    * with whichever SparkSession called first — valid under the
-    * single-session harness (Verify/Bench/CLI/tests all run one session
-    * per process); a multi-session JVM with per-session conf that
-    * changes the training inputs would need a (session, dir) key.
     */
-  private val pqCbDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def sharedPqCodebook(s: SparkSession, dir: String): DataFrame = {
-    val p = DedupQueries.builtOnce(pqCbDirs, dir, lockTag = "pq_codebook") {
-      val path = graft.core.Scratch.dir(
-        "pq_codebook_" + graft.core.Scratch.sanitize(dir))
-      pqCodebook(pqSubs(s, dir))
-        .write.mode("overwrite").parquet(path)
-      path
-    }
-    s.read.parquet(p)
-  }
+  private def sharedPqCodebook(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Artifacts.dir("pq_codebook", embeddingsPath(dir)) { p =>
+      pqCodebook(pqSubs(s, dir)).write.mode("overwrite").parquet(p)
+    })
 
   private[graft] def pqCodebook(subs: DataFrame): DataFrame = {
     val cb0 = subs.filter(col("vec_id") < PQ_K)
@@ -1261,9 +1236,9 @@ object SimilarityQueries {
         // over M=8 rows per pair. Recall@3 vs exact x6 is on the record
         // in AnnRecallSpec.
         val subs = pqSubs(s, dir)
-        // r16: x14 trains the codebooks (the training operator keeps its
+        // x14 trains the codebooks (the training operator keeps its
         // in-query Lloyd, like x8); this SEARCH operator reads the
-        // per-(process, dir) persisted artifact instead of retraining
+        // persisted artifact instead of retraining
         val cb = sharedPqCodebook(s, dir)
         val codes = pqAssign(subs, cb)
           .select(col("vec_id").as("cand_id"), col("s"), col("cid"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.functions.MoneyFunctions._
 
 /** Text-analysis operators over the `documents` table — language ID,
@@ -903,12 +903,12 @@ object TextQueries {
         // ScaleBoundSpec ties t18 and t19 together with the merge-mass
         // identity 0 ≤ Σchars − Σn_bpe ≤ Σ_k n_k.
         val SEP = "\u001f"
-        // r16: the trained merges come from the per-(process, dir)
-        // persisted artifact (sharedBpeMerges) as a K-row driver list —
-        // the K chained replaces collapse into ONE narrow codegen
-        // projection over the vocab (literal search/replace strings via
-        // the functions API, never string-interpolated into expr — a
-        // corpus token may contain anything), instead of K
+        // the trained merges come from the persisted artifact
+        // (sharedBpeMerges) as a K-row driver list — the K chained
+        // replaces collapse into ONE narrow codegen projection over the
+        // vocab (literal search/replace strings via the functions API,
+        // never string-interpolated into expr — a corpus token may
+        // contain anything), instead of K
         // crossJoin-broadcast rounds over a freshly re-trained chain.
         // The dry-corpus empty-winner stop marker contributes no
         // artifact rows, matching the old !isEmpty filter exactly.
@@ -998,33 +998,26 @@ object TextQueries {
     * lineage exactly as Corpus.pageRankConverged does, so round k's
     * plan never re-executes rounds 1..k−1.
     */
-  /** per-(process, sf dir) PERSISTED trained merge table — the
-    * sharedCentroids / sharedPqCodebook rationale applied to the
-    * tokenizer artifact (r16): a production tokenizer is trained once
-    * per corpus version and then APPLIED everywhere; t19 re-running the
-    * whole K-round training loop per encode both mis-times the encode
-    * and burns 2K driver-fenced jobs. First caller trains
-    * [[bpeWinners]] and writes (round, lft, rgt, n); encode callers
-    * read the merges back as a K-row driver list (K = BPE_K = 6 — a
-    * dim-sized collect under the repo collect policy; the dry-corpus
-    * stop marker is an EMPTY frame, so it contributes no rows and the
-    * collected list is exactly the applied merges). t18 keeps in-query
-    * training — it IS the training operator; its oracle re-derives the
-    * chain in SQL each run. Keyed by DIR, trained by the first calling
-    * session — the single-session-per-process assumption documented at
-    * SimilarityQueries.sharedPqCodebook applies here too (r16 ADVICE).
+  /** PERSISTED trained merge table, once per documents table
+    * ([[graft.core.Artifacts]]) — the sharedCentroids / sharedPqCodebook
+    * rationale applied to the tokenizer artifact: a production
+    * tokenizer is trained once per corpus version and then APPLIED
+    * everywhere; t19 re-running the whole K-round training loop per
+    * encode both mis-times the encode and burns 2K driver-fenced jobs.
+    * First caller trains [[bpeWinners]] and writes (round, lft, rgt, n);
+    * encode callers read the merges back as a K-row driver list (K =
+    * BPE_K = 6 — a dim-sized collect under the repo collect policy; the
+    * dry-corpus stop marker is an EMPTY frame, so it contributes no rows
+    * and the collected list is exactly the applied merges). t18 keeps
+    * in-query training — it IS the training operator; its oracle
+    * re-derives the chain in SQL each run.
     */
-  private val bpeDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def sharedBpeMerges(s: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(String, String)] = {
-    val p = DedupQueries.builtOnce(bpeDirs, dir, lockTag = "bpe_merges") {
-      val path = graft.core.Scratch.dir(
-        "bpe_merges_" + graft.core.Scratch.sanitize(dir))
+    val p = Artifacts.dir("bpe_merges", Tables.path(dir, "documents")) { p =>
       bpeWinners(s, dir).reduce(_.unionByName(_))
         .select(col("round"), col("lft"), col("rgt"), col("n"))
-        .write.mode("overwrite").parquet(path)
-      path
+        .write.mode("overwrite").parquet(p)
     }
     s.read.parquet(p).orderBy("round").collect()
       .map(r => (r.getString(r.fieldIndex("lft")),

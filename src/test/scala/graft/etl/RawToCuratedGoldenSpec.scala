@@ -12,7 +12,11 @@ import graft.SparkSpec
   * amount_base = round(amount·rate, 2)) and :49–110 (per-source
   * conformance: expenses negated, payroll at month-end as −net,
   * inventory qty×unit_cost signed by movement), plus the missing-rate
-  * fail-fast (:40–42).
+  * fail-fast (:40–42). The same close then runs through StarSchema and
+  * BiExport, pinning without the reference tree what GoldenParitySpec
+  * and DqAuditGoldenSpec pin against it: dim surrogate keys, first
+  * currency per entity, KPI margins, and the DQ audit and data
+  * dictionary bytes.
   *
   * FX rates are binary-exact (1.25, 0.0004 & friends) so every expected
   * value is a hand-checkable 2-decimal number.
@@ -53,12 +57,18 @@ class RawToCuratedGoldenSpec extends SparkSpec {
     "2025-12-07,TZS,USD,0.0004",
     "2025-12-12,TZS,USD,0.0004")
 
-  test("multi-currency close produces the hand-computed fact and kpi") {
+  /** the multi-currency close, run once and shared by the fact/KPI and
+    * the export tests
+    */
+  private lazy val (base, out) = {
     val base = tmpDir("raw_golden")
     writeRaw(s"$base/raw", tzsRates)
     SampleData.writeChartOfAccounts(s"$base/ref")
-    val out = Pipeline.runMonth(spark, Settings(), "2025-12",
-      s"$base/raw", s"$base/curated", s"$base/ref")
+    (base, Pipeline.runMonth(spark, Settings(), "2025-12",
+      s"$base/raw", s"$base/curated", s"$base/ref"))
+  }
+
+  test("multi-currency close produces the hand-computed fact and kpi") {
 
     val fact = spark.read.parquet(out.fact)
       .orderBy("date", "entity", "source", "document_id")
@@ -99,6 +109,84 @@ class RawToCuratedGoldenSpec extends SparkSpec {
     // observed-columns-only contract: no Liability column (COA has the
     // type; the fixture never hits it)
     assert(!spark.read.parquet(out.kpi).columns.contains("Liability"))
+  }
+
+  test("star and BI exports of the close match hand-computed keys, margins and audit bytes") {
+    val fact = spark.read.parquet(out.fact)
+    val dim = spark.read.parquet(out.dimAccounts)
+    val kpi = spark.read.parquet(out.kpi)
+    StarSchema.export(spark, fact, dim, kpi, "2025-12", s"$base/star")
+    BiExport.export(spark, fact, dim, kpi, out.dqExceptions, out.dqSummary,
+      "2025-12", s"$base/bi")
+    def lines(f: String): Seq[String] =
+      java.nio.file.Files.readAllLines(java.nio.file.Paths.get(s"$base/$f"))
+        .toArray(Array.empty[String]).toSeq
+    def bytes(f: String): String =
+      java.nio.file.Files.readString(java.nio.file.Paths.get(s"$base/$f"))
+
+    // entity keys over the sorted entities; currency = each entity's
+    // first fact row in (date, source, document_id) order: TLM's
+    // INV-001 on 12-05 is USD, UPE's INV-003 on 12-07 is TZS
+    assert(lines("star/dim_entity.csv") == Seq(
+      "entity_key,entity,currency", "1,TLM,USD", "2,UPE,TZS"))
+
+    // account keys 1..12 over the COA's codes in sorted order, not the
+    // file's (revenue-first) order
+    assert(lines("star/dim_account.csv") == Seq(
+      "account_key,account_code,account_name,account_type",
+      "1,10000001,Cash at Bank,Asset",
+      "2,11000001,Accounts Receivable,Asset",
+      "3,20000001,Accounts Payable,Liability",
+      "4,21000001,VAT Payable,Liability",
+      "5,40000001,Sales - Export,Revenue",
+      "6,40000002,Sales - Local,Revenue",
+      "7,50000001,COGS - Inventory,COGS",
+      "8,61000001,Salaries & Wages,Expense",
+      "9,61000002,Payroll Taxes,Expense",
+      "10,62000001,Rent,Expense",
+      "11,63000001,Travel & Subsistence,Expense",
+      "12,64000001,Bank Charges,Expense"))
+
+    // margin % = profit / Revenue · 100 on the KPI values pinned above:
+    // TLM 345.50/350.50 and −654.50/350.50; UPE 20.00/20.00 and
+    // −587.75/20.00 (exactly −2938.75)
+    val kpiRows = lines("star/fact_kpi_monthly.csv")
+    assert(kpiRows.head == "month_key,entity_key,Asset,COGS,Expense,Revenue," +
+      "gross_profit,operating_profit,gross_margin_pct,operating_margin_pct")
+    val got = kpiRows.tail.map(_.split(",").toSeq)
+    assert(got.map(_.take(8)) == Seq(
+      Seq("202512", "1", "7.5", "-5.0", "-1000.0", "350.5", "345.5", "-654.5"),
+      Seq("202512", "2", "2.4", "0.0", "-607.75", "20.0", "20.0", "-587.75")))
+    assert(got.map(r => (r(8).toDouble, r(9).toDouble)) == Seq(
+      (345.50 / 350.50 * 100, -654.50 / 350.50 * 100),
+      (100.0, -2938.75)))
+
+    // the clean close's audit files, copied byte for byte into the BI
+    // export: one PASS row per dataset, and a header-only exceptions file
+    assert(bytes("bi/dq_summary.csv") ==
+      """dataset,error_count,warn_count,issue_count,status
+        |sales,0,0,0,PASS
+        |expenses,0,0,0,PASS
+        |payroll,0,0,0,PASS
+        |inventory_movements,0,0,0,PASS
+        |fx_rates,0,0,0,PASS
+        |""".stripMargin)
+    assert(bytes("bi/dq_exceptions.csv") ==
+      "dataset,index,column,check,failure_case,schema_context,check_number,severity\n")
+    assert(bytes("bi/data_dictionary.txt") == Seq(
+      "month=2025-12",
+      "fact_transactions.csv columns=['txn_id', 'date', 'entity', 'source', " +
+        "'document_id', 'account_code', 'currency', 'amount', 'rate', " +
+        "'amount_base', 'description', 'month']",
+      "dim_accounts.csv columns=['account_code', 'account_name', 'account_type']",
+      "kpi_monthly.csv columns=['entity', 'month', 'Asset', 'COGS', 'Expense', " +
+        "'Revenue', 'gross_profit', 'operating_profit', 'gross_margin_pct', " +
+        "'operating_margin_pct']",
+      "dq_summary.csv columns=['dataset', 'error_count', 'warn_count', " +
+        "'issue_count', 'status']",
+      "dq_exceptions.csv columns=['dataset', 'index', 'column', 'check', " +
+        "'failure_case', 'schema_context', 'check_number', 'severity']")
+      .mkString("\n"))
   }
 
   test("missing FX rate fail-fasts listing the exact (date, currency) pairs") {
