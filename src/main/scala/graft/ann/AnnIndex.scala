@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Caches
 import graft.functions.MoneyFunctions._
 import graft.queries.SimilarityQueries
 
@@ -35,9 +36,7 @@ object AnnIndex {
 
   /** Train the coarse quantizer + PQ codebooks on `embeddings`
     * (vec_id, label, embedding Array[Float]) and persist the full
-    * serving index under `path`. One pass trains, assigns, encodes;
-    * the caches it leaves behind follow the library's
-    * `spark.catalog.clearCache()` contract.
+    * serving index under `path`. One pass trains, assigns, encodes.
     *
     * `k` is the coarse list count. The default 8 is the oracle-pinned
     * baseline (AnnIndexSpec pins it against x19); a production corpus
@@ -50,7 +49,7 @@ object AnnIndex {
     * assignment runs the narrow NearestCentroid kernel — no n·k
     * exchange at any k.
     */
-  def write(embeddings: DataFrame, path: String, k: Int = 8): Unit = {
+  def write(embeddings: DataFrame, path: String, k: Int = 8): Unit = Caches.scoped { own =>
     // the whole index is built under a staging sibling and swapped in
     // with directory renames, so a serving reader never opens an index
     // whose four artifacts are mid-write or from two different builds
@@ -60,12 +59,12 @@ object AnnIndex {
     // crash mid-swap leaves the old index recoverable at `.old`.
     val staged = s"$path.stage"
     graft.core.Scratch.deleteTree(java.nio.file.Paths.get(staged))
-    val e = SimilarityQueries.toVecs(embeddings).cache()
-    val centroids = SimilarityQueries.trainedCentroids(e, k = k)
+    val e = own(SimilarityQueries.toVecs(embeddings))
+    val centroids = SimilarityQueries.trainedCentroids(e, own, k = k)
     val assigned = SimilarityQueries.assignNearest(e, centroids)
       .select(col("cand_id"), col("centroid_id"))
     val subs = SimilarityQueries.pqSubsOf(e)
-    val cb = SimilarityQueries.pqCodebook(subs)
+    val cb = SimilarityQueries.pqCodebook(subs, own)
     val codes = SimilarityQueries.pqAssign(subs, cb)
       .select(col("vec_id").as("cand_id"), col("s"), col("cid"))
     graft.etl.EtlIO.writeParquet(centroids, s"$staged/centroids")
@@ -76,7 +75,6 @@ object AnnIndex {
       e.select(col("vec_id").as("cand_id"), col("v"), col("norm"))
         .join(assigned, Seq("cand_id")),
       s"$staged/vectors", Seq("centroid_id"))
-    e.unpersist()
     val target = java.nio.file.Paths.get(path)
     val old = java.nio.file.Paths.get(s"$path.old")
     graft.core.Scratch.deleteTree(old)
@@ -107,10 +105,11 @@ object AnnIndex {
     * the ingested distribution drifts from the trained one (the
     * standard no-retrain trade) — re-run [[write]] when recall decays.
     */
-  def append(spark: SparkSession, path: String, newEmbeddings: DataFrame): Unit = {
+  def append(spark: SparkSession, path: String,
+      newEmbeddings: DataFrame): Unit = Caches.scoped { own =>
     val centroids = spark.read.parquet(s"$path/centroids")
     val cb = spark.read.parquet(s"$path/codebooks")
-    val e = SimilarityQueries.toVecs(newEmbeddings).cache()
+    val e = own(SimilarityQueries.toVecs(newEmbeddings))
     val assigned = SimilarityQueries.assignNearest(e, centroids)
       .select(col("cand_id"), col("centroid_id"))
     e.select(col("vec_id").as("cand_id"), col("v"), col("norm"))
@@ -120,7 +119,6 @@ object AnnIndex {
       .select(col("vec_id").as("cand_id"), col("s"), col("cid"))
       .join(assigned, Seq("cand_id"))
       .write.mode("append").partitionBy("centroid_id").parquet(s"$path/postings")
-    e.unpersist()
   }
 
   /** Delete vectors from a persisted index WITHOUT retraining or

@@ -3,6 +3,7 @@ package graft.corpus
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
+import graft.core.Caches
 import graft.functions.{JaccardSimilarity, MinHashFamily}
 
 /** Reusable corpus-curation transforms over a documents DataFrame
@@ -42,6 +43,12 @@ object Corpus {
     df.withColumn("w", split(col("text"), " "))
       .withColumn("sh", graft.functions.Shingles(col("text")))
 
+  /** the (doc_id, sh) shingle sets of `docs`, cached by `own`: the one
+    * frame every pair, index and ingest stage below reads twice or more
+    */
+  private[graft] def shingleSets(docs: DataFrame, own: Caches): DataFrame =
+    own(withShingles(docs).select("doc_id", "sh"))
+
   /** MinHash(H=16) → LSH band signature table (doc_id, band_id,
     * band_key; B=8 bands × R=2 rows): one narrow per-row projection over
     * a (doc_id, sh) frame — one md5 per shingle, pure codegen universal
@@ -77,25 +84,15 @@ object Corpus {
       .toDF(("doc_id" +: carry) ++ Seq("band_id", "band_key"): _*)
   }
 
-  /** [[nearDupPairs]] plus the cached frames backing it (shingle sets +
-    * band signatures), so composite callers can release them once their
-    * terminal action has run.
+  /** the lazy [[nearDupPairs]] frame over [[shingleSets]], valid while
+    * `own`'s scope is open — lets [[updateClustersWithStats]] share ONE
+    * shingled batch between the in-batch pair stage and the index
+    * cross-edge stage (each previously shingled the same docs
+    * independently).
     */
-  private def nearDupPairsCached(docs: DataFrame,
-      threshold: Double): (DataFrame, Seq[DataFrame]) = {
-    val sh = withShingles(docs).select("doc_id", "sh").cache()
-    val (pairs, cached) = nearDupPairsFrom(sh, threshold)
-    (pairs, sh +: cached)
-  }
-
-  /** [[nearDupPairsCached]] over a PRE-SHINGLED cached (doc_id, sh)
-    * frame — lets [[updateClustersWithStats]] share ONE shingled batch
-    * between the in-batch pair stage and the index cross-edge stage
-    * (each previously shingled the same docs independently).
-    */
-  private def nearDupPairsFrom(sh: DataFrame,
-      threshold: Double): (DataFrame, Seq[DataFrame]) = {
-    val sig = bandSignatures(sh).cache()
+  private[graft] def nearDupPairsFrom(sh: DataFrame, threshold: Double,
+      own: Caches): DataFrame = {
+    val sig = own(bandSignatures(sh))
     val cand0 = sig.as("a").join(sig.as("b"),
         col("a.band_id") === col("b.band_id") &&
           col("a.band_key") === col("b.band_key") &&
@@ -108,9 +105,9 @@ object Corpus {
     // paid anyway), degrade to candidate-pruned broadcast, then SMJ.
     // The hint rides a local reference; bandSignatures above keeps the
     // unhinted sh plan.
-    val (cand, side, caches) =
-      dispatchVerifySets(cand0, Seq("doc_a", "doc_b"), sh, setFrameBytes(sh))
-    val pairs = cand
+    val (cand, side) =
+      dispatchVerifySets(cand0, Seq("doc_a", "doc_b"), sh, setFrameBytes(sh), own)
+    cand
       .join(side.select(col("doc_id").as("doc_a"), col("sh").as("sha")), Seq("doc_a"))
       .join(side.select(col("doc_id").as("doc_b"), col("sh").as("shb")), Seq("doc_b"))
       .withColumn("jaccard",
@@ -118,7 +115,6 @@ object Corpus {
           JaccardSimilarity(col("sha"), col("shb")), 6))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-    (pairs, sig +: caches)
   }
 
   /** LSH-verified near-duplicate pairs (doc_a < doc_b, exact Jaccard ≥
@@ -126,17 +122,15 @@ object Corpus {
     * equi-join; only survivors pay the exact verify (the native codegen
     * jaccard_similarity). Input needs (doc_id, text). The jaccard column
     * is rounded at 6 dp BEFORE thresholding — the deterministic
-    * cross-engine contract the DuckDB oracles pin.
-    *
-    * Caching contract: the returned frame is LAZY and is backed by two
-    * cached intermediates (the shingle sets, which feed both verify
-    * joins, and the band signature table, which feeds both sides of the
-    * candidate self-join). They stay cached after the caller's action —
-    * release them with `spark.catalog.clearCache()` (or use
-    * [[dupClusters]]/[[curate]], which release their own working set).
+    * cross-engine contract the DuckDB oracles pin. The pairs are
+    * checkpointed before the working caches (shingle sets, band
+    * signatures) are released.
     */
   def nearDupPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame =
-    nearDupPairsCached(docs, threshold)._1
+    Caches.scoped { own =>
+      nearDupPairsFrom(shingleSets(docs, own), threshold, own)
+        .localCheckpoint()
+    }
 
   /** transitive near-dup clusters: (doc_id, cluster_id, keep) with one
     * canonical keeper (the min id) per connected component of the
@@ -164,12 +158,9 @@ object Corpus {
     * pathological (boilerplate chains). Bench reports it per run.
     */
   def dupClustersWithStats(docs: DataFrame,
-      threshold: Double = 0.5): (DataFrame, Int) = {
-    val (pairsDf, backing) = nearDupPairsCached(docs, threshold)
-    val r = connectedComponentsWithStats(
-      docs.select("doc_id"), pairsDf.select("doc_a", "doc_b"))
-    backing.foreach(_.unpersist())
-    r
+      threshold: Double = 0.5): (DataFrame, Int) = Caches.scoped { own =>
+    val pairs = nearDupPairsFrom(shingleSets(docs, own), threshold, own)
+    connectedComponentsWithStats(docs.select("doc_id"), pairs.select("doc_a", "doc_b"))
   }
 
   /** Generic distributed connected components — label propagation with
@@ -188,12 +179,12 @@ object Corpus {
 
   /** [[connectedComponents]] plus the propagation-round count. */
   def connectedComponentsWithStats(nodes: DataFrame,
-      pairs: DataFrame): (DataFrame, Int) = {
+      pairs: DataFrame): (DataFrame, Int) = Caches.scoped { own =>
     val idCol = nodes.columns.head
     val Seq(aCol, bCol) = pairs.columns.take(2).toSeq
     val edges = pairs.select(col(aCol).as("doc_a"), col(bCol).as("doc_b"))
-    val sym = edges.union(edges.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst").cache()
+    val sym = own(edges.union(edges.select(col("doc_b"), col("doc_a")))
+      .toDF("src", "dst"))
     // |V| rides an Observation on the seed checkpoint (no extra job): it
     // feeds the per-round node-frame dispatch below. Every frame joined
     // against the cached edge table in the loop is ≤ |V| rows of two
@@ -250,8 +241,7 @@ object Corpus {
             .cast("long").as("chg") +:
           carry.map(col): _*)
     }
-    // Rounds 1+2 run as ONE action (r17 — the per-query fixed-overhead
-    // cut the r16 verdict ordered): round 1 runs on identity labels
+    // Rounds 1+2 run as ONE action: round 1 runs on identity labels
     // (label == doc_id), so the neighbor-label lookup is the edge list
     // itself and the pointer jump is a no-op — one edge aggregate
     // replaces three joins — and a CONVERGED graph still needs the
@@ -266,20 +256,20 @@ object Corpus {
     // pointer hop — broadcast-only chains ReusedExchange can't dedupe),
     // so it is cached for the block and released right after the action.
     val nm1 = sym.groupBy(col("src").as("doc_id")).agg(min("dst").as("nmin"))
-    val r1 = seed.join(bcN(nm1), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
-        (coalesce(col("nmin"), col("label")) < col("label"))
-          .cast("long").as("chg1"))
-      .cache()
     val obsB = Observation()
-    val block0 = fullRound(r1, Seq("chg1"))
-      .observe(obsB, sum(col("chg1")).as("c1"), sum(col("chg")).as("c2"))
-    explain("rounds 1+2 (fused)", block0)
-    val block = block0.localCheckpoint()
+    val block = Caches.scoped { ownBlock =>
+      val r1 = ownBlock(seed.join(bcN(nm1), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
+          (coalesce(col("nmin"), col("label")) < col("label"))
+            .cast("long").as("chg1")))
+      val block0 = fullRound(r1, Seq("chg1"))
+        .observe(obsB, sum(col("chg1")).as("c1"), sum(col("chg")).as("c2"))
+      explain("rounds 1+2 (fused)", block0)
+      block0.localCheckpoint()
+    }
     val c1 = metric(obsB, "c1")
     val c2 = metric(obsB, "c2")
-    r1.unpersist()
     var labels = block.select("doc_id", "label")
     // round 1 already a fixed point ⇒ round 2 re-derived the identical
     // labels (a propagation round is a function of the labels alone), so
@@ -297,7 +287,6 @@ object Corpus {
       changed = metric(obs, "changed")
       labels = next.select("doc_id", "label")
     }
-    sym.unpersist()
     (labels.select(col("doc_id").as(idCol), col("label").as("cluster_id"))
       .withColumn("keep", col(idCol) === col("cluster_id")), rounds)
   }
@@ -323,22 +312,13 @@ object Corpus {
     * Scale posture: per round ONE join of the (src, dst, outdeg) edge
     * table against the node-sized rank table and one map-side-combinable
     * sum by dst — the canonical iterative join-agg. The rank/degree/
-    * inflow sides ride [[dispatchNodeFrame]]'s measured regime (r16):
+    * inflow sides ride [[dispatchNodeFrame]]'s measured regime:
     * checkpointed rank frames carry default-sized stats, so without the
     * closed-form dispatch the loop re-shuffled the cached O(E) edge
     * table every round; `localCheckpoint` truncates the per-round
     * lineage exactly as in [[connectedComponentsWithStats]]. The only
     * driver-side value is |V| — a scalar in the formula, not a data
     * collect (and the same count feeds the dispatch for free).
-    *
-    * LIFECYCLE (r16): fixed-horizon mode returns an UNMATERIALIZED lazy
-    * plan backed by a query-scoped O(E) cache (eDeg) — run ONE terminal
-    * action on it and then release the cache (`spark.catalog.clearCache()`
-    * or unpersist), as Verify/Bench/Cli do; a caller running several
-    * actions on the result re-executes all rounds per action (previously
-    * each round was checkpoint-backed). Library callers needing a
-    * multi-action frame should materialize it once (write + read back,
-    * or `localCheckpoint`).
     */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 3,
       damping: Double = 0.85): DataFrame =
@@ -360,7 +340,7 @@ object Corpus {
     * Fixed-horizon mode (eps < 0 — the [[pageRank]] entry): no
     * convergence metric is read, so the per-round action, Observation
     * and checkpoint are pure overhead and the loop builds ONE LAZY plan
-    * instead (r16). The recursion runs on the INFLOW frame (r17):
+    * instead. The recursion runs on the INFLOW frame:
     * round k+1 LEFT-joins the edge table with round k's inflow and
     * applies the rank update inline (absent sources take the base rank
     * via the update's coalesce — what the per-round ids join used to
@@ -368,20 +348,28 @@ object Corpus {
     * round's subtree appears exactly once inside round k+1 (linear
     * plan growth, no exponential re-execution, no lineage to truncate
     * at a 3-round horizon), and each round costs ONE broadcast-exchange
-    * build on the critical path instead of two. The caller's single
-    * terminal action then runs every round in one job: 3 checkpoint
-    * write+read barriers and 3 per-round driver round-trips gone.
-    * `prev` is only read by the convergence metric, and every edge src
-    * is a node id (the round-1 fusion already relies on this), so the
-    * two formulations are column-for-column identical (GraphRegimeSpec
-    * + the x27 oracle pin it). In this mode the eDeg cache is NOT
-    * unpersisted before returning — nothing has materialized yet; it
-    * follows the caller's clearCache contract like every other
-    * query-scoped cache.
+    * build on the critical path instead of two. One action, the final
+    * ranks' `localCheckpoint` (taken before the edge-table cache is
+    * released), runs every round in one job: 3 checkpoint write+read
+    * barriers and 3 per-round driver round-trips gone. `prev` is only
+    * read by the convergence metric, and every edge src is a node id
+    * (the round-1 fusion already relies on this), so the two
+    * formulations are column-for-column identical (GraphRegimeSpec + the
+    * x27 oracle pin it).
     */
   def pageRankConverged(nodes: DataFrame, edges: DataFrame,
       eps: Double = 1e-8, damping: Double = 0.85,
-      maxRounds: Int = 50): (DataFrame, Int) = {
+      maxRounds: Int = 50): (DataFrame, Int) = Caches.scoped { own =>
+    val (ranks, rounds) = pageRankWith(nodes, edges, eps, damping, maxRounds, own)
+    (if (eps < 0) ranks.localCheckpoint() else ranks, rounds)
+  }
+
+  /** [[pageRankConverged]]'s rounds with the edge-table cache owned by
+    * `own`; in fixed-horizon mode the ranks are one lazy plan over it.
+    */
+  private[graft] def pageRankWith(nodes: DataFrame, edges: DataFrame,
+      eps: Double, damping: Double, maxRounds: Int,
+      own: Caches): (DataFrame, Int) = {
     import graft.functions.MoneyFunctions.roundAt
     val idCol = nodes.columns.head
     val Seq(sCol, dCol) = edges.columns.take(2).toSeq
@@ -390,12 +378,12 @@ object Corpus {
     // n = 0 would silently turn 1/n and (1-d)/n into Infinity and emit
     // NaN ranks instead of failing where the problem is
     require(n > 0, "pageRank needs a non-empty node set")
-    // node-frame dispatch (r16): degree, rank and inflow frames are all
+    // node-frame dispatch: degree, rank and inflow frames are all
     // ≤ |V| rows of two fixed-width columns — |V| is already counted for
     // the formula, so the regime decision is free, and under budget the
     // cached edge table stays un-exchanged through every round
     def bcN(df: DataFrame): DataFrame = dispatchNodeFrame(df, n, 2)
-    // deg as groupBy + broadcast-join, NOT a window (r17, measured): a
+    // deg as groupBy + broadcast-join, NOT a window (measured): a
     // count().over(partitionBy(src)) window folds the degree into the
     // eDeg build stage and drops the deg broadcast-build job, but it
     // A/B-regressed (x27 min-of-6: 2.69 → 3.36 s) — the window's
@@ -403,8 +391,8 @@ object Corpus {
     // broadcast build, which AQE overlaps with the other futures anyway
     // (the a22 lesson: concurrent-future work is ~free on a wide box).
     val deg = edges.groupBy(col(sCol).as("src")).agg(count(lit(1)).as("deg"))
-    val eDeg = edges.select(col(sCol).as("src"), col(dCol).as("dst"))
-      .join(bcN(deg), "src").cache()
+    val eDeg = own(edges.select(col(sCol).as("src"), col(dCol).as("dst"))
+      .join(bcN(deg), "src"))
     val explainRounds = edges.sparkSession.conf
       .getOption("graft.debug.graphExplain").contains("true")
     val base = (1.0 - damping) / n
@@ -420,7 +408,7 @@ object Corpus {
     // constant across rounds, shared by both modes
     val update = roundAt(
       lit(base) + lit(damping) * coalesce(col("inflow"), lit(0.0)), 10)
-    // lazy mode (r17) recurses on the INFLOW frame, not the rank frame:
+    // lazy mode recurses on the INFLOW frame, not the rank frame:
     // the |V|-row ids join runs ONCE after the loop, so each round costs
     // one broadcast build (its inflow aggregate) instead of two
     // (inflow + the ids⨝inflow rank frame) — K fewer sequential
@@ -480,10 +468,6 @@ object Corpus {
       // ids join produced them (rounds = 0 keeps the uniform start frame)
       ranks = ids.join(bcN(lastInflow), Seq("id"), "left")
         .select(col("id"), update.as("rank"))
-    // converged mode materialized every round, so the cache is spent;
-    // lazy mode hasn't run yet — the cache serves the caller's action
-    // and follows its clearCache contract
-    if (!lazyFixed) eDeg.unpersist()
     (ranks.select(col("id").as(idCol), col("rank")), rounds)
   }
 
@@ -511,23 +495,22 @@ object Corpus {
     * keep) for old + new docs, plus the CC round count.
     */
   def updateClustersWithStats(oldClusters: DataFrame, newDocs: DataFrame,
-      indexPaths: Seq[String], threshold: Double = 0.5): (DataFrame, Int) = {
+      indexPaths: Seq[String],
+      threshold: Double = 0.5): (DataFrame, Int) = Caches.scoped { own =>
     val oldLab = oldClusters.select(col("doc_id"), col("cluster_id"))
     // ONE shingled+cached batch frame feeds both pair stages (the
     // cross-edge probe against the index and the in-batch self-pairs) —
     // each previously re-shingled the same documents independently
-    val shNew = withShingles(newDocs).select("doc_id", "sh").cache()
-    // cached (r17): crossEdges has TWO materializing consumers in
-    // different ACTIONS — the CC seed checkpoint (through touched/nodes)
-    // and the CC edge-table cache build — and exchange reuse never
-    // crosses an action boundary, so the whole batch×index probe join
-    // ran twice. Two-long rows, released by the caller's clearCache
-    // contract.
-    val crossEdges = dedupAgainstIndexFrom(shNew, indexPaths, threshold)
+    val shNew = shingleSets(newDocs, own)
+    // cached: crossEdges has TWO materializing consumers in different
+    // ACTIONS — the CC seed checkpoint (through touched/nodes) and the
+    // CC edge-table cache build — and exchange reuse never crosses an
+    // action boundary, so the whole batch×index probe join would run
+    // twice. Two-long rows.
+    val crossEdges = own(dedupAgainstIndexFrom(shNew, indexPaths, threshold)
       .join(oldLab.withColumnRenamed("doc_id", "index_id"), "index_id")
-      .select(col("new_id").as("a"), col("cluster_id").as("b"))
-      .cache()
-    val batchEdges = nearDupPairsFrom(shNew, threshold)._1
+      .select(col("new_id").as("a"), col("cluster_id").as("b")))
+    val batchEdges = nearDupPairsFrom(shNew, threshold, own)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     val touched = crossEdges.select(col("b").as("id")).distinct()
     val nodes = touched
@@ -710,12 +693,11 @@ object Corpus {
   def readPostingIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = spark.read.parquet(s"$path/postings")
 
-  def writeLshIndex(docs: DataFrame, path: String): Unit = {
-    val sh = withShingles(docs).select("doc_id", "sh").cache()
+  def writeLshIndex(docs: DataFrame, path: String): Unit = Caches.scoped { own =>
+    val sh = shingleSets(docs, own)
     graft.etl.EtlIO.writePartitionedParquet(
       bandSignatures(sh), s"$path/signatures", Seq("band_id"))
     graft.etl.EtlIO.writeParquet(sh, s"$path/shingles")
-    sh.unpersist()
   }
 
   /** persisted-index readers ([[writeLshIndex]]'s layout) — shared by
@@ -876,26 +858,24 @@ object Corpus {
     * cached frame poisons the candidate machinery upstream (62 GB W,
     * reverted), so the candidate side always sees the unhinted plan.
     *
-    * Returns (candidates to use, verify side to use, caches created) —
-    * callers must release the caches (directly or via the existing
-    * clearCache contracts).
+    * Returns (candidates to use, verify side to use); the caches it
+    * creates belong to `own`.
     */
   private[graft] def dispatchVerifySets(cand0: DataFrame,
       candIdCols: Seq[String], sets: DataFrame,
-      setsBytes: Long): (DataFrame, DataFrame, Seq[DataFrame]) = {
+      setsBytes: Long, own: Caches): (DataFrame, DataFrame) = {
     val budget = verifyBroadcastBudget(sets.sparkSession)
     // strict <: a zero/empty-frame measurement must not satisfy the
     // zero-budget spec knob (budget 0 means "never hint", and
     // PlanAuditSpec's no-hint audit depends on that reading literally)
-    if (setsBytes < budget) (cand0, broadcast(sets), Nil)
+    if (setsBytes < budget) (cand0, broadcast(sets))
     else {
-      val cand = cand0.cache()
+      val cand = own(cand0)
       val ids = candIdCols.map(c => cand.select(col(c).as("doc_id")))
         .reduce(_.union(_)).distinct()
-      val pruned = sets.join(ids, Seq("doc_id"), "left_semi").cache()
-      if (setFrameBytes(pruned) < budget) (cand, broadcast(pruned),
-        Seq(cand, pruned))
-      else { pruned.unpersist(); (cand, sets, Seq(cand)) }
+      val pruned = own(sets.join(ids, Seq("doc_id"), "left_semi"))
+      if (setFrameBytes(pruned) < budget) (cand, broadcast(pruned))
+      else { own.drop(pruned); (cand, sets) }
     }
   }
 
@@ -941,13 +921,9 @@ object Corpus {
     * shingled and signed fresh; the index side comes entirely from
     * parquet — signatures for the band equi-join candidates, shingle
     * sets for the exact verify. Candidate volume scales with the BATCH
-    * (new×index band join), never index×index.
-    *
-    * Caching contract: like [[nearDupPairs]], the returned frame is
-    * lazy and backed by the cached batch shingle sets (they feed both
-    * the signature build and the verify join) — release with
-    * `spark.catalog.clearCache()` between ingests on a long-lived
-    * session.
+    * (new×index band join), never index×index. The pairs are
+    * checkpointed before the batch shingle cache (it feeds both the
+    * signature build and the verify join) is released.
     */
   def dedupAgainstIndex(newDocs: DataFrame, indexPath: String,
       threshold: Double = 0.5): DataFrame =
@@ -958,14 +934,15 @@ object Corpus {
     * prior batch contributed one immutable segment.
     */
   def dedupAgainstIndex(newDocs: DataFrame, indexPaths: Seq[String],
-      threshold: Double): DataFrame =
-    dedupAgainstIndexFrom(
-      withShingles(newDocs).select("doc_id", "sh").cache(), indexPaths, threshold)
+      threshold: Double): DataFrame = Caches.scoped { own =>
+    dedupAgainstIndexFrom(shingleSets(newDocs, own), indexPaths, threshold)
+      .localCheckpoint()
+  }
 
-  /** [[dedupAgainstIndex]] over a PRE-SHINGLED cached (doc_id, sh) frame
-    * (see [[nearDupPairsFrom]] — the shared-batch path).
+  /** the lazy [[dedupAgainstIndex]] frame over [[shingleSets]] (see
+    * [[nearDupPairsFrom]] — the shared-batch path).
     */
-  private def dedupAgainstIndexFrom(sh: DataFrame, indexPaths: Seq[String],
+  private[graft] def dedupAgainstIndexFrom(sh: DataFrame, indexPaths: Seq[String],
       threshold: Double): DataFrame = {
     val spark = sh.sparkSession
     val cand = bandSignatures(sh).as("a")
@@ -1178,19 +1155,20 @@ object Corpus {
     * feeds the index probe, the in-batch check AND the appended segment.
     *
     * The segment write runs eagerly (it is the call's side effect); the
-    * returned curated batch is lazy on the same cached shingle build —
-    * release with `spark.catalog.clearCache()` between ingests.
+    * returned curated batch is lazy over `newDocs` and the checkpointed
+    * drop set, and the shingle/signature caches are released once the
+    * segment is written.
     */
   def curateIncremental(newDocs: DataFrame, indexPaths: Seq[String],
       appendSegmentPath: String, threshold: Double = 0.5,
-      qualityGate: Boolean = false): DataFrame = {
+      qualityGate: Boolean = false): DataFrame = Caches.scoped { own =>
     val spark = newDocs.sparkSession
     val base =
       if (qualityGate) qualitySignals(newDocs).filter(col("keep"))
         .select(newDocs.columns.toIndexedSeq.map(col): _*)
       else newDocs
-    val sh = withShingles(base).select("doc_id", "sh").cache()
-    val sig = bandSignatures(sh).cache()
+    val sh = shingleSets(base, own)
+    val sig = own(bandSignatures(sh))
     // vs the existing corpus: band-join candidates, exact verify
     val idxCand = sig.as("a")
       .join(readIndexSignatures(spark, indexPaths).as("b"),
@@ -1220,14 +1198,14 @@ object Corpus {
           JaccardSimilarity(col("sha"), col("shb")), 6))
       .filter(col("jaccard") >= threshold)
       .select(col("new_id").as("doc_id")).distinct()
-    // cached (r17): dropIds has THREE materializing consumers in
+    // checkpointed: dropIds has THREE materializing consumers in
     // different ACTIONS — the two segment writes below and the caller's
     // terminal action on the returned curated frame — and exchange reuse
     // never crosses an action boundary, so the whole candidate+verify
-    // chain (band joins, jaccard verifies, distincts) ran three times
-    // per ingest. One-long rows (loser doc_ids only), released by the
-    // caller's clearCache contract like sh/sig above.
-    val dropIds = idxMatches.union(batchLosers).distinct().cache()
+    // chain (band joins, jaccard verifies, distincts) would run three
+    // times per ingest. One-long rows (loser doc_ids only), and the
+    // returned frame outlives the sh/sig caches it is computed from.
+    val dropIds = idxMatches.union(batchLosers).distinct().localCheckpoint()
     val survivors = base.join(dropIds, Seq("doc_id"), "left_anti")
     val survivorIds = survivors.select("doc_id")
     graft.etl.EtlIO.writePartitionedParquet(

@@ -213,11 +213,6 @@ object Cli {
             opts.getOrElse("eps", "1e-8").toDouble)
         }
         EtlIO.writeParquet(ranks, opts("out"))
-        // fixed-horizon mode returns a LAZY plan whose eDeg cache only
-        // materializes at the write above — release it before the
-        // session outlives this command (r16 ADVICE; Verify/Bench have
-        // their own clearCache contracts, the CLI needs its own)
-        spark.catalog.clearCache()
         println(s"pagerank=${opts("out")} rounds=$rounds")
       }
     case Some("cluster-update") =>

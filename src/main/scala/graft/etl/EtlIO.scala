@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.core.Scratch
+import graft.core.{Caches, Scratch}
 
 /** IO layer ≙ reference io_utils.py + the single-file CSV output contract
   * (SURVEY §2.1 S1–S4, §7.4.6).
@@ -117,38 +117,37 @@ object EtlIO {
         org.apache.spark.sql.functions.lit(null).cast("int").as("check_number"))
 
   /** an audited CSV read: the clean rows in contract order, the
-    * corrupt-line exceptions, the file's header as read, and the cached
-    * parse both frames read from (the caller unpersists it).
+    * corrupt-line exceptions and the file's header as read.
     */
   final case class AuditedCsv(clean: DataFrame, exceptions: DataFrame,
-      header: Seq[String], parsed: DataFrame)
+      header: Seq[String])
 
   /** [[readCsvRaw]] plus a corrupt-record audit channel: malformed lines
     * (wrong delimiter count — with an all-strings schema nothing else
     * can fail) surface as `corrupt_record` exception rows instead of
     * being silently padded/truncated by PERMISSIVE mode. The parsed
-    * frame is cached: Spark disallows queries over a raw CSV/JSON scan
-    * whose referenced columns are only the corrupt-record column, and
-    * the exceptions branch is exactly that query — materializing first
-    * is the documented contract (and the pipeline reads both branches,
-    * so the scan is shared, not repeated).
+    * frame is cached by the caller's owner `own`: Spark disallows
+    * queries over a raw CSV/JSON scan whose referenced columns are only
+    * the corrupt-record column, and the exceptions branch is exactly
+    * that query — materializing first is the documented contract (and
+    * the pipeline reads both branches, so the scan is shared, not
+    * repeated). Both frames are valid while `own`'s scope is open.
     */
   def readCsvRawAudited(spark: SparkSession, path: String, schema: StructType,
-      dataset: String): AuditedCsv = {
+      dataset: String, own: Caches): AuditedCsv = {
     val actual = csvHeader(path)
     val (asStrings, cols) = bindByHeader(actual, schema,
       StructField(CorruptCol, StringType, nullable = true))
-    val raw = spark.read
+    val raw = own(spark.read
       .option("header", "true")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
       .schema(asStrings)
-      .csv(path)
-      .cache()
+      .csv(path))
     val clean = raw
       .filter(org.apache.spark.sql.functions.col(CorruptCol).isNull)
       .select(cols: _*)
-    AuditedCsv(clean, corruptExceptions(raw, dataset), actual, raw)
+    AuditedCsv(clean, corruptExceptions(raw, dataset), actual)
   }
 
   /** schema'd CSV read (for already-trusted inputs like the COA). */
@@ -172,19 +171,18 @@ object EtlIO {
     * (unparseable JSON, or a field whose value can't take the schema'd
     * type) becomes a `corrupt_record` exception row carrying the raw
     * line, and is EXCLUDED from the clean frame — reported, not silently
-    * nulled. Returns (clean rows, exceptions); caching rationale as in
-    * [[readCsvRawAudited]].
+    * nulled. Returns (clean rows, exceptions), valid while `own`'s
+    * scope is open; caching rationale as in [[readCsvRawAudited]].
     */
   def readJsonlAudited(spark: SparkSession, path: String, schema: StructType,
-      dataset: String): (DataFrame, DataFrame) = {
+      dataset: String, own: Caches): (DataFrame, DataFrame) = {
     val withCorrupt = StructType(schema.fields :+
       StructField(CorruptCol, StringType, nullable = true))
-    val raw = spark.read
+    val raw = own(spark.read
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
       .schema(withCorrupt)
-      .json(path)
-      .cache()
+      .json(path))
     val clean = raw
       .filter(org.apache.spark.sql.functions.col(CorruptCol).isNull)
       .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)

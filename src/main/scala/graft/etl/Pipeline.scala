@@ -1,13 +1,13 @@
 package graft.etl
 
-import java.util.concurrent.ConcurrentLinkedDeque
-
 import scala.concurrent.{blocking, Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.Caches
 
 /** End-to-end monthly close ≙ reference pipeline.run_month
   * (pipeline.py:50–191): scan → validate (lazy-collect) → gate → month
@@ -63,11 +63,9 @@ object Pipeline {
       Dq.inventorySchema(settings) -> s"$rawDir/inventory_movements.csv",
       Dq.fxSchema(settings) -> s"$rawDir/fx_rates.csv")
 
-    // every cache the close creates, newest first; released on every
-    // exit path, gate rejection and missing FX rates included
-    val owned = new ConcurrentLinkedDeque[DataFrame]()
-    def own(df: DataFrame): DataFrame = { owned.push(df); df }
-    try {
+    // every cache the close creates is released on every exit path,
+    // gate rejection and missing FX rates included
+    Caches.scoped { own =>
       // One scan per table: the cached coerced frame feeds both the
       // exception plans and the downstream fact build. The audited read
       // splits off malformed lines as corrupt_record exceptions BEFORE
@@ -82,12 +80,11 @@ object Pipeline {
       // five chains would plan one after another before the first job
       // ran; on five, planning and jobs overlap. Every future is awaited
       // before the first failure is rethrown, so no chain is still
-      // creating caches when `finally` releases them.
+      // creating caches when the scope releases them.
       val chains = tables.map { case (ts, path) =>
         Future(blocking(phase(s"coerce-${ts.name}") {
-          val audited = EtlIO.readCsvRawAudited(spark, path, ts.schema, ts.name)
-          own(audited.parsed)
-          val coerced = own(Validator.coerce(audited.clean, ts).cache())
+          val audited = EtlIO.readCsvRawAudited(spark, path, ts.schema, ts.name, own)
+          val coerced = own(Validator.coerce(audited.clean, ts))
           coerced.count()
           val ex = Validator.exceptionsFromCoerced(spark, coerced, ts, Some(audited.header))
             .unionByName(audited.exceptions)
@@ -121,8 +118,7 @@ object Pipeline {
       // below stay parallel: those scale with the data.
       val withSeverity = own(Dq.addSeverity(allExceptions)
         .repartition(1)
-        .sortWithinPartitions("dataset", "check", "index")
-        .cache())
+        .sortWithinPartitions("dataset", "check", "index"))
 
       // gate: write audit trail, then fail if needed (pipeline.py:129–162)
       val exPath = s"$curatedDir/dq_exceptions.csv"
@@ -168,6 +164,6 @@ object Pipeline {
       phase("kpi-write")(EtlIO.writeParquet(kpi, outKpi))
 
       Outputs(exPath, sumPath, outFact, outDim, outKpi)
-    } finally owned.forEach(_.unpersist())
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Caches
+
 /** Multimodal column plumbing (builder-prompt extension surface): treat
   * image/audio/video as opaque `binary` payloads with typed metadata, and
   * run decode / feature-extraction / resize / frame-sampling as
@@ -352,15 +354,14 @@ object Multimodal {
     * custom-cap artifact can never pass the production layout gate.
     */
   private[graft] def writeFrameArtifacts(fh0: DataFrame, path: String,
-      repCap: Int = FRAME_DF_CAP, truthCap: Int = FRAME_TRUTH_DF_CAP): Unit = {
-    val fh = fh0.cache()
-    val ev = truthEvidence(fh, truthCap).cache()
+      repCap: Int = FRAME_DF_CAP,
+      truthCap: Int = FRAME_TRUTH_DF_CAP): Unit = Caches.scoped { own =>
+    val fh = own(fh0)
+    val ev = own(truthEvidence(fh, truthCap))
     electReps(ev, repCap)
       .write.mode("overwrite").parquet(s"$path/postings")
     ev.groupBy("media_id").agg(collect_set("fhash48").as("fhs"))
       .write.mode("overwrite").parquet(s"$path/sets")
-    ev.unpersist()
-    fh.unpersist()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path, FRAME_INDEX_LAYOUT_FILE),
       frameIndexLayoutMarkerFor(repCap, truthCap))
@@ -496,10 +497,10 @@ object Multimodal {
     * groupBy(collect_set) over [[truthEvidence]] output.
     *
     * The sets side rides the [[graft.corpus.Corpus.dispatchVerifySets]]
-    * regime dispatch (r16 — the sf10 backfill profile showed the verify
-    * SMJ dragging both endpoints' evidence ARRAYS through its sorts,
-    * 9.3 GB spill on a 1.2 GB exchange, the exact shape the text
-    * path's dispatch closed at r14): measure the sets frame from its
+    * regime dispatch (the sf10 backfill profile showed the verify SMJ
+    * dragging both endpoints' evidence ARRAYS through its sorts, 9.3 GB
+    * spill on a 1.2 GB exchange, the exact shape the text path's
+    * dispatch closed): measure the sets frame from its
     * UnsafeRow layout, broadcast it while it fits the shared
     * heap-derived budget (`graft.verify.broadcastBudget` — the ONE knob
     * every dispatch answers to, so the zero-budget no-hint audit covers
@@ -507,25 +508,25 @@ object Multimodal {
     * endpoints and re-measure; nothing fits → the natural plan (the
     * cluster-scale regime, memory-per-task the lever). The hint can
     * change the PLAN, never the ANSWER — a pure filter over candidate
-    * pairs. Caches created here are media/candidate-sized and released
-    * by the callers' existing clearCache contracts.
+    * pairs. The returned frame is lazy on media/candidate-sized caches
+    * that belong to `own`.
     */
   private[graft] def verifySetPairs(cand0: DataFrame, sets0: DataFrame,
-      minShared: Int): DataFrame = {
+      minShared: Int, own: Caches): DataFrame = {
     val budget = graft.corpus.Corpus.verifyBroadcastBudget(sets0.sparkSession)
     // cached: the measuring aggregate and the two verify joins would
     // each re-run the sets build (a collect_set over the evidence
     // frame) otherwise
-    val sets = sets0.cache()
+    val sets = own(sets0)
     val (cand, setsSide) =
       if (frameSetBytes(sets) < budget) (cand0, broadcast(sets))
       else {
-        val c = cand0.cache()
+        val c = own(cand0)
         val ids = c.select(col("doc_a").as("media_id"))
           .union(c.select(col("doc_b").as("media_id"))).distinct()
-        val pruned = sets.join(ids, Seq("media_id"), "left_semi").cache()
+        val pruned = own(sets.join(ids, Seq("media_id"), "left_semi"))
         if (frameSetBytes(pruned) < budget) (c, broadcast(pruned))
-        else { pruned.unpersist(); (c, sets) }
+        else { own.drop(pruned); (c, sets) }
       }
     cand
       .join(setsSide.select(col("media_id").as("doc_a"), col("fhs").as("__fha")),
@@ -633,21 +634,23 @@ object Multimodal {
     * bounded-degradation argument as the text index's per-segment band
     * keys.
     *
-    * Returns the surviving batch rows (lazy, on cached batch frames —
-    * release with `spark.catalog.clearCache()` between ingests); the
-    * segment write runs eagerly as the call's side effect.
+    * Returns the surviving batch rows (lazy over `newDocs` and the
+    * checkpointed drop set; the batch caches are released once the
+    * segment is written); the segment write runs eagerly as the call's
+    * side effect.
     */
   def curateMediaIncremental(newDocs: DataFrame, indexPaths: Seq[String],
-      appendSegmentPath: String, minShared: Int = 2): DataFrame = {
+      appendSegmentPath: String,
+      minShared: Int = 2): DataFrame = Caches.scoped { own =>
     val spark = newDocs.sparkSession
     indexPaths.foreach(requireFrameIndexLayout)
     val withChars =
       if (newDocs.columns.contains("n_chars")) newDocs
       else newDocs.withColumn("n_chars", length(col("text")).cast("long"))
-    val fh0 = frameHashes(
+    val fh0 = own(frameHashes(
         mediaFromDocuments(spark, withChars, width = 32, height = 2),
         everyN = FRAME_EVERY_N)
-      .select("media_id", "fhash48").distinct().cache()
+      .select("media_id", "fhash48").distinct())
     // collapse-first (r14 review find): media with IDENTICAL uncapped
     // frame-hash sets collapse to their min id BEFORE any df statistic
     // is derived — the x31/x34/m4 pigeonhole discipline at set
@@ -666,18 +669,18 @@ object Multimodal {
         org.apache.spark.sql.expressions.Window.partitionBy(col("fhs_all"))))
       .filter(col("media_id") =!= col("keep_id"))
       .select("media_id")
-    val fh = fh0.join(exactLosers, Seq("media_id"), "left_anti").cache()
+    val fh = own(fh0.join(exactLosers, Seq("media_id"), "left_anti"))
     // batch-scope evidence under the boilerplate bound (post-collapse
     // df, so only hashes shared by > truth-cap distinct CONTENTS are
     // non-evidence) + the batch's per-hash representatives — both via
     // the SAME helpers the layout writer uses, so the in-memory and
     // persisted rules cannot diverge. df is derived once (cached: the
     // evidence filter AND the candidate stage's salt width read it).
-    val dfm = frameDf(fh).cache()
-    val ev = truthEvidence(fh, dfm, FRAME_TRUTH_DF_CAP).cache()
+    val dfm = own(frameDf(fh))
+    val ev = own(truthEvidence(fh, dfm, FRAME_TRUTH_DF_CAP))
     val rep = electReps(ev)
-    val sets = ev.groupBy("media_id")
-      .agg(collect_set("fhash48").as("fhs")).cache()
+    val sets = own(ev.groupBy("media_id")
+      .agg(collect_set("fhash48").as("fhs")))
     // vs the index: batch evidence × index REPRESENTATIVE postings
     // (≤ cap rows per hash on the index side — a popular hash pairs a
     // new arrival with its cluster's lowest-id members, exactly the
@@ -704,16 +707,17 @@ object Multimodal {
     // verify stages are the SHARED helpers the m6/m7 telemetry queries
     // run, so m7's recall/keeper ladder prices exactly this rule.
     val batchLosers =
-      verifySetPairs(repCandidatePairs(rep, ev, dfm), sets, minShared)
+      verifySetPairs(repCandidatePairs(rep, ev, dfm), sets, minShared, own)
         .select(col("doc_b").as("media_id")).distinct()
-    // cached: the two-column drop set is consumed twice — by the segment
-    // write below and by the caller's survivors write — and WITHOUT the
-    // cache each consumer re-runs the full index probe (postings + sets
-    // parquet scans + both joins), i.e. a per-batch cost riding index
-    // size twice in the loop built to keep per-batch cost batch-sized.
-    // Released by the caller's clearCache contract (scaladoc above).
+    // checkpointed: the two-column drop set is consumed twice — by the
+    // segment write below and by the caller's survivors write — and
+    // WITHOUT it each consumer re-runs the full index probe (postings +
+    // sets parquet scans + both joins), i.e. a per-batch cost riding
+    // index size twice in the loop built to keep per-batch cost
+    // batch-sized. A checkpoint, not a cache: the returned frame
+    // outlives this call's caches.
     val dropIds = exactLosers.union(idxMatches).union(batchLosers).distinct()
-      .withColumnRenamed("media_id", "doc_id").cache()
+      .withColumnRenamed("media_id", "doc_id").localCheckpoint()
     val survivors = newDocs.join(dropIds, Seq("doc_id"), "left_anti")
     // the segment carries the survivors' EVIDENCE (batch-truth-capped:
     // boilerplate the batch already measured stays evicted even if the

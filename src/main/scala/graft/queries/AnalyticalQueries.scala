@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Caches, Tables}
 import graft.functions.MoneyFunctions._
 
 /** Multi-join analytical headliners (TPC-H Q3/Q5 shapes) — the "would
@@ -868,7 +868,8 @@ object AnalyticalQueries {
           // + distinct runs twice inside the one eDeg materialization
           .distinct().cache()
         val nodes = items.select(col("l_partkey").as("id")).distinct()
-        graft.corpus.Corpus.pageRank(nodes, edges, iters = 3, damping = 0.85)
+        graft.corpus.Corpus.pageRankWith(nodes, edges, eps = -1.0, damping = 0.85,
+            maxRounds = 3, Caches.Harness)._1
           .select(col("id").as("part"), col("rank"))
           .orderBy(col("rank").desc, col("part"))
       },

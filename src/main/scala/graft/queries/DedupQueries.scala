@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Artifacts, Tables}
+import graft.core.{Artifacts, Caches, Tables}
 import graft.functions.MoneyFunctions._
 
 /** Deduplication operators over the `documents` / `embeddings` tables —
@@ -759,9 +759,9 @@ object DedupQueries {
     val tEff = t - 1e-6
     val minReq = ceil(lit(tEff) * (col("sa.n") + col("sb.n"))
       / lit(1.0 + tEff) - lit(1e-9)).cast("int")
-    val (cand, side, _) = graft.corpus.Corpus.dispatchVerifySets(
+    val (cand, side) = graft.corpus.Corpus.dispatchVerifySets(
       cand0, Seq("doc_a", "doc_b"), sets,
-      setsBytes.getOrElse(graft.corpus.Corpus.setFrameBytes(sets)))
+      setsBytes.getOrElse(graft.corpus.Corpus.setFrameBytes(sets)), Caches.Harness)
     cand
       .join(side.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(side.as("sb"), col("doc_b") === col("sb.doc_id"))
@@ -786,9 +786,9 @@ object DedupQueries {
     val tEff = t - 1e-6
     val minReq = ceil(lit(tEff) * least(col("sa.n"), col("sb.n"))
       - lit(1e-9)).cast("int")
-    val (cand, side, _) = graft.corpus.Corpus.dispatchVerifySets(
+    val (cand, side) = graft.corpus.Corpus.dispatchVerifySets(
       cand0, Seq("doc_a", "doc_b"), sets,
-      setsBytes.getOrElse(graft.corpus.Corpus.setFrameBytes(sets)))
+      setsBytes.getOrElse(graft.corpus.Corpus.setFrameBytes(sets)), Caches.Harness)
     cand
       .join(side.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(side.as("sb"), col("doc_b") === col("sb.doc_id"))
@@ -999,7 +999,8 @@ object DedupQueries {
     * building).
     */
   private def lshVerifiedPairs(s: SparkSession, dir: String): DataFrame =
-    graft.corpus.Corpus.nearDupPairs(Tables.documents(s, dir))
+    graft.corpus.Corpus.nearDupPairsFrom(graft.corpus.Corpus.shingleSets(
+      Tables.documents(s, dir), Caches.Harness), 0.5, Caches.Harness)
 
   /** DuckDB mirror of [[lshVerifiedPairs]] as a CTE (`pairs`), appended
     * after [[lshSigCtesSql]]; shared by the x2 and x11 oracles.
@@ -1263,9 +1264,10 @@ object DedupQueries {
         // batch, not the corpus). CorpusSpec proves the
         // no-batch-1-rescan property by deleting the indexed corpus's
         // source before running the dedup.
-        graft.corpus.Corpus.dedupAgainstIndex(
-            Tables.documents(s, dir).filter(col("doc_id") % 10 === 0),
-            x10IndexPath(s, dir))
+        graft.corpus.Corpus.dedupAgainstIndexFrom(
+            graft.corpus.Corpus.shingleSets(
+              Tables.documents(s, dir).filter(col("doc_id") % 10 === 0), Caches.Harness),
+            Seq(x10IndexPath(s, dir)), 0.5)
           .orderBy("new_id", "index_id")
       },
       Some(s"""WITH $lshSigCtesSql,

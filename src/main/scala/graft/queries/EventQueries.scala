@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Caches, Tables}
 import graft.functions.MoneyFunctions._
 
 /** Batch analytics over the `events` stream table: time-windowed
@@ -135,7 +135,7 @@ object EventQueries {
         rep.join(sampIds, Seq("media_id"), "left_semi"),
         ev.join(sampIds, Seq("media_id"), "left_semi"), dfm)
       val sets = ev.groupBy("media_id").agg(collect_set("fhash48").as("fhs"))
-      Multimodal.verifySetPairs(cand, sets, minShared = 2)
+      Multimodal.verifySetPairs(cand, sets, minShared = 2, Caches.Harness)
     }
     // truth NOT cached (r16, measured): both of its consumers (count
     // aggregate + keeper stats) end at the same pair-agg shuffle, so
@@ -1156,7 +1156,7 @@ object EventQueries {
         // does not unify them across the self-join aliases); released
         // by the clearCache contract
         val pairs = Multimodal.verifySetPairs(
-            Multimodal.repCandidatePairs(rep, ev, dfm), sets, minShared = 2)
+            Multimodal.repCandidatePairs(rep, ev, dfm), sets, minShared = 2, Caches.Harness)
           .select(col("doc_a").as("ma"), col("doc_b").as("mb")).cache()
         val agg = pairs.select(col("ma").as("media_id"), col("mb").as("nbr"))
           .union(pairs.select(col("mb").as("media_id"), col("ma").as("nbr")))

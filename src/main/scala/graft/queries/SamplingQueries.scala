@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Caches, Tables}
 import graft.functions.MoneyFunctions._
 
 /** Dataset-assembly operators for a training-data pipeline: deterministic
@@ -169,10 +169,10 @@ object SamplingQueries {
         // statistic picks broadcast / candidate-pruned / natural; both
         // verify joins share one exchange; output identical in every
         // regime (the oracle + VerifyRegimeSpec discipline). Caches fall
-        // under the caller's clearCache contract.
+        // under the harness contract.
         val sets = sh.select(col("doc_id"), col("sh"), col("digest"))
-        val (cand, side, _) = Corpus.dispatchVerifySets(cand0,
-          Seq("eval_id", "train_id"), sets, Corpus.setFrameBytes(sets))
+        val (cand, side) = Corpus.dispatchVerifySets(cand0,
+          Seq("eval_id", "train_id"), sets, Corpus.setFrameBytes(sets), Caches.Harness)
         cand
           .join(side.select(col("doc_id").as("eval_id"), col("sh").as("sha"),
             col("digest").as("da")), Seq("eval_id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Artifacts, Tables}
+import graft.core.{Artifacts, Caches, Tables}
 import graft.functions.MoneyFunctions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -149,9 +149,9 @@ object SimilarityQueries {
     * (ties by centroid id); re-centered means are rounded at 6 dp so
     * the oracle CTE chain reproduces them exactly despite sum-order
     * differences — the contract is k-agnostic, so ONE oracle CTE chain
-    * serves every k (only the cent0 seed line changes). Cached: k rows,
-    * consumed by every downstream assignment — training must not re-run
-    * per consumer. Released by clearCache().
+    * serves every k (only the cent0 seed line changes). Cached by `own`:
+    * k rows, consumed by every downstream assignment — training must
+    * not re-run per consumer.
     *
     * Two step forms, one contract: at k ≤ [[INLINE_K]] the original
     * broadcast-join + per-vector window (n·k rows through one exchange
@@ -164,7 +164,7 @@ object SimilarityQueries {
     * map-side combined). Each round collects the k×d centroid table to
     * the driver (the dim-sized collect policy; ≤ √n rows by design).
     */
-  private[graft] def trainedCentroids(e: DataFrame,
+  private[graft] def trainedCentroids(e: DataFrame, own: Caches,
       iters: Int = LLOYD_ITERS, k: Int = 8): DataFrame = {
     val seed = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("centroid_id"), col("v"))
@@ -191,7 +191,7 @@ object SimilarityQueries {
         .select(col("centroid_id"), col("v")))
     val step: DataFrame => DataFrame =
       if (k <= INLINE_K) lloydStep else lloydStepBulk
-    (1 to iters).foldLeft(seed)((c, _) => step(c)).cache()
+    own((1 to iters).foldLeft(seed)((c, _) => step(c)))
   }
 
   /** the scaled cluster count for the scale-path ANN family: k = ⌈√n⌉
@@ -234,7 +234,7 @@ object SimilarityQueries {
     */
   private def sharedCentroids(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Artifacts.dir("centroids", embeddingsPath(dir)) { p =>
-      trainedCentroids(vecs(s, dir)).write.mode("overwrite").parquet(p)
+      trainedCentroids(vecs(s, dir), Caches.Harness).write.mode("overwrite").parquet(p)
     })
 
   private def embeddingsPath(dir: String): String = Tables.path(dir, "embeddings")
@@ -249,7 +249,7 @@ object SimilarityQueries {
   private def sharedCentroidsScaled(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Artifacts.dir("centroids_sqrtk", embeddingsPath(dir)) { p =>
       val e = vecs(s, dir)
-      trainedCentroids(e, LLOYD_ITERS, scaledK(e.count()))
+      trainedCentroids(e, Caches.Harness, LLOYD_ITERS, scaledK(e.count()))
         .write.mode("overwrite").parquet(p)
     })
 
@@ -261,7 +261,7 @@ object SimilarityQueries {
   private[queries] def ivfSearch(s: SparkSession, dir: String,
       lloydIters: Int): DataFrame = {
     val e = vecs(s, dir)
-    val centroids = trainedCentroids(e, lloydIters)
+    val centroids = trainedCentroids(e, Caches.Harness, lloydIters)
     val assigned = assignNearest(e, centroids)
     val probeW = Window.partitionBy("query_id")
       .orderBy(col("qcos").desc, col("centroid_id"))
@@ -700,23 +700,22 @@ object SimilarityQueries {
     */
   private def sharedPqCodebook(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Artifacts.dir("pq_codebook", embeddingsPath(dir)) { p =>
-      pqCodebook(pqSubs(s, dir)).write.mode("overwrite").parquet(p)
+      pqCodebook(pqSubs(s, dir), Caches.Harness).write.mode("overwrite").parquet(p)
     })
 
-  private[graft] def pqCodebook(subs: DataFrame): DataFrame = {
+  private[graft] def pqCodebook(subs: DataFrame, own: Caches): DataFrame = {
     val cb0 = subs.filter(col("vec_id") < PQ_K)
       .select(col("s"), col("vec_id").as("cid"), col("sub").as("cent"))
-    // cached: M·K = 128 rows, and every consumer (final assignment, the
-    // per-query lookup tables, the code-norm table) would otherwise
-    // re-run the whole training subtree. Released by clearCache().
-    pqAssign(subs, cb0)
+    // cached by `own`: M·K = 128 rows, and every consumer (final
+    // assignment, the per-query lookup tables, the code-norm table) would
+    // otherwise re-run the whole training subtree
+    own(pqAssign(subs, cb0)
       .select(col("s"), col("cid"), posexplode(col("sub")))
       .toDF("s", "cid", "j", "x")
       .groupBy("s", "cid", "j").agg(roundAt(avg("x"), 6).as("c"))
       .groupBy("s", "cid")
       .agg(expr("transform(array_sort(collect_list(struct(j, c))), t -> t.c)")
-        .as("cent"))
-      .cache()
+        .as("cent")))
   }
 
   private lazy val pqDistSql = roundAtSql(
@@ -1201,7 +1200,7 @@ object SimilarityQueries {
         // x15 searches over these codes; shared build in pqSubs/
         // pqCodebook/pqAssign.
         val subs = pqSubs(s, dir)
-        pqAssign(subs, pqCodebook(subs))
+        pqAssign(subs, pqCodebook(subs, Caches.Harness))
           .select(col("vec_id"), col("label"),
             posexplode(expr("zip_with(sub, cent, (a, b) -> a - b)")))
           .toDF("vec_id", "label", "j", "d")

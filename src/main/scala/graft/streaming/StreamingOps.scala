@@ -856,7 +856,7 @@ object StreamingOps {
         // is still in flight; its own compaction (if any) becomes
         // GC-eligible on the NEXT batch — steady state lags one batch
         if (gcSuperseded) gcSegments(segmentBasePath, batchId - 1)
-        batch.sparkSession.catalog.clearCache()
+        ()
       }
       .start()
 
@@ -901,7 +901,7 @@ object StreamingOps {
           rs => graft.multimodal.Multimodal.compactFrameSegments(
             spark, rs, s"$segmentBasePath/cmp_$batchId"))
         if (gcSuperseded) gcSegments(segmentBasePath, batchId - 1)
-        batch.sparkSession.catalog.clearCache()
+        ()
       }
       .start()
 
@@ -988,7 +988,7 @@ object StreamingOps {
         maybeCompactSegments(spark, s"$basePath/segments", batchId,
           compactTrigger)
         if (gcSuperseded) gcSegments(s"$basePath/segments", batchId - 1)
-        spark.catalog.clearCache()
+        ()
       }
       .start()
 

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.{Caches, Sessions, Tables}
 import graft.queries.SimilarityQueries
 
 /** Dev probe: the ANN family's BLOCKING pair mass under the fixed-k=8
@@ -27,7 +27,7 @@ object AnnScaleProbe {
     val n = e.count()
     def mass(k: Int, label: String): Unit = {
       val t0 = System.nanoTime()
-      val cents = SimilarityQueries.trainedCentroids(e, k = k)
+      val cents = SimilarityQueries.trainedCentroids(e, Caches.Harness, k = k)
       val sizes = SimilarityQueries.assignNearest(e, cents)
         .groupBy("centroid_id").agg(count(lit(1)).as("c"))
       val r = sizes.agg(

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ListenerBridge
 
 import graft.SparkEntry
-import graft.core.{Scratch, Sessions, Tables}
+import graft.core.{Caches, Scratch, Sessions, Tables}
 import graft.etl.{Pipeline, SampleData, Settings}
 import graft.multimodal.Multimodal
 
@@ -161,7 +161,7 @@ object Profile {
     val sets = ev.groupBy("media_id").agg(collect_set("fhash48").as("fhs"))
     // cached for the two union branches, as m6 does
     val pairs = Multimodal.verifySetPairs(Multimodal.repCandidatePairs(
-      Multimodal.electReps(ev), ev, dfm, m.chunk), sets, minShared = 2).cache()
+      Multimodal.electReps(ev), ev, dfm, m.chunk), sets, minShared = 2, Caches.Harness).cache()
     pairs.select(col("doc_a").as("media_id"), col("doc_b").as("nbr"))
       .union(pairs.select(col("doc_b").as("media_id"), col("doc_a").as("nbr")))
       .groupBy("media_id").agg(count(lit(1)).as("n_partners"), min("nbr").as("min_nbr"))

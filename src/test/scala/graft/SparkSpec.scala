@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.CacheProbe
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM under Test/fork). */
@@ -27,4 +29,19 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** the session holds no cached plan; a failure names the ones left */
+  def assertNoCachedPlans(): Unit =
+    assert(CacheProbe.noCachedPlans(spark), CacheProbe.leaked(spark))
+}
+
+/** A spec whose tests each leave the cache as they found it: every test
+  * starts from an empty cache, whatever ran before it, so its
+  * [[SparkSpec.assertNoCachedPlans]] sees only what the test itself left.
+  */
+trait CacheCheckedSpec extends BeforeAndAfterEach { this: SparkSpec =>
+  override def beforeEach(): Unit = {
+    super.beforeEach()
+    spark.catalog.clearCache()
+  }
 }

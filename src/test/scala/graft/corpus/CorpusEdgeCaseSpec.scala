@@ -2,7 +2,7 @@ package graft.corpus
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{CacheCheckedSpec, SparkSpec}
 
 /** Pathological-input robustness for the corpus library: empty strings,
   * single words, exact clones, and an outsized document must flow
@@ -10,7 +10,7 @@ import graft.SparkSpec
   * curate() without exceptions and with sane outputs — these are the
   * first rows a real ingest feed contains.
   */
-class CorpusEdgeCaseSpec extends SparkSpec {
+class CorpusEdgeCaseSpec extends SparkSpec with CacheCheckedSpec {
   import spark.implicits._
 
   private def weird = Seq(
@@ -35,7 +35,7 @@ class CorpusEdgeCaseSpec extends SparkSpec {
     // can never pair (null band keys fall out of the equi-join)
     assert(pairs.contains((2L, 3L, 1.0)))
     assert(!pairs.exists(p => p._1 <= 1 || p._2 <= 1))
-    spark.catalog.clearCache()
+    assertNoCachedPlans()
   }
 
   test("curate with the quality gate handles degenerate docs end to end") {
@@ -50,7 +50,7 @@ class CorpusEdgeCaseSpec extends SparkSpec {
     val all = Corpus.curate(weird)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(all == Set(0L, 1L, 2L, 4L, 5L, 6L)) // 3 deduped into 2's cluster
-    spark.catalog.clearCache()
+    assertNoCachedPlans()
   }
 
   test("quality signals are well-defined on empty and numeric docs") {
@@ -91,7 +91,7 @@ class CorpusEdgeCaseSpec extends SparkSpec {
     val got = Corpus.updateClusters(old, empty, Seq(s"$base/idx"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == old.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-    spark.catalog.clearCache()
+    assertNoCachedPlans()
   }
 
   test("updateClusters day-0: empty label table and no segments equals a fresh cluster build") {
@@ -104,6 +104,6 @@ class CorpusEdgeCaseSpec extends SparkSpec {
     val expected = Corpus.dupClusters(batch)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(got == expected)
-    spark.catalog.clearCache()
+    assertNoCachedPlans()
   }
 }

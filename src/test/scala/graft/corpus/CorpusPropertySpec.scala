@@ -2,7 +2,7 @@ package graft.corpus
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{CacheCheckedSpec, SparkSpec}
 
 /** Property check for the clustering core: on randomized corpora,
   * [[Corpus.dupClusters]] (distributed min-label propagation + pointer
@@ -12,7 +12,7 @@ import graft.SparkSpec
   * Randomization catches shapes the fixed corpus doesn't have (longer
   * chains, singletons, dense cliques); seeds are fixed for determinism.
   */
-class CorpusPropertySpec extends SparkSpec {
+class CorpusPropertySpec extends SparkSpec with CacheCheckedSpec {
   import spark.implicits._
 
   /** deterministic pseudo-random corpus: texts over a tiny vocabulary so
@@ -37,7 +37,7 @@ class CorpusPropertySpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       val got = Corpus.dupClusters(docs)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-      spark.catalog.clearCache()
+      assertNoCachedPlans()
 
       // in-memory closure: adjacency BFS, component label = min doc id
       val adj = scala.collection.mutable.Map.empty[Long, List[Long]]
@@ -88,10 +88,9 @@ class CorpusPropertySpec extends SparkSpec {
       batches.zipWithIndex.foreach { case (b, i) =>
         labels = Corpus.updateClusters(labels, b, segs)
           .select("doc_id", "cluster_id")
-          .localCheckpoint() // sever lineage before caches are cleared
+          .localCheckpoint() // sever lineage across batches
         Corpus.writeLshIndex(b, s"$base/seg_${i + 1}")
         segs :+= s"$base/seg_${i + 1}"
-        spark.catalog.clearCache()
       }
       val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val expected = Corpus.dupClusters(docs).select("doc_id", "cluster_id")
@@ -102,7 +101,7 @@ class CorpusPropertySpec extends SparkSpec {
         .exists(c => c.map(t => assign(t._1)).size > 1 && c.size > 1)
       assert(spans, s"seed $seed: no cluster spans a batch boundary — vacuous")
       docs.unpersist()
-      spark.catalog.clearCache()
+      assertNoCachedPlans()
     }
   }
 }

@@ -2,7 +2,7 @@ package graft.corpus
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{CacheCheckedSpec, SparkSpec}
 import graft.core.Tables
 
 /** The library-surface curation pipeline, end to end. Each building
@@ -11,7 +11,7 @@ import graft.core.Tables
   * curate() keeps exactly one doc per near-dup cluster, splits partition
   * the kept corpus, and every transform is deterministic across runs.
   */
-class CorpusSpec extends SparkSpec {
+class CorpusSpec extends SparkSpec with CacheCheckedSpec {
 
   private val dir = "/root/testdata/sf0.001"
   private def docs = Tables.documents(spark, dir)
@@ -32,6 +32,8 @@ class CorpusSpec extends SparkSpec {
     assert(bySplit.values.sum == curated.count())
     // normalization really applied: no double spaces, no digit runs
     assert(curated.filter(col("norm").rlike("[0-9]|  ")).isEmpty)
+    curated.unpersist(); clusters.unpersist()
+    assertNoCachedPlans()
   }
 
   test("curate with the LongestText policy keeps each cluster's longest doc") {
@@ -49,7 +51,7 @@ class CorpusSpec extends SparkSpec {
       .filter(col("len") < col("max_len"))
     assert(shorter.isEmpty, "a keeper is shorter than a cluster-mate")
     curated.unpersist(); clusters.unpersist()
-    spark.catalog.clearCache()
+    assertNoCachedPlans()
   }
 
   test("dropped docs are exactly the non-head members of multi-doc clusters") {
@@ -96,7 +98,7 @@ class CorpusSpec extends SparkSpec {
       }.toSet
     assert(got == expected)
     assert(got.nonEmpty, "batch split produced no cross pairs — spec is vacuous")
-    spark.catalog.clearCache()
+    assertNoCachedPlans()
   }
 
   test("dupClusters: one action per round (convergence via observation) and caches released") {
@@ -127,7 +129,7 @@ class CorpusSpec extends SparkSpec {
         s"convergence must not pay a separate count action, saw $names")
     } finally spark.listenerManager.unregister(listener)
     // working set (shingles, signatures, edges) released before returning
-    assert(org.apache.spark.sql.graftbridge.CacheProbe.noCachedPlans(spark))
+    assertNoCachedPlans()
   }
 
   test("quality-gated curate == curate over the pre-filtered corpus") {
@@ -139,7 +141,7 @@ class CorpusSpec extends SparkSpec {
       .select("doc_id", "cluster_id", "split").collect().toSet
     assert(gated == prefiltered)
     assert(gated.nonEmpty)
-    spark.catalog.clearCache()
+    assertNoCachedPlans()
   }
 
   test("keeperPolicy applies a strategy to a hand-built cluster frame without rebuilding clusters") {
@@ -219,7 +221,7 @@ class CorpusSpec extends SparkSpec {
     assert(c2.select("split").distinct().count() >= 2)
 
     // batch 3 curated against BOTH segments; batch 2's text also gone
-    spark.catalog.clearCache()
+    assertNoCachedPlans()
     deleteTree(b2Path)
     val b3Path = s"$base/b3"
     docs.filter(col("doc_id") % 3 === 2).write.parquet(b3Path)
@@ -236,7 +238,7 @@ class CorpusSpec extends SparkSpec {
     assert(seg1Ids.subsetOf(surv2))
     assert((drop2 ++ drop3).nonEmpty,
       "no cross-batch or in-batch dups at this sf — spec is vacuous")
-    spark.catalog.clearCache()
+    assertNoCachedPlans()
   }
 
   private def deleteTree(path: String): Unit = {
@@ -276,7 +278,7 @@ class CorpusSpec extends SparkSpec {
     def pairsAgainst(paths: Seq[String]) = {
       val got = Corpus.dedupAgainstIndex(probe, paths, 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      spark.catalog.clearCache()
+      assertNoCachedPlans()
       got
     }
     val pN = pairsAgainst(segs)
@@ -286,7 +288,7 @@ class CorpusSpec extends SparkSpec {
     def curatedAgainst(paths: Seq[String], seg: String) = {
       val got = Corpus.curateIncremental(probe, paths, s"$base/$seg")
         .select("doc_id").collect().map(_.getLong(0)).toSet
-      spark.catalog.clearCache()
+      assertNoCachedPlans()
       got
     }
     assert(curatedAgainst(segs, "segA") ==

@@ -2,7 +2,7 @@ package graft.corpus
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{CacheCheckedSpec, SparkSpec}
 import graft.core.Tables
 
 /** Corpus.updateClusters — incremental cluster maintenance must EQUAL
@@ -11,7 +11,7 @@ import graft.core.Tables
   * on a hand-built graph whose cross-cluster merge is the case naive
   * assign-to-nearest gets wrong).
   */
-class IncrementalClusterSpec extends SparkSpec {
+class IncrementalClusterSpec extends SparkSpec with CacheCheckedSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -38,7 +38,7 @@ class IncrementalClusterSpec extends SparkSpec {
       .filter(col("parities") === 2)
     assert(!mixed.isEmpty, "no odd doc joined an even cluster — spec is vacuous")
     oldClusters.unpersist()
-    spark.catalog.clearCache()
+    assertNoCachedPlans()
   }
 
   test("a bridging new doc merges two old clusters; untouched clusters keep labels") {
@@ -76,6 +76,6 @@ class IncrementalClusterSpec extends SparkSpec {
     assert(gotMap(30L) == 30L && gotMap(40L) == 30L)
     // and the whole thing equals the full rebuild at the same threshold
     assert(rows(got) == rows(Corpus.dupClusters(old.unionByName(bridge), t)))
-    spark.catalog.clearCache()
+    assertNoCachedPlans()
   }
 }

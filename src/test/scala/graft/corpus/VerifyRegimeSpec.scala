@@ -2,8 +2,10 @@ package graft.corpus
 
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graftbridge.CacheProbe
+
 import graft.SparkSpec
-import graft.core.Tables
+import graft.core.{Caches, Tables}
 
 /** The r14 verify-regime dispatch ([[Corpus.dispatchVerifySets]] /
   * [[Corpus.verifyAgainstIndex]]): the regime choice may change the
@@ -36,31 +38,35 @@ class VerifyRegimeSpec extends SparkSpec {
     val cand = sh.select(col("doc_id").as("doc_a"))
       .orderBy("doc_a").limit(5)
       .withColumn("doc_b", col("doc_a"))
+    // the caches each regime leaves with its owner, counted inside the
+    // owner's scope from an empty start (withBudget clears after each)
+    spark.catalog.clearCache()
+    def cachedInScope[T](body: Caches => T): (T, Seq[String]) =
+      Caches.scoped { own => val r = body(own); (r, CacheProbe.cachedPlans(spark)) }
     // regime 1: whole-set broadcast — no caches created
     withBudget(Long.MaxValue) {
-      val (c, _, caches) = Corpus.dispatchVerifySets(
-        cand, Seq("doc_a", "doc_b"), sh, Corpus.setFrameBytes(sh))
+      val ((c, _), caches) = cachedInScope(own => Corpus.dispatchVerifySets(
+        cand, Seq("doc_a", "doc_b"), sh, Corpus.setFrameBytes(sh), own))
       assert(caches.isEmpty, "whole-set regime must not cache anything")
       assert(c eq cand, "whole-set regime must pass candidates through")
     }
     // regime 2: over budget on the full frame, pruned fits — candidate
     // and pruned frames cached
     withBudget(full - 1) {
-      val (_, _, caches) = Corpus.dispatchVerifySets(
-        cand, Seq("doc_a", "doc_b"), sh, full)
+      val (_, caches) = cachedInScope(own => Corpus.dispatchVerifySets(
+        cand, Seq("doc_a", "doc_b"), sh, full, own))
       assert(caches.size == 2,
-        s"pruned regime must cache candidates + pruned sets, got ${caches.size}")
-      caches.foreach(_.unpersist())
+        s"pruned regime must cache candidates + pruned sets, got $caches")
     }
     // regime 3: nothing fits — SMJ on the natural frames, candidates
-    // cached (the prune was attempted and measured)
+    // cached (the prune was attempted and measured, then released)
     withBudget(0L) {
-      val (_, side, caches) = Corpus.dispatchVerifySets(
-        cand, Seq("doc_a", "doc_b"), sh, full)
+      val ((_, side), caches) = cachedInScope(own => Corpus.dispatchVerifySets(
+        cand, Seq("doc_a", "doc_b"), sh, full, own))
       assert(side eq sh, "zero budget must fall back to the natural frame")
-      assert(caches.size == 1)
-      caches.foreach(_.unpersist())
+      assert(caches.size == 1, s"got $caches")
     }
+    assert(CacheProbe.noCachedPlans(spark), CacheProbe.leaked(spark))
   }
 
   test("x2/x4/x20/x10 are output-equal under every verify regime") {

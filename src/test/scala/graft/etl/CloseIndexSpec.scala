@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CacheProbe
 
 import graft.SparkSpec
+import graft.core.Caches
 
 /** The coerce-time row index and the close's cache ownership, on the
   * 4-core AQE test session:
@@ -78,8 +79,8 @@ class CloseIndexSpec extends SparkSpec {
     SampleData.write(raw, month, seed = 51L, scale = 100)
     val expected = sampleRows(100)
     tables.foreach { case (ts, file) =>
-      val audited = EtlIO.readCsvRawAudited(spark, s"$raw/$file", ts.schema, ts.name)
-      try {
+      Caches.scoped { own =>
+        val audited = EtlIO.readCsvRawAudited(spark, s"$raw/$file", ts.schema, ts.name, own)
         val keyCols = ts.orderKeys.map(k => col(Dq.rawCol(k)))
         val rows = withCloseAqe(Validator.coerce(audited.clean, ts)
           .select(col("__idx") +: keyCols: _*).collect())
@@ -93,7 +94,7 @@ class CloseIndexSpec extends SparkSpec {
         // natural-key order is the lexicographic order of the raw strings
         val keys = byIdx.map(r => (1 to ts.orderKeys.size).map(r.getString).mkString("\u0000")).toSeq
         assert(keys == keys.sorted, s"${ts.name}: __idx does not follow the natural keys")
-      } finally audited.parsed.unpersist()
+      }
     }
   }
 
@@ -131,7 +132,7 @@ class CloseIndexSpec extends SparkSpec {
         Pipeline.runMonth(spark, settings, month, s"$base/raw", s"$base/curated", s"$base/ref")
       }
     }
-    assert(CacheProbe.noCachedPlans(spark))
+    assert(CacheProbe.noCachedPlans(spark), CacheProbe.leaked(spark))
 
     val errors = spark.read.option("header", "true").csv(thrown.exceptionsPath)
       .filter(col("severity") === "ERROR")
@@ -177,13 +178,14 @@ class CloseIndexSpec extends SparkSpec {
     SampleData.write(s"$clean/raw", month)
     SampleData.writeChartOfAccounts(s"$clean/ref")
     Pipeline.runMonth(spark, settings, month, s"$clean/raw", s"$clean/curated", s"$clean/ref")
-    assert(CacheProbe.noCachedPlans(spark), "after a clean close")
+    assert(CacheProbe.noCachedPlans(spark), s"after a clean close: ${CacheProbe.leaked(spark)}")
 
     inject(s"$clean/raw/sales.csv", 1000, 0, 0, "not-a-date")
     intercept[Pipeline.DqGateFailedException] {
       Pipeline.runMonth(spark, settings, month, s"$clean/raw", s"$clean/rejected", s"$clean/ref")
     }
-    assert(CacheProbe.noCachedPlans(spark), "after a gate-rejected close")
+    assert(CacheProbe.noCachedPlans(spark),
+      s"after a gate-rejected close: ${CacheProbe.leaked(spark)}")
 
     val noFx = tmpDir("close_caches_fx")
     SampleData.write(s"$noFx/raw", month)
@@ -192,6 +194,7 @@ class CloseIndexSpec extends SparkSpec {
     intercept[Transform.MissingFxRatesException] {
       Pipeline.runMonth(spark, settings, month, s"$noFx/raw", s"$noFx/curated", s"$noFx/ref")
     }
-    assert(CacheProbe.noCachedPlans(spark), "after a missing-FX close")
+    assert(CacheProbe.noCachedPlans(spark),
+      s"after a missing-FX close: ${CacheProbe.leaked(spark)}")
   }
 }

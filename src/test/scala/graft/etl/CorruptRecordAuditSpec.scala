@@ -3,7 +3,8 @@ package graft.etl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
+import graft.{CacheCheckedSpec, SparkSpec}
+import graft.core.Caches
 
 /** Pins the audited-ingest contract (reference quality.py:98–115
   * philosophy: REPORT bad input — never crash on it, never silently
@@ -19,7 +20,7 @@ import graft.SparkSpec
   *  - through the pipeline, a dirty raw file fails the DQ gate with the
   *    corrupt line in the audit trail.
   */
-class CorruptRecordAuditSpec extends SparkSpec {
+class CorruptRecordAuditSpec extends SparkSpec with CacheCheckedSpec {
 
   private val jsonlSchema = StructType(Seq(
     StructField("a", LongType), StructField("b", StringType)))
@@ -35,30 +36,34 @@ class CorruptRecordAuditSpec extends SparkSpec {
       """{"a": 2, "b": "also ok"}""",
       """{not json at all""",
       """{"a": "not-a-long", "b": "typed wrong"}"""))
-    val (clean, ex) = EtlIO.readJsonlAudited(spark, p, jsonlSchema, "feed")
-    assert(clean.columns.toSeq == Seq("a", "b"))
-    assert(clean.orderBy("a").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      == Seq((1L, "ok"), (2L, "also ok")))
-    val exRows = ex.orderBy("failure_case").collect()
-    assert(exRows.length == 2)
-    assert(exRows.forall(_.getAs[String]("check") == "corrupt_record"))
-    assert(exRows.forall(_.getAs[String]("dataset") == "feed"))
-    assert(exRows.map(_.getAs[String]("failure_case")).toSet ==
-      Set("""{not json at all""", """{"a": "not-a-long", "b": "typed wrong"}"""))
-    // structurally unusable input is always ERROR — it must trip the gate
-    val sev = Dq.addSeverity(ex).select("severity").distinct().collect()
-    assert(sev.map(_.getString(0)).toSeq == Seq("ERROR"))
-    spark.catalog.clearCache()
+    Caches.scoped { own =>
+      val (clean, ex) = EtlIO.readJsonlAudited(spark, p, jsonlSchema, "feed", own)
+      assert(clean.columns.toSeq == Seq("a", "b"))
+      assert(clean.orderBy("a").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+        == Seq((1L, "ok"), (2L, "also ok")))
+      val exRows = ex.orderBy("failure_case").collect()
+      assert(exRows.length == 2)
+      assert(exRows.forall(_.getAs[String]("check") == "corrupt_record"))
+      assert(exRows.forall(_.getAs[String]("dataset") == "feed"))
+      assert(exRows.map(_.getAs[String]("failure_case")).toSet ==
+        Set("""{not json at all""", """{"a": "not-a-long", "b": "typed wrong"}"""))
+      // structurally unusable input is always ERROR — it must trip the gate
+      val sev = Dq.addSeverity(ex).select("severity").distinct().collect()
+      assert(sev.map(_.getString(0)).toSeq == Seq("ERROR"))
+    }
+    assertNoCachedPlans()
   }
 
   test("clean JSONL: zero corrupt exceptions, clean frame == unaudited read") {
     val p = s"${tmpDir("corrupt_jsonl_clean")}/in.jsonl"
     writeLines(p, Seq("""{"a": 1, "b": "x"}""", """{"a": 2, "b": "y"}"""))
-    val (clean, ex) = EtlIO.readJsonlAudited(spark, p, jsonlSchema, "feed")
-    assert(ex.isEmpty)
-    val plain = EtlIO.readJsonl(spark, p, jsonlSchema)
-    assert(clean.exceptAll(plain).isEmpty && plain.exceptAll(clean).isEmpty)
-    spark.catalog.clearCache()
+    Caches.scoped { own =>
+      val (clean, ex) = EtlIO.readJsonlAudited(spark, p, jsonlSchema, "feed", own)
+      assert(ex.isEmpty)
+      val plain = EtlIO.readJsonl(spark, p, jsonlSchema)
+      assert(clean.exceptAll(plain).isEmpty && plain.exceptAll(clean).isEmpty)
+    }
+    assertNoCachedPlans()
   }
 
   test("dirty CSV: a wrong-arity line is audited and excluded from the clean frame") {
@@ -70,14 +75,16 @@ class CorruptRecordAuditSpec extends SparkSpec {
       "1,one",
       "2,two,EXTRA-FIELD",
       "3,three"))
-    val EtlIO.AuditedCsv(clean, ex, _, _) = EtlIO.readCsvRawAudited(spark, p, schema, "csvfeed")
-    assert(clean.orderBy("x").collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      == Seq(("1", "one"), ("3", "three")))
-    val exRows = ex.collect()
-    assert(exRows.length == 1)
-    assert(exRows.head.getAs[String]("check") == "corrupt_record")
-    assert(exRows.head.getAs[String]("failure_case").contains("EXTRA-FIELD"))
-    spark.catalog.clearCache()
+    Caches.scoped { own =>
+      val EtlIO.AuditedCsv(clean, ex, _) = EtlIO.readCsvRawAudited(spark, p, schema, "csvfeed", own)
+      assert(clean.orderBy("x").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+        == Seq(("1", "one"), ("3", "three")))
+      val exRows = ex.collect()
+      assert(exRows.length == 1)
+      assert(exRows.head.getAs[String]("check") == "corrupt_record")
+      assert(exRows.head.getAs[String]("failure_case").contains("EXTRA-FIELD"))
+    }
+    assertNoCachedPlans()
   }
 
   test("pipeline: a dirty sales.csv fails the gate and the audit trail names the line") {

@@ -2,6 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graftbridge.CacheProbe
+
 import graft.SparkSpec
 
 /** Raw→curated end-to-end golden (VERDICT r1 gap #3): hand-written
@@ -16,7 +18,9 @@ import graft.SparkSpec
   * BiExport, pinning without the reference tree what GoldenParitySpec
   * and DqAuditGoldenSpec pin against it: dim surrogate keys, first
   * currency per entity, KPI margins, and the DQ audit and data
-  * dictionary bytes.
+  * dictionary bytes, and the dashboard's three chart inputs. A copy of
+  * the raw files with one ERROR and one WARN defect pins the rejected
+  * close's audit bytes.
   *
   * FX rates are binary-exact (1.25, 0.0004 & friends) so every expected
   * value is a hand-checkable 2-decimal number.
@@ -187,6 +191,70 @@ class RawToCuratedGoldenSpec extends SparkSpec {
       "dq_exceptions.csv columns=['dataset', 'index', 'column', 'check', " +
         "'failure_case', 'schema_context', 'check_number', 'severity']")
       .mkString("\n"))
+  }
+
+  test("the dashboard's chart inputs over the close are the hand-computed rows") {
+    val fact = spark.read.parquet(out.fact)
+    val dim = spark.read.parquet(out.dimAccounts)
+    val kpi = spark.read.parquet(out.kpi)
+    // Revenue per entity from the KPI test above: TLM 100.50 + 250.00,
+    // UPE 20.00
+    assert(Dashboard.topEntitiesByRevenue(kpi).collect()
+      .map(r => (r.getString(0), r.getDouble(1))).toSeq ==
+      Seq(("TLM", 350.50), ("UPE", 20.00)))
+    assert(Dashboard.kpiTrend(kpi, Seq("TLM", "UPE")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getDouble(3),
+        r.getDouble(4))).toSeq ==
+      Seq(("TLM", "2025-12", 350.50, 345.50, -654.50),
+        ("UPE", "2025-12", 20.00, 20.00, -587.75)))
+    // Σ|amount_base| over the Expense accounts: payroll 900.00 + 562.50,
+    // rent 100.00 (80 EUR · 1.25), travel 45.25; COGS is not Expense
+    assert(Dashboard.topExpenseAccounts(fact, dim).collect()
+      .map(r => (r.get(0).toString, r.getString(1), r.getDouble(2))).toSeq ==
+      Seq(("61000001", "Salaries & Wages", 1462.50), ("62000001", "Rent", 100.00),
+        ("63000001", "Travel & Subsistence", 45.25)))
+  }
+
+  test("a rejected close writes the hand-computed audit bytes and releases its caches") {
+    val base = tmpDir("raw_golden_defects")
+    writeRaw(s"$base/raw", tzsRates)
+    def patch(file: String, from: String, to: String): Unit = {
+      val p = java.nio.file.Paths.get(s"$base/raw/$file")
+      val text = java.nio.file.Files.readString(p)
+      assert(text.contains(from), s"$file has no '$from'")
+      java.nio.file.Files.writeString(p, text.replace(from, to))
+    }
+    // ERROR: INV-002's date does not parse (a dtype failure on a key column)
+    patch("sales.csv", "2025-12-06,TLM,INV-002", "not-a-date,TLM,INV-002")
+    // WARN: E-002's deductions are negative (ge 0 on a non-key column);
+    // net moves with them so the payroll identity still holds
+    patch("payroll.csv", "2025-12,UPE,E-002,EUR,500,50,450", "2025-12,UPE,E-002,EUR,500,-50,550")
+    SampleData.writeChartOfAccounts(s"$base/ref")
+    spark.catalog.clearCache() // start from an empty cache, whatever ran before
+    val thrown = intercept[Pipeline.DqGateFailedException] {
+      Pipeline.runMonth(spark, Settings(), "2025-12",
+        s"$base/raw", s"$base/curated", s"$base/ref", FailOn.Error)
+    }
+    assert(CacheProbe.noCachedPlans(spark), CacheProbe.leaked(spark))
+    def bytes(path: String): String =
+      java.nio.file.Files.readString(java.nio.file.Paths.get(path))
+    // rows sort by (dataset, check, index); both defects sit on row 1 of
+    // their table's natural-key order ((TLM, INV-002); (UPE, E-002)), and
+    // a null check_number is an empty field
+    assert(bytes(thrown.exceptionsPath) ==
+      """dataset,index,column,check,failure_case,schema_context,check_number,severity
+        |payroll,1,deductions,greater_than_or_equal_to(0.0),-50.0,Column,,WARN
+        |sales,1,date,dtype('date'),not-a-date,Column,,ERROR
+        |""".stripMargin)
+    // fail-on error: only the ERROR fails its dataset
+    assert(bytes(thrown.summaryPath) ==
+      """dataset,error_count,warn_count,issue_count,status
+        |sales,1,0,1,FAIL
+        |expenses,0,0,0,PASS
+        |payroll,0,1,1,PASS
+        |inventory_movements,0,0,0,PASS
+        |fx_rates,0,0,0,PASS
+        |""".stripMargin)
   }
 
   test("missing FX rate fail-fasts listing the exact (date, currency) pairs") {

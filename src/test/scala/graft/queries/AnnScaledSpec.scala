@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.Caches
 import graft.functions.MoneyFunctions._
 
 /** The r16 scaled-k quantizer rung: k = ⌈√n⌉ turns the ANN family's
@@ -62,7 +63,7 @@ class AnnScaledSpec extends SparkSpec {
     val k = SimilarityQueries.scaledK(e.count())
     assert(k > SimilarityQueries.INLINE_K,
       s"sf0.01 must exercise the bulk path: k=$k")
-    val cents = SimilarityQueries.trainedCentroids(e, k = k)
+    val cents = SimilarityQueries.trainedCentroids(e, Caches.Harness, k = k)
     val rel = relationalAssign(e, cents)
     val ker = kernelAssign(e, cents)
     assert(ker.size == rel.size && ker == rel,
@@ -71,13 +72,13 @@ class AnnScaledSpec extends SparkSpec {
 
   test("NearestCentroid equals the literal-inlined form on the same k=8 table") {
     val e = vecsOf("/root/testdata/sf0.01")
-    val cents = SimilarityQueries.trainedCentroids(e)
+    val cents = SimilarityQueries.trainedCentroids(e, Caches.Harness)
     // production inline path (k = 8 ≤ INLINE_K)
     val inline = SimilarityQueries.assignNearest(e, cents)
       .select("cand_id", "centroid_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     spark.catalog.clearCache()
-    val ker = kernelAssign(e, SimilarityQueries.trainedCentroids(e))
+    val ker = kernelAssign(e, SimilarityQueries.trainedCentroids(e, Caches.Harness))
     assert(inline == ker,
       "inline and kernel assignments diverged on the same centroid table")
   }
