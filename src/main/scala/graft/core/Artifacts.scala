@@ -5,6 +5,9 @@ import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
 /** Process-wide store for derived artifacts (posting and LSH indexes,
   * trained quantizers, BPE merge tables, cluster tables) and for scalar
   * statistics measured over them. Entries are keyed by (family, input
@@ -29,16 +32,26 @@ import scala.jdk.CollectionConverters._
   * session per process (Verify, Bench, CLI, tests). A JVM whose sessions
   * differ in confs that change a build's output would need the session
   * in the key.
+  *
+  * An artifact built from a DataFrame rather than from a table
+  * ([[frameDir]]) is keyed by everything it was built from: the
+  * fingerprints of its table inputs, the frame's input-file listing and
+  * the frame's analyzed plan, compared with `sameResult` against the
+  * plan of the build (a plan hash alone can collide).
   */
 object Artifacts {
   private type Fingerprint = Vector[(String, Long, Long)]
 
-  /** one key's state; read and written only under its own monitor */
-  private final class Slot { var fp: Fingerprint = null; var value: Any = null }
+  /** one key's state; read and written only under its own monitor.
+    * `plan` is the analyzed plan of a [[frameDir]] build, else null.
+    */
+  private final class Slot {
+    var fp: Any = null; var plan: LogicalPlan = null; var value: Any = null
+  }
 
-  /** (family, absolute input, None for the dir | Some(statistic key)) */
+  /** (family, kind, absolute inputs and parameters of the slot) */
   private val slots =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Option[String]), Slot]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Seq[String]), Slot]()
   private val trainSecs = scala.collection.mutable.TreeMap.empty[String, Double]
 
   private lazy val root: Path = {
@@ -51,39 +64,84 @@ object Artifacts {
     * (which writes into the dir it is given) on first use and again
     * whenever the input's fingerprint has changed.
     */
-  def dir(family: String, input: String)(build: String => Unit): String =
-    memo[String](family, input, None) { old =>
-      val p = Files.createTempDirectory(root, family + "_")
-      val t0 = System.nanoTime()
-      var built = false
-      try { build(p.toString); built = true }
-      finally if (!built) Scratch.deleteTree(p)
-      val sec = (System.nanoTime() - t0) / 1e9
-      trainSecs.synchronized(trainSecs(family) = trainSecs.getOrElse(family, 0.0) + sec)
-      old.foreach(o => Scratch.deleteTree(Paths.get(o)))
-      p.toString
-    }
+  def dir(family: String, input: String)(build: String => Unit): String = {
+    val abs = absolute(input)
+    memo[String](family, "dir", Seq(abs), fingerprint(Paths.get(abs)), None)(
+      buildDir(family, build))
+  }
+
+  /** the directory of `family`'s artifact built from the frame `from`,
+    * the tables under `inputs` and `param`. There is one slot per
+    * (family, param): a call with other tables, or whose frame has
+    * another plan or reads other files, rebuilds into a fresh dir and
+    * deletes the previous one. Disk use is thus bounded by one artifact
+    * per slot, also for a rolling ingest whose table list grows by one
+    * segment per batch.
+    */
+  def frameDir(family: String, from: DataFrame, inputs: Seq[String], param: String)(
+      build: String => Unit): String = {
+    val abs = inputs.map(absolute)
+    val plan = from.queryExecution.analyzed
+    memo[String](family, "frame", Seq(param),
+      (abs.map(a => (a, fingerprint(Paths.get(a)))), fileListing(from)), Some(plan))(
+      buildDir(family, build))
+  }
 
   /** a scalar computed over `family`'s artifact on `input`, memoized per
     * `key` under the same fingerprint rule as [[dir]].
     */
-  def value[V](family: String, input: String, key: String)(compute: => V): V =
-    memo[V](family, input, Some(key))(_ => compute)
+  def value[V](family: String, input: String, key: String)(compute: => V): V = {
+    val abs = absolute(input)
+    memo[V](family, "value", Seq(abs, key), fingerprint(Paths.get(abs)), None)(_ => compute)
+  }
 
   /** accumulated build seconds per family, sorted by family */
   def trainSeconds: Seq[(String, Double)] = trainSecs.synchronized(trainSecs.toSeq)
 
-  private def memo[V](family: String, input: String, key: Option[String])(
-      make: Option[V] => V): V = {
-    val abs = Paths.get(input).toAbsolutePath.normalize
-    val slot = slots.computeIfAbsent((family, abs.toString, key), _ => new Slot)
+  /** builds into a fresh dir, records the build seconds and deletes
+    * the dir it replaces; a failed build leaves no dir behind
+    */
+  private def buildDir(family: String, build: String => Unit)(old: Option[String]): String = {
+    val p = Files.createTempDirectory(root, family + "_")
+    val t0 = System.nanoTime()
+    var built = false
+    try { build(p.toString); built = true }
+    finally if (!built) Scratch.deleteTree(p)
+    val sec = (System.nanoTime() - t0) / 1e9
+    trainSecs.synchronized(trainSecs(family) = trainSecs.getOrElse(family, 0.0) + sec)
+    old.foreach(o => Scratch.deleteTree(Paths.get(o)))
+    p.toString
+  }
+
+  private def absolute(input: String): String =
+    Paths.get(input).toAbsolutePath.normalize.toString
+
+  /** the slot's value, remade when the fingerprint (read under the
+    * slot's lock) or the plan differs from the ones it was made from
+    */
+  private def memo[V](family: String, kind: String, id: Seq[String], fp: => Any,
+      plan: Option[LogicalPlan])(make: Option[V] => V): V = {
+    val slot = slots.computeIfAbsent((family, kind, id), _ => new Slot)
     slot.synchronized {
-      val fp = fingerprint(abs)
-      if (slot.fp != fp) {
+      val now = fp
+      if (slot.fp != now || !plan.forall(slot.plan.sameResult)) {
         slot.value = make(Option(slot.value).map(_.asInstanceOf[V]))
-        slot.fp = fp
+        slot.fp = now
+        slot.plan = plan.orNull
       }
       slot.value.asInstanceOf[V]
+    }
+  }
+
+  /** sorted (uri, size, mtime in ms) of every file `df` reads; empty for
+    * a frame over no files (a local relation's rows are in its plan)
+    */
+  private def fileListing(df: DataFrame): Fingerprint = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    df.inputFiles.toVector.sorted.map { uri =>
+      val p = new org.apache.hadoop.fs.Path(uri)
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      (uri, st.getLen, st.getModificationTime)
     }
   }
 

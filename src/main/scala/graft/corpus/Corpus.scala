@@ -3,7 +3,7 @@ package graft.corpus
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-import graft.core.Caches
+import graft.core.{Artifacts, Caches}
 import graft.functions.{JaccardSimilarity, MinHashFamily}
 
 /** Reusable corpus-curation transforms over a documents DataFrame
@@ -478,7 +478,9 @@ object Corpus {
     * already encoded in the labels), new edges are (a) batch×index
     * pairs from the persisted LSH segments ([[dedupAgainstIndex]]:
     * candidates scale with the batch, never index×index) and (b)
-    * in-batch pairs ([[nearDupPairs]] on the batch alone). Connected
+    * in-batch pairs ([[nearDupPairs]] on the batch alone), both read
+    * from [[verifiedEdges]], which a preceding [[curateIncremental]] on
+    * the same batch, index and threshold has already built. Connected
     * components then run ONLY over the affected subgraph — the batch
     * plus the old labels an edge actually touches; every untouched
     * cluster passes through label-unchanged without entering the
@@ -498,20 +500,19 @@ object Corpus {
       indexPaths: Seq[String],
       threshold: Double = 0.5): (DataFrame, Int) = Caches.scoped { own =>
     val oldLab = oldClusters.select(col("doc_id"), col("cluster_id"))
-    // ONE shingled+cached batch frame feeds both pair stages (the
-    // cross-edge probe against the index and the in-batch self-pairs) —
-    // each previously re-shingled the same documents independently
-    val shNew = shingleSets(newDocs, own)
+    // the batch is shingled only when the edges are not already built
+    // (a preceding curateIncremental on the same batch built them)
+    val edges = verifiedEdges(newDocs, shingleSets(newDocs, own), indexPaths,
+      threshold, own)
     // cached: crossEdges has TWO materializing consumers in different
     // ACTIONS — the CC seed checkpoint (through touched/nodes) and the
     // CC edge-table cache build — and exchange reuse never crosses an
-    // action boundary, so the whole batch×index probe join would run
-    // twice. Two-long rows.
-    val crossEdges = own(dedupAgainstIndexFrom(shNew, indexPaths, threshold)
-      .join(oldLab.withColumnRenamed("doc_id", "index_id"), "index_id")
+    // action boundary, so its join would run twice. Two-long rows.
+    val crossEdges = own(edges.filter(!col("in_batch"))
+      .join(oldLab.withColumnRenamed("doc_id", "other_id"), "other_id")
       .select(col("new_id").as("a"), col("cluster_id").as("b")))
-    val batchEdges = nearDupPairsFrom(shNew, threshold, own)
-      .select(col("doc_a").as("a"), col("doc_b").as("b"))
+    val batchEdges = edges.filter(col("in_batch"))
+      .select(col("other_id").as("a"), col("new_id").as("b"))
     val touched = crossEdges.select(col("b").as("id")).distinct()
     val nodes = touched
       .union(newDocs.select(col("doc_id").as("id"))).distinct()
@@ -939,6 +940,41 @@ object Corpus {
       .localCheckpoint()
   }
 
+  /** The verified edges of a batch (new_id, other_id, in_batch) at
+    * `threshold`: its matches against the index segments (other_id =
+    * index_id, the [[dedupAgainstIndex]] pairs) and its in-batch pairs
+    * (other_id < new_id, the [[nearDupPairs]] pairs). Both come from the
+    * band joins over the batch's signatures and the exact Jaccard verify
+    * at 6 dp.
+    *
+    * The daily batch runs [[curateIncremental]] and then
+    * [[updateClustersWithStats]] on the same batch, index and threshold;
+    * both read the edges through one [[Artifacts.frameDir]] slot per
+    * threshold, so the second call reads what the first built. The key
+    * covers everything the edges are built from: the index paths and
+    * their segments' file fingerprints, the batch's input files and its
+    * plan, so a rewritten batch, a quality-gated batch, another index or
+    * a rewritten segment rebuilds, and the build deletes the edges it
+    * replaces. `sh`, the batch's shingle sets, is only read on a build.
+    * The returned frame reads the artifact dir: a caller whose result
+    * must outlive the next batch checkpoints what it derives from it.
+    */
+  private def verifiedEdges(batch: DataFrame, sh: => DataFrame,
+      indexPaths: Seq[String], threshold: Double, own: Caches): DataFrame = {
+    val dir = Artifacts.frameDir("incremental_edges", batch, indexPaths,
+        threshold.toString) { out =>
+      val sets = sh
+      val cross = dedupAgainstIndexFrom(sets, indexPaths, threshold)
+        .select(col("new_id"), col("index_id").as("other_id"),
+          lit(false).as("in_batch"))
+      val inBatch = nearDupPairsFrom(sets, threshold, own)
+        .select(col("doc_b").as("new_id"), col("doc_a").as("other_id"),
+          lit(true).as("in_batch"))
+      graft.etl.EtlIO.writeParquet(cross.unionByName(inBatch), out)
+    }
+    batch.sparkSession.read.parquet(dir)
+  }
+
   /** the lazy [[dedupAgainstIndex]] frame over [[shingleSets]] (see
     * [[nearDupPairsFrom]] — the shared-batch path).
     */
@@ -960,11 +996,13 @@ object Corpus {
   // ---- text canonicalization + splits ------------------------------------
 
   /** ingest canonicalization: lowercase, redact number runs, collapse
-    * whitespace, trim — adds `norm` (narrow codegen'd regex maps).
+    * whitespace, trim — adds `norm` (narrow codegen'd regex maps). The
+    * lowercase is [[graft.functions.Lowercase]], equal to Spark's `lower`
+    * without its first-call ICU table build.
     */
   def normalize(docs: DataFrame): DataFrame =
     docs.withColumn("norm", trim(regexp_replace(regexp_replace(
-      lower(col("text")), "[0-9]+", "<num>"), " +", " ")))
+      graft.functions.Lowercase(col("text")), "[0-9]+", "<num>"), " +", " ")))
 
   /** Gopher/C4-style quality-filter signals, one narrow codegen'd pass:
     * word count, duplicate-word fraction (repetition), numeric-character
@@ -1152,7 +1190,9 @@ object Corpus {
     * the SURVIVORS' signatures + shingles as a new immutable index
     * segment under `appendSegmentPath`, so the next batch's `indexPaths`
     * is simply this one plus that path. One shingle/signature build
-    * feeds the index probe, the in-batch check AND the appended segment.
+    * feeds the index probe, the in-batch check AND the appended segment;
+    * the verified pairs stay available to a following
+    * [[updateClustersWithStats]] on the same batch ([[verifiedEdges]]).
     *
     * The segment write runs eagerly (it is the call's side effect); the
     * returned curated batch is lazy over `newDocs` and the checkpointed
@@ -1162,50 +1202,22 @@ object Corpus {
   def curateIncremental(newDocs: DataFrame, indexPaths: Seq[String],
       appendSegmentPath: String, threshold: Double = 0.5,
       qualityGate: Boolean = false): DataFrame = Caches.scoped { own =>
-    val spark = newDocs.sparkSession
     val base =
       if (qualityGate) qualitySignals(newDocs).filter(col("keep"))
         .select(newDocs.columns.toIndexedSeq.map(col): _*)
       else newDocs
     val sh = shingleSets(base, own)
     val sig = own(bandSignatures(sh))
-    // vs the existing corpus: band-join candidates, exact verify
-    val idxCand = sig.as("a")
-      .join(readIndexSignatures(spark, indexPaths).as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_key") === col("b.band_key"))
-      .select(col("a.doc_id").as("new_id"), col("b.doc_id").as("index_id"))
-      .dropDuplicates("new_id", "index_id")
-    val idxMatches = verifyAgainstIndex(
-      idxCand.join(sh.select(col("doc_id").as("new_id"), col("sh").as("sha")),
-        Seq("new_id")),
-      readIndexShingles(spark, indexPaths), threshold)
-      .select(col("new_id").as("doc_id")).distinct()
-    // within the batch: same band equi-join on the batch's own
-    // signatures, drop the higher id of each verified pair (min id of
-    // every in-batch dup group always survives)
-    val batchCand = sig.as("a").join(sig.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("keep_id"), col("b.doc_id").as("new_id"))
-      .dropDuplicates("keep_id", "new_id")
-    val batchLosers = batchCand
-      .join(sh.select(col("doc_id").as("new_id"), col("sh").as("sha")), Seq("new_id"))
-      .join(sh.select(col("doc_id").as("keep_id"), col("sh").as("shb")), Seq("keep_id"))
-      .withColumn("jaccard",
-        graft.functions.MoneyFunctions.roundAt(
-          JaccardSimilarity(col("sha"), col("shb")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_id").as("doc_id")).distinct()
-    // checkpointed: dropIds has THREE materializing consumers in
+    // the batch's verified edges (index matches and in-batch pairs); a
+    // doc is dropped when it is the higher id of any of them, so the min
+    // id of every in-batch dup group survives.
+    // Checkpointed: dropIds has THREE materializing consumers in
     // different ACTIONS — the two segment writes below and the caller's
-    // terminal action on the returned curated frame — and exchange reuse
-    // never crosses an action boundary, so the whole candidate+verify
-    // chain (band joins, jaccard verifies, distincts) would run three
-    // times per ingest. One-long rows (loser doc_ids only), and the
-    // returned frame outlives the sh/sig caches it is computed from.
-    val dropIds = idxMatches.union(batchLosers).distinct().localCheckpoint()
+    // terminal action on the returned curated frame. One-long rows
+    // (loser doc_ids only), and the returned frame outlives the sh/sig
+    // caches and the edge artifact, which the next batch's build deletes.
+    val dropIds = verifiedEdges(base, sh, indexPaths, threshold, own)
+      .select(col("new_id").as("doc_id")).distinct().localCheckpoint()
     val survivors = base.join(dropIds, Seq("doc_id"), "left_anti")
     val survivorIds = survivors.select("doc_id")
     graft.etl.EtlIO.writePartitionedParquet(

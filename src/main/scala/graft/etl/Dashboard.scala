@@ -37,29 +37,47 @@ object Dashboard {
   def topExpenseAccounts(fact: DataFrame, dimAccounts: DataFrame, k: Int = 15): DataFrame =
     fact.join(broadcast(dimAccounts.select("account_code", "account_name", "account_type")),
         Seq("account_code"), "left")
-      .filter(lower(col("account_type")) === "expense")
+      .filter(graft.functions.Lowercase(col("account_type")) === "expense")
       .groupBy("account_code", "account_name")
       .agg(bround(sum(abs(col("amount_base"))), 2).as("total_abs_amount"))
       .orderBy(col("total_abs_amount").desc, col("account_code"))
       .limit(k)
 
+  /** `s` with `& < > " '` as character references: cells, headers and
+    * labels carry raw input (a corrupt record's line, account names such
+    * as `Salaries & Wages`), which must not be able to break the page
+    */
+  private def escape(s: String): String = {
+    val b = new StringBuilder(s.length)
+    s.foreach {
+      case '&' => b ++= "&amp;"
+      case '<' => b ++= "&lt;"
+      case '>' => b ++= "&gt;"
+      case '"' => b ++= "&quot;"
+      case '\'' => b ++= "&#39;"
+      case c => b += c
+    }
+    b.toString
+  }
+
   private def htmlTable(title: String, header: Seq[String], rows: Seq[Seq[String]]): String = {
-    val head = header.map(h => s"<th>$h</th>").mkString
-    val body = rows.map(r => r.map(c => s"<td>$c</td>").mkString("<tr>", "", "</tr>")).mkString("\n")
-    s"<h2>$title</h2>\n<table border='1' cellspacing='0' cellpadding='4'>\n<tr>$head</tr>\n$body\n</table>"
+    val head = header.map(h => s"<th>${escape(h)}</th>").mkString
+    val body = rows.map(r => r.map(c => s"<td>${escape(c)}</td>").mkString("<tr>", "", "</tr>"))
+      .mkString("\n")
+    s"<h2>${escape(title)}</h2>\n<table border='1' cellspacing='0' cellpadding='4'>\n<tr>$head</tr>\n$body\n</table>"
   }
 
   private def svgBars(title: String, labeled: Seq[(String, Double)]): String = {
-    if (labeled.isEmpty) return s"<h2>$title</h2><p>no data</p>"
+    if (labeled.isEmpty) return s"<h2>${escape(title)}</h2><p>no data</p>"
     val maxV = labeled.map(v => math.abs(v._2)).max.max(1e-9)
     val bars = labeled.zipWithIndex.map { case ((label, v), i) =>
       val w = (math.abs(v) / maxV * 600).toInt
       val y = i * 22
       s"""<rect x="160" y="$y" width="$w" height="18" fill="#4878a8"/>
-         |<text x="0" y="${y + 13}" font-size="12">$label</text>
+         |<text x="0" y="${y + 13}" font-size="12">${escape(label)}</text>
          |<text x="${165 + w}" y="${y + 13}" font-size="11">${"%,.2f".format(v)}</text>""".stripMargin
     }.mkString("\n")
-    s"""<h2>$title</h2>
+    s"""<h2>${escape(title)}</h2>
        |<svg width="820" height="${labeled.size * 22 + 4}" xmlns="http://www.w3.org/2000/svg">
        |$bars
        |</svg>""".stripMargin
@@ -104,8 +122,8 @@ object Dashboard {
         exRows.headOption.map(_.schema.fieldNames.toSeq).getOrElse(Seq("none")), rowsOf(exRows)))
 
     s"""<!DOCTYPE html>
-       |<html><head><meta charset="utf-8"><title>Monthly close — $month</title></head>
-       |<body><h1>Monthly close dashboard — $month</h1>
+       |<html><head><meta charset="utf-8"><title>Monthly close — ${escape(month)}</title></head>
+       |<body><h1>Monthly close dashboard — ${escape(month)}</h1>
        |${sections.mkString("\n<hr>\n")}
        |</body></html>""".stripMargin
   }

@@ -159,7 +159,7 @@ object Dq {
     * substring fires for the strict-header `column_required` check.
     */
   def addSeverity(exceptions: DataFrame): DataFrame = {
-    val checkLower = lower(col("check"))
+    val checkLower = graft.functions.Lowercase(col("check"))
     exceptions.withColumn("severity",
       when(col("column").isin(errorColumns: _*), "ERROR")
         .when(col("dataset") === "fx_rates", "ERROR")

@@ -129,4 +129,51 @@ class ArtifactsSpec extends SparkSpec {
     assert(failedDir.nonEmpty && !Files.exists(Paths.get(failedDir)))
     assert(sumOf(sumArtifact("spec_fail", in)) == 5L)
   }
+
+  test("a frame artifact is keyed by the frame's plan and files, its tables and its parameter") {
+    val base = tmpDir("artifacts_frame")
+    val (in, table) = (s"$base/batch.parquet", s"$base/index.parquet")
+    writeIds(in, Seq(1L, 2L, 3L))
+    writeIds(table, Seq(100L))
+    val builds = new AtomicInteger
+    def edges(frame: org.apache.spark.sql.DataFrame, param: String = "0.5",
+        tables: Seq[String] = Seq(table)): String =
+      Artifacts.frameDir("spec_frame", frame, tables, param) { p =>
+        builds.incrementAndGet()
+        frame.agg(sum("id").as("s")).write.mode("overwrite").parquet(p)
+      }
+    val first = edges(spark.read.parquet(in))
+    assert(sumOf(first) == 6L)
+    // a second read of the same files is the same plan: served
+    assert(edges(spark.read.parquet(in)) == first && builds.get == 1)
+
+    // rewriting the frame's files in place rebuilds and deletes the stale dir
+    writeIds(in, Seq(10L, 11L))
+    val second = edges(spark.read.parquet(in))
+    assert(builds.get == 2 && sumOf(second) == 21L)
+    assert(!Files.exists(Paths.get(first)), s"stale artifact $first still on disk")
+
+    // another plan over the same files takes the slot over
+    val third = edges(spark.read.parquet(in).filter(col("id") > 10L))
+    assert(builds.get == 3 && sumOf(third) == 11L && !Files.exists(Paths.get(second)))
+
+    // rewriting a table input rebuilds too
+    val fourth = edges(spark.read.parquet(in))
+    writeIds(table, Seq(200L))
+    val fifth = edges(spark.read.parquet(in))
+    assert(builds.get == 5 && fifth != fourth && !Files.exists(Paths.get(fourth)))
+
+    // another table list takes the slot over (a rolling ingest adds one
+    // segment per batch)
+    val grown = edges(spark.read.parquet(in), tables = Seq(table, in))
+    assert(builds.get == 6 && !Files.exists(Paths.get(fifth)))
+    val sixth = edges(spark.read.parquet(in))
+    assert(builds.get == 7 && !Files.exists(Paths.get(grown)))
+
+    // another parameter is another slot: both artifacts are kept
+    val other = edges(spark.read.parquet(in), "0.45")
+    assert(builds.get == 8 && other != sixth)
+    assert(edges(spark.read.parquet(in)) == sixth && edges(spark.read.parquet(in), "0.45") == other)
+    assert(builds.get == 8 && Files.exists(Paths.get(sixth)))
+  }
 }

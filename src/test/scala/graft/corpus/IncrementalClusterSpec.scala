@@ -1,15 +1,21 @@
 package graft.corpus
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.{CacheCheckedSpec, SparkSpec}
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
+import graft.etl.EtlIO
 
 /** Corpus.updateClusters — incremental cluster maintenance must EQUAL
   * the full rebuild (the x29 oracle pins this against the recursive
   * closure at sf0.01; here it's pinned on the real sf0.001 corpus and
   * on a hand-built graph whose cross-cluster merge is the case naive
-  * assign-to-nearest gets wrong).
+  * assign-to-nearest gets wrong). The daily-batch cases pin that
+  * curateIncremental and updateClusters on the same batch, index and
+  * threshold build the verified edges once, and that any change to what
+  * the edges were built from rebuilds them.
   */
 class IncrementalClusterSpec extends SparkSpec with CacheCheckedSpec {
 
@@ -76,6 +82,92 @@ class IncrementalClusterSpec extends SparkSpec with CacheCheckedSpec {
     assert(gotMap(30L) == 30L && gotMap(40L) == 30L)
     // and the whole thing equals the full rebuild at the same threshold
     assert(rows(got) == rows(Corpus.dupClusters(old.unionByName(bridge), t)))
+    assertNoCachedPlans()
+  }
+
+  /** seconds spent building verified-edge artifacts so far: it grows
+    * exactly when a call builds the edges
+    */
+  private def edgeBuildSec: Double =
+    Artifacts.trainSeconds.toMap.getOrElse("incremental_edges", 0.0)
+
+  /** the sf0.001 corpus split as the daily batch sees it: the even ids
+    * indexed (LSH segment + their clusters at `t`), the odd ids the new
+    * batch, written to parquet as a day's input is
+    */
+  private final class Day(t: Double) {
+    val docs = Tables.documents(spark, dir)
+    val base = tmpDir("inc_edges")
+    val index = Seq(s"$base/index")
+    val batchPath = s"$base/batch.parquet"
+    Corpus.writeLshIndex(docs.filter(col("doc_id") % 2 === 0), index.head)
+    EtlIO.writeParquet(Corpus.dupClusters(docs.filter(col("doc_id") % 2 === 0), t)
+      .select("doc_id", "cluster_id"), s"$base/clusters.parquet")
+    writeBatch()
+    def writeBatch(): Unit =
+      EtlIO.writeParquet(docs.filter(col("doc_id") % 2 =!= 0), batchPath)
+    def batch = spark.read.parquet(batchPath)
+    def old = spark.read.parquet(s"$base/clusters.parquet")
+    def curate(gate: Boolean = false): Long = Corpus.curateIncremental(batch, index,
+      s"$base/segment", 0.5, qualityGate = gate).count()
+    def update(threshold: Double): org.apache.spark.sql.DataFrame =
+      Corpus.updateClusters(old, batch, index, threshold)
+    def full = Corpus.dupClusters(docs, t)
+  }
+
+  test("curate then update on the same batch builds the verified edges once") {
+    val day = new Day(0.5)
+    val before = edgeBuildSec
+    assert(day.curate() > 0L)
+    val built = edgeBuildSec
+    assert(built > before, "curateIncremental did not build the edges")
+    val got = day.update(0.5)
+    assert(edgeBuildSec == built, "updateClusters rebuilt the edges curate built")
+    assert(rows(got) == rows(day.full))
+    assertNoCachedPlans()
+  }
+
+  test("rewriting the batch between curate and update rebuilds the edges") {
+    val day = new Day(0.5)
+    day.curate()
+    val root = java.nio.file.Paths.get(
+      Artifacts.dir("spec_root", day.batchPath)(_ => ())).getParent
+    def edgeDirs: Set[String] = {
+      val ls = java.nio.file.Files.list(root)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("incremental_edges_")).toSet
+      finally ls.close()
+    }
+    val dirsBefore = edgeDirs
+    val built = edgeBuildSec
+    day.writeBatch()
+    val got = day.update(0.5)
+    assert(edgeBuildSec > built, "a rewritten batch was served the old edges")
+    val dirsAfter = edgeDirs
+    // the slot's previous edges were replaced: one dir gone, one new
+    assert(dirsAfter.size == dirsBefore.size && (dirsBefore -- dirsAfter).size == 1,
+      s"before $dirsBefore, after $dirsAfter")
+    assert(rows(got) == rows(day.full))
+    assertNoCachedPlans()
+  }
+
+  test("a quality-gated curate does not serve an update of the ungated batch") {
+    val day = new Day(0.5)
+    day.curate(gate = true)
+    val built = edgeBuildSec
+    val got = day.update(0.5)
+    assert(edgeBuildSec > built, "the gated batch's edges served the ungated batch")
+    assert(rows(got) == rows(day.full))
+    assertNoCachedPlans()
+  }
+
+  test("an update at another threshold rebuilds the edges") {
+    val day = new Day(0.45)
+    day.curate()
+    val built = edgeBuildSec
+    val got = day.update(0.45)
+    assert(edgeBuildSec > built, "the 0.5 edges served a 0.45 update")
+    assert(rows(got) == rows(day.full))
     assertNoCachedPlans()
   }
 }

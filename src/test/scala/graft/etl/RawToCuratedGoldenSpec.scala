@@ -257,6 +257,33 @@ class RawToCuratedGoldenSpec extends SparkSpec {
         |""".stripMargin)
   }
 
+  test("the dashboard escapes the corrupt input line of a close the gate would reject") {
+    val base = tmpDir("raw_golden_html")
+    writeRaw(s"$base/raw", tzsRates)
+    val corrupt = "2025-12-13,TLM,INV-004,40000001,USD,1.00,<b>&</b>,extra"
+    val sales = java.nio.file.Paths.get(s"$base/raw/sales.csv")
+    java.nio.file.Files.writeString(sales,
+      java.nio.file.Files.readString(sales) + corrupt + "\n")
+    SampleData.writeChartOfAccounts(s"$base/ref")
+    // the corrupt line is an ERROR, which rejects the close under the
+    // default fail-on; fail-on never writes the outputs anyway
+    val out = Pipeline.runMonth(spark, Settings(), "2025-12",
+      s"$base/raw", s"$base/curated", s"$base/ref", FailOn.Never)
+    val csv = spark.read.option("header", "true")
+    assert(csv.csv(out.dqSummary).filter(col("dataset") === "sales")
+      .select("error_count").collect().map(_.getString(0)).toSeq == Seq("1"))
+    val html = Dashboard.buildHtml(spark,
+      spark.read.parquet(out.fact), spark.read.parquet(out.dimAccounts),
+      spark.read.parquet(out.kpi), csv.csv(out.dqExceptions), csv.csv(out.dqSummary),
+      "2025-12")
+    assert(html.contains(
+      "<td>2025-12-13,TLM,INV-004,40000001,USD,1.00,&lt;b&gt;&amp;&lt;/b&gt;,extra</td>"))
+    assert(!html.contains("<b>") && !html.contains("&</b>"))
+    // account names reach the SVG labels escaped too
+    assert(html.contains(">61000001 Salaries &amp; Wages</text>"))
+    assert(!html.contains("Salaries & Wages"))
+  }
+
   test("missing FX rate fail-fasts listing the exact (date, currency) pairs") {
     val base = tmpDir("raw_golden_missing_fx")
     writeRaw(s"$base/raw", tzsRates.tail) // drop the 2025-12-07 TZS rate
