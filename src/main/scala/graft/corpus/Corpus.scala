@@ -478,14 +478,15 @@ object Corpus {
     * already encoded in the labels), new edges are (a) batch×index
     * pairs from the persisted LSH segments ([[dedupAgainstIndex]]:
     * candidates scale with the batch, never index×index) and (b)
-    * in-batch pairs ([[nearDupPairs]] on the batch alone), both read
-    * from [[verifiedEdges]], which a preceding [[curateIncremental]] on
-    * the same batch, index and threshold has already built. Connected
-    * components then run ONLY over the affected subgraph — the batch
-    * plus the old labels an edge actually touches; every untouched
-    * cluster passes through label-unchanged without entering the
-    * iteration. Old clusters MERGE correctly when a new doc bridges
-    * them (the case naive assign-to-nearest-cluster gets wrong), and
+    * in-batch pairs ([[nearDupPairs]] on the batch alone), both from
+    * [[verifiedEdges]], which a preceding [[curateIncremental]] on the
+    * same batch, index and threshold hands over (else this call builds
+    * them). Connected components then run ONLY over the affected
+    * subgraph — the batch plus the old labels an edge actually touches;
+    * every untouched cluster passes through label-unchanged without
+    * entering the iteration. Old clusters MERGE correctly when a new
+    * doc bridges them (the case naive assign-to-nearest-cluster gets
+    * wrong), and
     * because labels are min-ids and the quotient preserves
     * reachability, the result is EQUAL to [[dupClusters]] over the
     * full corpus — IncrementalClusterSpec pins that equality and the
@@ -500,10 +501,10 @@ object Corpus {
       indexPaths: Seq[String],
       threshold: Double = 0.5): (DataFrame, Int) = Caches.scoped { own =>
     val oldLab = oldClusters.select(col("doc_id"), col("cluster_id"))
-    // the batch is shingled only when the edges are not already built
-    // (a preceding curateIncremental on the same batch built them)
-    val edges = verifiedEdges(newDocs, shingleSets(newDocs, own), indexPaths,
-      threshold, own)
+    // the batch is shingled only when no preceding curateIncremental on
+    // the same batch, index and threshold handed its edges over
+    val edges = Artifacts.take(EdgeFamily, newDocs, indexPaths, threshold.toString)(
+      verifiedEdges(shingleSets(newDocs, own), indexPaths, threshold, own))
     // cached: crossEdges has TWO materializing consumers in different
     // ACTIONS — the CC seed checkpoint (through touched/nodes) and the
     // CC edge-table cache build — and exchange reuse never crosses an
@@ -941,39 +942,35 @@ object Corpus {
   }
 
   /** The verified edges of a batch (new_id, other_id, in_batch) at
-    * `threshold`: its matches against the index segments (other_id =
-    * index_id, the [[dedupAgainstIndex]] pairs) and its in-batch pairs
-    * (other_id < new_id, the [[nearDupPairs]] pairs). Both come from the
-    * band joins over the batch's signatures and the exact Jaccard verify
-    * at 6 dp.
+    * `threshold`, as a `localCheckpoint`: its matches against the index
+    * segments (other_id = index_id, the [[dedupAgainstIndex]] pairs) and
+    * its in-batch pairs (other_id < new_id, the [[nearDupPairs]] pairs),
+    * from the band joins over the batch's signatures (`sh`, its shingle
+    * sets) and the exact Jaccard verify at 6 dp.
     *
     * The daily batch runs [[curateIncremental]] and then
-    * [[updateClustersWithStats]] on the same batch, index and threshold;
-    * both read the edges through one [[Artifacts.frameDir]] slot per
-    * threshold, so the second call reads what the first built. The key
-    * covers everything the edges are built from: the index paths and
-    * their segments' file fingerprints, the batch's input files and its
-    * plan, so a rewritten batch, a quality-gated batch, another index or
-    * a rewritten segment rebuilds, and the build deletes the edges it
-    * replaces. `sh`, the batch's shingle sets, is only read on a build.
-    * The returned frame reads the artifact dir: a caller whose result
-    * must outlive the next batch checkpoints what it derives from it.
+    * [[updateClustersWithStats]] on the same batch, index and threshold
+    * in one JVM. curateIncremental offers its edges
+    * ([[Artifacts.offer]], family [[EdgeFamily]], one slot per threshold)
+    * and updateClustersWithStats takes them ([[Artifacts.take]]) when
+    * they were built from the same index segments (file fingerprints),
+    * batch files and batch plan; any other call builds its own. The
+    * edges live in memory only: a call that shares no batch writes and
+    * reads no edge file.
     */
-  private def verifiedEdges(batch: DataFrame, sh: => DataFrame,
-      indexPaths: Seq[String], threshold: Double, own: Caches): DataFrame = {
-    val dir = Artifacts.frameDir("incremental_edges", batch, indexPaths,
-        threshold.toString) { out =>
-      val sets = sh
-      val cross = dedupAgainstIndexFrom(sets, indexPaths, threshold)
-        .select(col("new_id"), col("index_id").as("other_id"),
-          lit(false).as("in_batch"))
-      val inBatch = nearDupPairsFrom(sets, threshold, own)
-        .select(col("doc_b").as("new_id"), col("doc_a").as("other_id"),
-          lit(true).as("in_batch"))
-      graft.etl.EtlIO.writeParquet(cross.unionByName(inBatch), out)
-    }
-    batch.sparkSession.read.parquet(dir)
+  private def verifiedEdges(sh: DataFrame, indexPaths: Seq[String],
+      threshold: Double, own: Caches): DataFrame = {
+    val cross = dedupAgainstIndexFrom(sh, indexPaths, threshold)
+      .select(col("new_id"), col("index_id").as("other_id"),
+        lit(false).as("in_batch"))
+    val inBatch = nearDupPairsFrom(sh, threshold, own)
+      .select(col("doc_b").as("new_id"), col("doc_a").as("other_id"),
+        lit(true).as("in_batch"))
+    cross.unionByName(inBatch).localCheckpoint()
   }
+
+  /** the [[Artifacts]] hand-off family of [[verifiedEdges]] */
+  private[graft] val EdgeFamily = "incremental_edges"
 
   /** the lazy [[dedupAgainstIndex]] frame over [[shingleSets]] (see
     * [[nearDupPairsFrom]] — the shared-batch path).
@@ -1191,7 +1188,7 @@ object Corpus {
     * segment under `appendSegmentPath`, so the next batch's `indexPaths`
     * is simply this one plus that path. One shingle/signature build
     * feeds the index probe, the in-batch check AND the appended segment;
-    * the verified pairs stay available to a following
+    * the verified pairs are handed to a following
     * [[updateClustersWithStats]] on the same batch ([[verifiedEdges]]).
     *
     * The segment write runs eagerly (it is the call's side effect); the
@@ -1208,16 +1205,17 @@ object Corpus {
       else newDocs
     val sh = shingleSets(base, own)
     val sig = own(bandSignatures(sh))
-    // the batch's verified edges (index matches and in-batch pairs); a
+    // the batch's verified edges (index matches and in-batch pairs),
+    // offered to a following updateClustersWithStats on this batch; a
     // doc is dropped when it is the higher id of any of them, so the min
-    // id of every in-batch dup group survives.
-    // Checkpointed: dropIds has THREE materializing consumers in
+    // id of every in-batch dup group survives. The edges are a
+    // localCheckpoint: dropIds has THREE materializing consumers in
     // different ACTIONS — the two segment writes below and the caller's
-    // terminal action on the returned curated frame. One-long rows
-    // (loser doc_ids only), and the returned frame outlives the sh/sig
-    // caches and the edge artifact, which the next batch's build deletes.
-    val dropIds = verifiedEdges(base, sh, indexPaths, threshold, own)
-      .select(col("new_id").as("doc_id")).distinct().localCheckpoint()
+    // terminal action on the returned curated frame — and the returned
+    // frame outlives the sh/sig caches.
+    val edges = Artifacts.offer(EdgeFamily, base, indexPaths, threshold.toString)(
+      verifiedEdges(sh, indexPaths, threshold, own))
+    val dropIds = edges.select(col("new_id").as("doc_id"))
     val survivors = base.join(dropIds, Seq("doc_id"), "left_anti")
     val survivorIds = survivors.select("doc_id")
     graft.etl.EtlIO.writePartitionedParquet(

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** [[Artifacts]]: keyed by (family, input fingerprint), single-flight
-  * per key, build seconds recorded per family. Inputs are small
+  * per key, build seconds recorded per family; a handed-off frame is
+  * served at most once, only to a take with the same origin. Inputs are small
   * hand-written parquet tables; each artifact is the sum of the input's
   * `id` column, so which input it was built from is visible in its
   * contents.
@@ -130,50 +131,94 @@ class ArtifactsSpec extends SparkSpec {
     assert(sumOf(sumArtifact("spec_fail", in)) == 5L)
   }
 
-  test("a frame artifact is keyed by the frame's plan and files, its tables and its parameter") {
-    val base = tmpDir("artifacts_frame")
+  /** the sum of `frame`'s ids, offered or taken under family
+    * "spec_hand" as a localCheckpoint; `builds` counts the builds
+    */
+  private def handOff(offer: Boolean, frame: org.apache.spark.sql.DataFrame,
+      tables: Seq[String], param: String = "0.5"): Long = {
+    def build = frame.agg(sum("id").as("s")).localCheckpoint()
+    val got =
+      if (offer) Artifacts.offer("spec_hand", frame, tables, param)(build)
+      else Artifacts.take("spec_hand", frame, tables, param)(build)
+    got.head().getLong(0)
+  }
+  private def handOffBuilds = Artifacts.handOffBuilds("spec_hand")
+
+  test("a handed-off frame is served once, to a take built from the same frame, tables and param") {
+    val base = tmpDir("artifacts_hand")
     val (in, table) = (s"$base/batch.parquet", s"$base/index.parquet")
     writeIds(in, Seq(1L, 2L, 3L))
     writeIds(table, Seq(100L))
-    val builds = new AtomicInteger
-    def edges(frame: org.apache.spark.sql.DataFrame, param: String = "0.5",
-        tables: Seq[String] = Seq(table)): String =
-      Artifacts.frameDir("spec_frame", frame, tables, param) { p =>
-        builds.incrementAndGet()
-        frame.agg(sum("id").as("s")).write.mode("overwrite").parquet(p)
-      }
-    val first = edges(spark.read.parquet(in))
-    assert(sumOf(first) == 6L)
+    def batch = spark.read.parquet(in)
+    val b0 = handOffBuilds
+    def built = handOffBuilds - b0
+    assert(handOff(offer = true, batch, Seq(table)) == 6L && built == 1)
     // a second read of the same files is the same plan: served
-    assert(edges(spark.read.parquet(in)) == first && builds.get == 1)
+    assert(handOff(offer = false, batch, Seq(table)) == 6L && built == 1)
+    // served once: the take emptied the slot
+    assert(handOff(offer = false, batch, Seq(table)) == 6L && built == 2)
 
-    // rewriting the frame's files in place rebuilds and deletes the stale dir
+    // rewriting the frame's files in place is a miss
+    handOff(offer = true, batch, Seq(table))
     writeIds(in, Seq(10L, 11L))
-    val second = edges(spark.read.parquet(in))
-    assert(builds.get == 2 && sumOf(second) == 21L)
-    assert(!Files.exists(Paths.get(first)), s"stale artifact $first still on disk")
+    assert(handOff(offer = false, batch, Seq(table)) == 21L && built == 4)
 
-    // another plan over the same files takes the slot over
-    val third = edges(spark.read.parquet(in).filter(col("id") > 10L))
-    assert(builds.get == 3 && sumOf(third) == 11L && !Files.exists(Paths.get(second)))
+    // another plan over the same files is a miss
+    handOff(offer = true, batch, Seq(table))
+    assert(handOff(offer = false, batch.filter(col("id") > 10L), Seq(table)) == 11L &&
+      built == 6)
 
-    // rewriting a table input rebuilds too
-    val fourth = edges(spark.read.parquet(in))
+    // rewriting a table input is a miss, and so is another table list
+    handOff(offer = true, batch, Seq(table))
     writeIds(table, Seq(200L))
-    val fifth = edges(spark.read.parquet(in))
-    assert(builds.get == 5 && fifth != fourth && !Files.exists(Paths.get(fourth)))
+    assert(handOff(offer = false, batch, Seq(table)) == 21L && built == 8)
+    handOff(offer = true, batch, Seq(table))
+    assert(handOff(offer = false, batch, Seq(table, in)) == 21L && built == 10)
 
-    // another table list takes the slot over (a rolling ingest adds one
-    // segment per batch)
-    val grown = edges(spark.read.parquet(in), tables = Seq(table, in))
-    assert(builds.get == 6 && !Files.exists(Paths.get(fifth)))
-    val sixth = edges(spark.read.parquet(in))
-    assert(builds.get == 7 && !Files.exists(Paths.get(grown)))
+    // another parameter is another slot
+    handOff(offer = true, batch, Seq(table))
+    assert(handOff(offer = false, batch, Seq(table), "0.45") == 21L && built == 12)
+    assert(handOff(offer = false, batch, Seq(table)) == 21L && built == 12)
+  }
 
-    // another parameter is another slot: both artifacts are kept
-    val other = edges(spark.read.parquet(in), "0.45")
-    assert(builds.get == 8 && other != sixth)
-    assert(edges(spark.read.parquet(in)) == sixth && edges(spark.read.parquet(in), "0.45") == other)
-    assert(builds.get == 8 && Files.exists(Paths.get(sixth)))
+  test("hand-off tables are listed through Hadoop's FileSystem, so a file: URI works") {
+    val base = tmpDir("artifacts_hand_uri")
+    val (in, table) = (s"$base/batch.parquet", s"$base/index.parquet")
+    writeIds(in, Seq(1L, 2L))
+    writeIds(table, Seq(100L))
+    val uri = Paths.get(table).toUri.toString
+    assert(uri.startsWith("file:"))
+    val b0 = handOffBuilds
+    assert(handOff(offer = true, spark.read.parquet(in), Seq(uri)) == 3L)
+    // the URI and the plain path name one table
+    assert(handOff(offer = false, spark.read.parquet(in), Seq(table)) == 3L)
+    assert(handOffBuilds - b0 == 1)
+  }
+
+  test("a handed-off frame stays readable while another thread replaces it") {
+    val base = tmpDir("artifacts_hand_threads")
+    val (a, b, table) = (s"$base/a.parquet", s"$base/b.parquet", s"$base/index.parquet")
+    writeIds(a, Seq(1L, 2L, 3L))
+    writeIds(b, Seq(5L))
+    writeIds(table, Seq(100L))
+    val held = Artifacts.offer("spec_hand", spark.read.parquet(a), Seq(table), "0.5")(
+      spark.read.parquet(a).localCheckpoint())
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      // one thread keeps replacing the slot (and asks for collections, so
+      // an unreferenced checkpoint would be cleaned); the other keeps
+      // reading the frame it was handed
+      val replace = pool.submit(new Callable[Unit] {
+        def call(): Unit = (1 to 6).foreach { _ =>
+          handOff(offer = true, spark.read.parquet(b), Seq(table))
+          System.gc()
+        }
+      })
+      val read = pool.submit(new Callable[Seq[Long]] {
+        def call(): Seq[Long] = (1 to 6).map(_ => held.agg(sum("id")).head().getLong(0))
+      })
+      replace.get(2, TimeUnit.MINUTES)
+      assert(read.get(2, TimeUnit.MINUTES).forall(_ == 6L))
+    } finally pool.shutdownNow()
   }
 }

@@ -1,7 +1,5 @@
 package graft.corpus
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 
 import graft.{CacheCheckedSpec, SparkSpec}
@@ -85,11 +83,10 @@ class IncrementalClusterSpec extends SparkSpec with CacheCheckedSpec {
     assertNoCachedPlans()
   }
 
-  /** seconds spent building verified-edge artifacts so far: it grows
-    * exactly when a call builds the edges
+  /** verified-edge builds so far: it grows exactly when a call builds
+    * the edges
     */
-  private def edgeBuildSec: Double =
-    Artifacts.trainSeconds.toMap.getOrElse("incremental_edges", 0.0)
+  private def edgeBuilds: Long = Artifacts.handOffBuilds(Corpus.EdgeFamily)
 
   /** the sf0.001 corpus split as the daily batch sees it: the even ids
     * indexed (LSH segment + their clusters at `t`), the odd ids the new
@@ -117,36 +114,24 @@ class IncrementalClusterSpec extends SparkSpec with CacheCheckedSpec {
 
   test("curate then update on the same batch builds the verified edges once") {
     val day = new Day(0.5)
-    val before = edgeBuildSec
+    val before = edgeBuilds
     assert(day.curate() > 0L)
-    val built = edgeBuildSec
-    assert(built > before, "curateIncremental did not build the edges")
+    assert(edgeBuilds == before + 1, "curateIncremental did not build the edges")
     val got = day.update(0.5)
-    assert(edgeBuildSec == built, "updateClusters rebuilt the edges curate built")
+    assert(edgeBuilds == before + 1, "updateClusters rebuilt the edges curate built")
     assert(rows(got) == rows(day.full))
+    // the edges were served once: a second update builds its own
+    assert(rows(day.update(0.5)) == rows(day.full) && edgeBuilds == before + 2)
     assertNoCachedPlans()
   }
 
   test("rewriting the batch between curate and update rebuilds the edges") {
     val day = new Day(0.5)
     day.curate()
-    val root = java.nio.file.Paths.get(
-      Artifacts.dir("spec_root", day.batchPath)(_ => ())).getParent
-    def edgeDirs: Set[String] = {
-      val ls = java.nio.file.Files.list(root)
-      try ls.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("incremental_edges_")).toSet
-      finally ls.close()
-    }
-    val dirsBefore = edgeDirs
-    val built = edgeBuildSec
+    val built = edgeBuilds
     day.writeBatch()
     val got = day.update(0.5)
-    assert(edgeBuildSec > built, "a rewritten batch was served the old edges")
-    val dirsAfter = edgeDirs
-    // the slot's previous edges were replaced: one dir gone, one new
-    assert(dirsAfter.size == dirsBefore.size && (dirsBefore -- dirsAfter).size == 1,
-      s"before $dirsBefore, after $dirsAfter")
+    assert(edgeBuilds == built + 1, "a rewritten batch was served the old edges")
     assert(rows(got) == rows(day.full))
     assertNoCachedPlans()
   }
@@ -154,9 +139,9 @@ class IncrementalClusterSpec extends SparkSpec with CacheCheckedSpec {
   test("a quality-gated curate does not serve an update of the ungated batch") {
     val day = new Day(0.5)
     day.curate(gate = true)
-    val built = edgeBuildSec
+    val built = edgeBuilds
     val got = day.update(0.5)
-    assert(edgeBuildSec > built, "the gated batch's edges served the ungated batch")
+    assert(edgeBuilds == built + 1, "the gated batch's edges served the ungated batch")
     assert(rows(got) == rows(day.full))
     assertNoCachedPlans()
   }
@@ -164,9 +149,9 @@ class IncrementalClusterSpec extends SparkSpec with CacheCheckedSpec {
   test("an update at another threshold rebuilds the edges") {
     val day = new Day(0.45)
     day.curate()
-    val built = edgeBuildSec
+    val built = edgeBuilds
     val got = day.update(0.45)
-    assert(edgeBuildSec > built, "the 0.5 edges served a 0.45 update")
+    assert(edgeBuilds == built + 1, "the 0.5 edges served a 0.45 update")
     assert(rows(got) == rows(day.full))
     assertNoCachedPlans()
   }
