@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Caches
+import graft.core.{Caches, Publish}
+import graft.etl.EtlIO
 import graft.functions.MoneyFunctions._
 import graft.queries.SimilarityQueries
 
@@ -50,15 +51,9 @@ object AnnIndex {
     * exchange at any k.
     */
   def write(embeddings: DataFrame, path: String, k: Int = 8): Unit = Caches.scoped { own =>
-    // the whole index is built under a staging sibling and swapped in
-    // with directory renames, so a serving reader never opens an index
-    // whose four artifacts are mid-write or from two different builds
-    // (a rebuild over a live index would otherwise serve new centroids
-    // against old codes). Same staged-swap contract as
-    // EtlIO.compactParquet: the no-index window is one rename, and a
-    // crash mid-swap leaves the old index recoverable at `.old`.
-    val staged = s"$path.stage"
-    graft.core.Scratch.deleteTree(java.nio.file.Paths.get(staged))
+    // published as one directory (graft.core.Publish): a serving reader
+    // never opens an index whose four artifacts are mid-write or from two
+    // different builds (new centroids against old codes)
     val e = own(SimilarityQueries.toVecs(embeddings))
     val centroids = SimilarityQueries.trainedCentroids(e, own, k = k)
     val assigned = SimilarityQueries.assignNearest(e, centroids)
@@ -67,22 +62,16 @@ object AnnIndex {
     val cb = SimilarityQueries.pqCodebook(subs, own)
     val codes = SimilarityQueries.pqAssign(subs, cb)
       .select(col("vec_id").as("cand_id"), col("s"), col("cid"))
-    graft.etl.EtlIO.writeParquet(centroids, s"$staged/centroids")
-    graft.etl.EtlIO.writeParquet(cb, s"$staged/codebooks")
-    graft.etl.EtlIO.writePartitionedParquet(
-      codes.join(assigned, Seq("cand_id")), s"$staged/postings", Seq("centroid_id"))
-    graft.etl.EtlIO.writePartitionedParquet(
-      e.select(col("vec_id").as("cand_id"), col("v"), col("norm"))
-        .join(assigned, Seq("cand_id")),
-      s"$staged/vectors", Seq("centroid_id"))
-    val target = java.nio.file.Paths.get(path)
-    val old = java.nio.file.Paths.get(s"$path.old")
-    graft.core.Scratch.deleteTree(old)
-    if (java.nio.file.Files.exists(target))
-      java.nio.file.Files.move(target, old)
-    java.nio.file.Files.move(java.nio.file.Paths.get(staged), target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    graft.core.Scratch.deleteTree(old)
+    Publish.dir(path) { stage =>
+      EtlIO.writeParquet(centroids, s"$stage/centroids")
+      EtlIO.writeParquet(cb, s"$stage/codebooks")
+      EtlIO.writePartitionedParquet(
+        codes.join(assigned, Seq("cand_id")), s"$stage/postings", Seq("centroid_id"))
+      EtlIO.writePartitionedParquet(
+        e.select(col("vec_id").as("cand_id"), col("v"), col("norm"))
+          .join(assigned, Seq("cand_id")),
+        s"$stage/vectors", Seq("centroid_id"))
+    }
   }
 
   /** Extend a persisted index with new vectors WITHOUT retraining — the
@@ -147,8 +136,8 @@ object AnnIndex {
   }
 
   /** Fold accumulated tombstones into the index files: rewrite
-    * `postings/` and `vectors/` without the deleted candidates (staged
-    * + swapped, same crash contract as [[write]]), then drop the
+    * `postings/` and `vectors/` without the deleted candidates (each
+    * published as in [[write]]), then drop the
     * tombstone channel. Centroids and codebooks are untouched — no
     * retrain. Run this when the tombstone set grows large enough that
     * the per-search anti-join matters, or on the compaction cadence the
@@ -159,17 +148,11 @@ object AnnIndex {
       val dead = broadcast(ts)
       Seq("postings", "vectors").foreach { part =>
         val dir = s"$path/$part"
-        val staged = s"$dir.stage"
-        graft.core.Scratch.deleteTree(java.nio.file.Paths.get(staged))
-        spark.read.parquet(dir).join(dead, Seq("cand_id"), "left_anti")
-          .write.mode("overwrite").partitionBy("centroid_id").parquet(staged)
-        val old = java.nio.file.Paths.get(s"$dir.old")
-        graft.core.Scratch.deleteTree(old)
-        java.nio.file.Files.move(java.nio.file.Paths.get(dir), old)
-        java.nio.file.Files.move(java.nio.file.Paths.get(staged),
-          java.nio.file.Paths.get(dir),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        graft.core.Scratch.deleteTree(old)
+        Publish.dir(dir) { stage =>
+          EtlIO.writePartitionedParquet(
+            spark.read.parquet(dir).join(dead, Seq("cand_id"), "left_anti"),
+            stage, Seq("centroid_id"))
+        }
       }
       // tombstones drop LAST: a crash above leaves them in place and the
       // next search/compact still masks the same dead ids (idempotent)

@@ -2,8 +2,9 @@ package graft.corpus
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.core.{Artifacts, Caches}
+import graft.core.{Artifacts, Caches, Publish}
 import graft.functions.{JaccardSimilarity, MinHashFamily}
 
 /** Reusable corpus-curation transforms over a documents DataFrame
@@ -674,17 +675,18 @@ object Corpus {
     * window is identical across thresholds/weightings, so it is built
     * once per corpus version, not once per query. x4/x20/x28 consume
     * this layout (via their per-process shared build); the `posting-index`
-    * CLI subcommand materializes it for cross-run reuse.
+    * CLI subcommand materializes it for cross-run reuse. Both halves
+    * publish together ([[Publish.dir]]); `postings` is built from the
+    * staged `docs`.
     */
   def writePostingIndex(docs: DataFrame, path: String,
-      saltChunk: Long = 1024L): Unit = {
+      saltChunk: Long = 1024L): Unit = Publish.dir(path) { stage =>
     val sh = withShingles(docs)
       .select(col("doc_id"), col("lang"), col("sh"), size(col("sh")).as("n"))
-    graft.etl.EtlIO.writeParquet(sh, s"$path/docs")
-    val spark = docs.sparkSession
+    graft.etl.EtlIO.writeParquet(sh, s"$stage/docs")
     graft.etl.EtlIO.writeParquet(
-      postingIndex(spark.read.parquet(s"$path/docs"), saltChunk),
-      s"$path/postings")
+      postingIndex(docs.sparkSession.read.parquet(s"$stage/docs"), saltChunk),
+      s"$stage/postings")
   }
 
   /** reader for [[writePostingIndex]]'s `docs` half (doc_id, lang, sh, n). */
@@ -697,19 +699,30 @@ object Corpus {
 
   def writeLshIndex(docs: DataFrame, path: String): Unit = Caches.scoped { own =>
     val sh = shingleSets(docs, own)
-    graft.etl.EtlIO.writePartitionedParquet(
-      bandSignatures(sh), s"$path/signatures", Seq("band_id"))
-    graft.etl.EtlIO.writeParquet(sh, s"$path/shingles")
+    writeLshSegment(bandSignatures(sh), sh, path)
   }
 
-  /** persisted-index readers ([[writeLshIndex]]'s layout) — shared by
-    * the batch and streaming incremental-dedup paths so the layout has
-    * exactly one definition.
+  /** the one writer of the LSH segment layout ([[writeLshIndex]],
+    * [[curateIncremental]]'s appended segment and [[compactSegments]]):
+    * `signatures/` (doc_id, band_key) partitioned by band_id, then
+    * `shingles/` (doc_id, sh), published together ([[Publish.dir]]) so
+    * a segment never holds signatures without their shingles
     */
-  private[graft] def readIndexSignatures(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): DataFrame = readIndexSignatures(spark, Seq(indexPath))
+  private def writeLshSegment(sig: DataFrame, sh: DataFrame, path: String): Unit =
+    Publish.dir(path) { stage =>
+      graft.etl.EtlIO.writePartitionedParquet(sig, s"$stage/signatures", Seq("band_id"))
+      graft.etl.EtlIO.writeParquet(sh, s"$stage/shingles")
+    }
 
-  /** multi-segment read: an index is a SET of immutable segments (one
+  /** the segment layout's fixed schemas: reads pass them, so no segment
+    * read runs a footer job to infer one
+    */
+  private val SignatureSchema = StructType.fromDDL("doc_id BIGINT, band_id INT, band_key STRING")
+  private val ShingleSchema = StructType.fromDDL("doc_id BIGINT, sh ARRAY<STRING>")
+
+  /** persisted-index readers ([[writeLshSegment]]'s layout), shared by
+    * the batch and streaming incremental-dedup paths. Multi-segment
+    * read: an index is a SET of immutable segments (one
     * per ingested batch — [[writeLshIndex]] or [[curateIncremental]]'s
     * append), unioned at read time. Signatures are per-doc, so segments
     * compose by file-listing union — no merge job, the object-store-
@@ -723,35 +736,18 @@ object Corpus {
     // an empty index (the day-0 bootstrap of incremental curation:
     // nothing indexed yet, so nothing can be a duplicate) — never a
     // reduce-on-Nil crash.
-    if (indexPaths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("band_id",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("band_key",
-            org.apache.spark.sql.types.StringType))))
-    else
-      indexPaths.map(p => spark.read.parquet(s"$p/signatures")
-        .select("doc_id", "band_id", "band_key")).reduce(_.unionByName(_))
-
-  private[graft] def readIndexShingles(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): DataFrame = readIndexShingles(spark, Seq(indexPath))
+    readSegments(spark, indexPaths, "signatures", SignatureSchema)
 
   private[graft] def readIndexShingles(spark: org.apache.spark.sql.SparkSession,
       indexPaths: Seq[String]): DataFrame =
+    readSegments(spark, indexPaths, "shingles", ShingleSchema)
+
+  private def readSegments(spark: org.apache.spark.sql.SparkSession,
+      indexPaths: Seq[String], table: String, schema: StructType): DataFrame =
     if (indexPaths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("sh",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.StringType)))))
-    else
-      indexPaths.map(p => spark.read.parquet(s"$p/shingles"))
-        .reduce(_.unionByName(_))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else indexPaths.map(p => spark.read.schema(schema).parquet(s"$p/$table")
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*)).reduce(_.unionByName(_))
 
   // ---- exact-verify regime dispatch (r14) ---------------------------------
 
@@ -1127,38 +1123,9 @@ object Corpus {
   def compactSegments(spark: org.apache.spark.sql.SparkSession,
       indexPaths: Seq[String], outPath: String): Unit = {
     require(indexPaths.nonEmpty, "compactSegments needs at least one segment")
-    // a compaction that writes INTO one of its own inputs would race the
-    // read with the overwrite — Spark aborts on the conflict, but only
-    // after the signatures may be half-written while shingles never ran
-    // (r11 ADVICE). Segments are write-once: the output must be a fresh
-    // path, checked up front in both nesting directions.
-    val outAbs = java.nio.file.Paths.get(outPath).toAbsolutePath.normalize
-    indexPaths.foreach { p =>
-      val in = java.nio.file.Paths.get(p).toAbsolutePath.normalize
-      require(!outAbs.startsWith(in) && !in.startsWith(outAbs),
-        s"compactSegments output $outPath overlaps input segment $p — " +
-          "compacted segments must be written to a fresh path and " +
-          "swapped in by pointing the next ingest's indexPaths at them")
-    }
-    // stage-then-rename: both tables land under a dot-named staging dir
-    // (invisible to segment listings) and ONE rename publishes them, so
-    // a crash between the two writes can never leave a segment with
-    // signatures but no shingles at the published path
-    val staging = outAbs.resolveSibling("." + outAbs.getFileName + ".staging")
-    graft.core.Scratch.deleteTree(staging)
-    graft.etl.EtlIO.writePartitionedParquet(
-      readIndexSignatures(spark, indexPaths), s"$staging/signatures",
-      Seq("band_id"))
-    graft.etl.EtlIO.writeParquet(
-      readIndexShingles(spark, indexPaths), s"$staging/shingles")
-    graft.core.Scratch.deleteTree(outAbs)
-    // ATOMIC_MOVE makes the no-torn-publish guarantee explicit: a plain
-    // move could legally fall back to copy+delete (e.g. cross-device) and
-    // die mid-copy with a half-populated published path; with the flag the
-    // publish either happens as one rename or throws with nothing at
-    // outAbs (same contract as StreamingOps.publishDirAtomic).
-    java.nio.file.Files.move(staging, outAbs,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Publish.requireDisjoint(outPath, indexPaths, "compactSegments")
+    writeLshSegment(readIndexSignatures(spark, indexPaths),
+      readIndexShingles(spark, indexPaths), outPath)
   }
 
   /** Retention sweep for a MANAGED segment directory (the seg_N/cmp_N
@@ -1218,11 +1185,8 @@ object Corpus {
     val dropIds = edges.select(col("new_id").as("doc_id"))
     val survivors = base.join(dropIds, Seq("doc_id"), "left_anti")
     val survivorIds = survivors.select("doc_id")
-    graft.etl.EtlIO.writePartitionedParquet(
-      sig.join(survivorIds, Seq("doc_id")),
-      s"$appendSegmentPath/signatures", Seq("band_id"))
-    graft.etl.EtlIO.writeParquet(
-      sh.join(survivorIds, Seq("doc_id")), s"$appendSegmentPath/shingles")
+    writeLshSegment(sig.join(survivorIds, Seq("doc_id")),
+      sh.join(survivorIds, Seq("doc_id")), appendSegmentPath)
     withSplit(normalize(survivors))
   }
 }

@@ -24,6 +24,8 @@ import graft.core.Sessions
   *       --out D [--threshold 0.5] [--quality-gate false]
   *       # incremental batch curation against persisted index segments;
   *       # survivors' signatures land as a new segment for the next run
+  *   compact-segments --segments seg0[,seg1,…] --out D
+  *       # fold index segments into one segment at a fresh path
   *   posting-index --documents D --out D [--salt-chunk N]
   *       # persist the x4/x20/x28 prefix-filter posting index
   *       # (Corpus.writePostingIndex layout: docs + postings)
@@ -53,6 +55,10 @@ import graft.core.Sessions
   *       # incremental media dedup against persisted frame segments;
   *       # survivors' reps+sets evidence lands as a new segment
   *   version
+  *
+  * A missing required option, a dangling `--flag` or a stray token is
+  * rejected with an IllegalArgumentException naming it and the
+  * subcommand.
   */
 object Cli {
   private val name = "finance-etl-spark"
@@ -97,14 +103,14 @@ object Cli {
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("version") => println(s"$name $version")
     case Some("generate") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       SampleData.write(opts("raw-dir"), opts("month"),
         opts.getOrElse("seed", "42").toLong,
         opts.getOrElse("scale", "1").toInt)
       SampleData.writeChartOfAccounts(opts("reference-dir"))
       println(s"generated raw month ${opts("month")} under ${opts("raw-dir")}")
     case Some("run") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         val out = Pipeline.runMonth(spark, Settings(),
           opts("month"), opts("raw-dir"), opts("curated-dir"), opts("reference-dir"),
@@ -139,7 +145,7 @@ object Cli {
         }
       }
     case Some("curate") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         val curated = graft.corpus.Corpus.curate(
           spark.read.parquet(opts("documents")),
@@ -149,14 +155,14 @@ object Cli {
         println(s"curated=${opts("out")}")
       }
     case Some("index") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         graft.corpus.Corpus.writeLshIndex(
           spark.read.parquet(opts("documents")), opts("out"))
         println(s"index=${opts("out")}")
       }
     case Some("curate-inc") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         val curated = graft.corpus.Corpus.curateIncremental(
           spark.read.parquet(opts("documents")),
@@ -168,14 +174,14 @@ object Cli {
         println(s"curated=${opts("out")} segment=${opts("append-segment")}")
       }
     case Some("compact-segments") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         graft.corpus.Corpus.compactSegments(spark,
           opts("segments").split(",").toSeq, opts("out"))
         println(s"compacted=${opts("out")}")
       }
     case Some("posting-index") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         graft.corpus.Corpus.writePostingIndex(
           spark.read.parquet(opts("documents")), opts("out"),
@@ -183,21 +189,21 @@ object Cli {
         println(s"posting-index=${opts("out")}")
       }
     case Some("ann-index") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         graft.ann.AnnIndex.write(
           spark.read.parquet(opts("embeddings")), opts("out"))
         println(s"ann-index=${opts("out")}")
       }
     case Some("ann-append") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         graft.ann.AnnIndex.append(spark, opts("index"),
           spark.read.parquet(opts("embeddings")))
         println(s"ann-append=${opts("index")}")
       }
     case Some("pagerank") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         import org.apache.spark.sql.functions.col
         val edges = spark.read.parquet(opts("edges"))
@@ -216,7 +222,7 @@ object Cli {
         println(s"pagerank=${opts("out")} rounds=$rounds")
       }
     case Some("cluster-update") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         val (updated, rounds) = graft.corpus.Corpus.updateClustersWithStats(
           spark.read.parquet(opts("clusters")),
@@ -231,7 +237,7 @@ object Cli {
         println(s"clusters=${opts("out")} rounds=$rounds")
       }
     case Some("zorder") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         val Array(c1, c2) = opts("by").split(",")
         graft.core.Layout.zorderWrite(
@@ -240,7 +246,7 @@ object Cli {
         println(s"zorder=${opts("out")} by=$c1,$c2")
       }
     case Some("vacuum") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       val deleted = graft.streaming.StreamingOps.vacuumSnapshotVersions(
         opts("snapshots"), opts.getOrElse("keep", "7").toInt)
       println(s"vacuum=${opts("snapshots")} deleted=${deleted.mkString(",")}")
@@ -250,20 +256,20 @@ object Cli {
       // --committed is the newest batch the stream's CHECKPOINT has
       // committed — passing a too-new id would take artifacts a pending
       // replay still needs (see StreamingOps.gcSegments scaladoc).
-      val opts = parse(args.tail)
+      val opts = parse(args)
       val gone = graft.corpus.Corpus.gcSegments(
         opts("segments"), opts("committed").toLong)
       println(s"gc-segments=${opts("segments")} deleted=${gone.size} " +
         s"watermark=${graft.streaming.StreamingOps.gcWatermark(opts("segments")).getOrElse(-1L)}")
     case Some("frame-index") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         graft.multimodal.Multimodal.writeFrameIndex(spark,
           spark.read.parquet(opts("documents")), opts("out"))
         println(s"frame-index=${opts("out")}")
       }
     case Some("curate-media-inc") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         val survivors = graft.multimodal.Multimodal.curateMediaIncremental(
           spark.read.parquet(opts("documents")),
@@ -276,7 +282,7 @@ object Cli {
           s"segment=${opts("append-segment")}")
       }
     case Some("stream-demo") =>
-      val opts = parse(args.tail)
+      val opts = parse(args)
       withSession { spark =>
         val schema = spark.read.parquet(opts("events-dir")).schema
         val stream = spark.readStream.schema(schema).parquet(opts("events-dir"))
@@ -291,12 +297,21 @@ object Cli {
     case _ =>
       System.err.println(
         "usage: run|generate|curate|curate-inc|index|compact-segments|posting-index|" +
-          "ann-index|ann-append|pagerank|cluster-update|zorder|vacuum|gc-segments|stream-demo|version (see Scaladoc)")
+          "ann-index|ann-append|pagerank|cluster-update|zorder|vacuum|gc-segments|" +
+          "frame-index|curate-media-inc|stream-demo|version (see Scaladoc)")
       sys.exit(2)
   }
 
-  private def parse(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
-    }.toMap
+  /** `--key value` pairs after the subcommand `args(0)`; looking up a
+    * missing key throws
+    */
+  private def parse(args: Array[String]): Map[String, String] = {
+    val cmd = args(0)
+    def bad(why: String) = throw new IllegalArgumentException(s"$cmd: $why")
+    args.tail.grouped(2).map {
+      case Array(k, v) if k.startsWith("--") && !v.startsWith("--") => k.drop(2) -> v
+      case Array(k, _*) if k.startsWith("--") => bad(s"option $k has no value")
+      case Array(t, _*) => bad(s"unexpected argument $t")
+    }.toMap.withDefault(k => bad(s"missing required option --$k"))
+  }
 }

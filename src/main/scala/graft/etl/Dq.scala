@@ -71,7 +71,7 @@ object Dq {
   /** duplicate-natural-key check (quality.py:8–14): one exception row per
     * duplicated key tuple.
     */
-  def dupKeys(keys: Seq[String], label: String): FrameCheck =
+  def dupKeys(keys: Seq[String]): FrameCheck =
     FrameCheck(s"no_duplicates(${keys.mkString(", ")})", df =>
       df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1)
@@ -109,7 +109,7 @@ object Dq {
       notNull("invoice_id"), notNull("account_code")) ++
       currencyChecks("currency", s.allowedCurrencies) ++
       Seq(dtypeCoerce("amount", DoubleType), notNull("amount"), gt("amount", 0)),
-    Seq(dupKeys(Seq("entity", "invoice_id"), "sales")))
+    Seq(dupKeys(Seq("entity", "invoice_id"))))
 
   def expensesSchema(s: Settings): TableSchema = TableSchema(
     "expenses", Schemas.expenses, Seq("entity", "bill_id"),
@@ -117,7 +117,7 @@ object Dq {
       notNull("bill_id"), notNull("account_code")) ++
       currencyChecks("currency", s.allowedCurrencies) ++
       Seq(dtypeCoerce("amount", DoubleType), notNull("amount"), gt("amount", 0)),
-    Seq(dupKeys(Seq("entity", "bill_id"), "expenses")))
+    Seq(dupKeys(Seq("entity", "bill_id"))))
 
   def payrollSchema(s: Settings): TableSchema = TableSchema(
     "payroll", Schemas.payroll, Seq("entity", "employee_id", "month"),
@@ -141,7 +141,7 @@ object Dq {
       notNull("from_currency"), isin("from_currency", s.allowedCurrencies),
       notNull("to_currency"), isin("to_currency", Seq(s.baseCurrency)),
       dtypeCoerce("rate", DoubleType), notNull("rate"), gt("rate", 0)),
-    Seq(dupKeys(Seq("date", "from_currency", "to_currency"), "fx_rates")))
+    Seq(dupKeys(Seq("date", "from_currency", "to_currency"))))
 
   // ---- severity / summary / gate ≙ quality.py:123–249 --------------------
 

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.core.{Caches, Scratch}
+import graft.core.{Caches, Publish, Scratch}
 
 /** IO layer ≙ reference io_utils.py + the single-file CSV output contract
   * (SURVEY §2.1 S1–S4, §7.4.6).
@@ -210,14 +210,8 @@ object EtlIO {
     * footer- and task-scheduling-bound instead of IO-bound. File count
     * is sized from the dataset's ACTUAL on-disk bytes (not a row
     * guess), the rewrite is one round-robin (or partition-key)
-    * repartition — no driver-side row handling — and the swap renames
-    * the old dataset aside before renaming the staged one in, so the
-    * window with no dataset at `path` is one rename, not a recursive
-    * delete, and a crash mid-swap leaves the old data recoverable at
-    * `path.compact_old`. Directory renames on one filesystem are not a
-    * transaction — a reader racing the swap can still observe a missing
-    * path for an instant; serving layers that can't tolerate that need
-    * a manifest/pointer swap (object store) or a table format on top.
+    * repartition — no driver-side row handling — and the rewritten
+    * dataset replaces the old one through [[graft.core.Publish.dir]].
     */
   def compactParquet(spark: SparkSession, path: String,
       targetBytesPerFile: Long = 128L * 1024 * 1024,
@@ -231,37 +225,29 @@ object EtlIO {
       finally walk.close()
     val nFiles = math.max(1L, (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
     val df = spark.read.parquet(path)
-    val staged = s"$path.compact_stage"
     val rebucketed =
       if (partitionCols.isEmpty) df.repartition(nFiles)
       else df.repartition(nFiles, partitionCols.map(col): _*)
-    val writer = rebucketed.write.mode("overwrite")
-    (if (partitionCols.isEmpty) writer else writer.partitionBy(partitionCols: _*))
-      .parquet(staged)
-    val old = Paths.get(s"$path.compact_old")
-    Scratch.deleteTree(old) // leftover from a previous crashed swap
-    Files.move(Paths.get(path), old)
-    Files.move(Paths.get(staged), Paths.get(path))
-    Scratch.deleteTree(old)
+    Publish.dir(path) { stage =>
+      if (partitionCols.isEmpty) writeParquet(rebucketed, stage)
+      else writePartitionedParquet(rebucketed, stage, partitionCols)
+    }
   }
 
   /** single-file CSV sink: the reference writes one `name.csv` per table
     * (io_utils.py:19–21); Spark writes a directory of parts, so we
     * coalesce(1) (output is already small/aggregated by contract) and
-    * rename the part file. Caller guarantees deterministic row order.
+    * publish the one part file. Caller guarantees deterministic row order.
     */
-  def writeSingleCsv(df: DataFrame, path: String): Unit = {
-    val target = Paths.get(path)
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    val tmp = Files.createTempDirectory(
-      Option(target.getParent).getOrElse(Paths.get(".")), ".csv_stage").toString
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
-    val part = Files.list(Paths.get(tmp)).iterator().asScala
-      .find(_.getFileName.toString.startsWith("part-"))
-      .getOrElse(sys.error(s"no part file written under $tmp"))
-    Files.deleteIfExists(target)
-    Files.move(part, target)
-    Scratch.deleteTree(Paths.get(tmp))
+  def writeSingleCsv(df: DataFrame, path: String): Unit = Publish.file(path) { stage =>
+    val parts = Files.createTempDirectory(Paths.get(stage).getParent, ".csv_parts")
+    try {
+      df.coalesce(1).write.mode("overwrite").option("header", "true").csv(parts.toString)
+      val part = Files.list(parts).iterator().asScala
+        .find(_.getFileName.toString.startsWith("part-"))
+        .getOrElse(sys.error(s"no part file written under $parts"))
+      Files.move(part, Paths.get(stage))
+    } finally Scratch.deleteTree(parts)
   }
 
   def writeText(path: String, content: String): Unit = {

@@ -126,8 +126,7 @@ object Pipeline {
       val summary = Dq.summaryTable(spark, withSeverity, mode)
       phase("dq-exceptions")(EtlIO.writeSingleCsv(withSeverity, exPath))
       phase("dq-summary")(EtlIO.writeSingleCsv(summary, sumPath))
-      if (phase("dq-gate")(Dq.overallStatus(withSeverity, mode)) == "FAIL" &&
-          mode != FailOn.Never)
+      if (phase("dq-gate")(Dq.overallStatus(withSeverity, mode)) == "FAIL")
         throw DqGateFailedException(exPath, sumPath)
 
       // month window filter (pipeline.py:164–170)

@@ -133,47 +133,22 @@ object Transform {
     * account types observed in the data, sorted — pandas pivot_table
     * parity), default Revenue/COGS/Expense to 0, derive profits.
     *
-    * Scale posture: the pivot domain is pinned from the chart of accounts
-    * (dimension-sized — one KB-scale distinct, never a fact scan), so
-    * each fact pass is a single shuffle on (entity, month) computing
-    * sum + observation count per type. pandas pivot_table emits only
-    * OBSERVED types as columns and (dropna=True) drops groups whose every
-    * account_type is unmapped — both reproduced here by filtering null
-    * types pre-group and pruning unobserved columns post-pivot via one
-    * tiny aggregate over the already-grouped (entity×month) frame.
+    * pandas pivot_table emits only OBSERVED types as columns and
+    * (dropna=True) drops groups whose every account_type is unmapped.
+    * Spark's value-less `pivot` is exactly that over the non-null types:
+    * one distinct job finds the observed values, sorted, and the pivot
+    * is then one shuffle on (entity, month).
     */
   def kpiMonthly(fact: DataFrame, dimAccounts: DataFrame): DataFrame = {
-    val joined = fact
+    val wide = fact
       .join(broadcast(dimAccounts.select("account_code", "account_type")),
         Seq("account_code"), "left")
       .withColumn("month", date_format(col("date"), "yyyy-MM"))
-
-    // every observable type comes from the COA join, so the COA's domain
-    // (sorted, as pandas orders pivot columns) is a complete pivot pin
-    val coaTypes = dimAccounts.select("account_type").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-
-    val wide = joined
       .filter(col("account_type").isNotNull) // pivot_table dropna parity
       .groupBy("entity", "month")
-      .pivot("account_type", coaTypes)
-      .agg(sum("amount_base").as("s"), count(lit(1)).as("c"))
-
-    // prune COA types with zero observations anywhere — pandas emits only
-    // observed columns; this global count runs over the tiny wide frame.
-    // Not cached: the returned plan re-derives `wide` in a second fact
-    // pass, where a cache would outlive the call with no owner to
-    // release it
-    val obsCounts = wide.select(coaTypes.map(t => sum(col(s"${t}_c")).as(t)): _*)
-      .collect().headOption
-    val observedTypes = coaTypes.filter { t =>
-      obsCounts.exists(r => !r.isNullAt(r.fieldIndex(t)) && r.getLong(r.fieldIndex(t)) > 0)
-    }
-
-    val wide0 = wide
-      .select((Seq(col("entity"), col("month")) ++
-        observedTypes.map(t => col(s"${t}_s").as(t))): _*)
-      .na.fill(0.0, observedTypes)
+      .pivot("account_type")
+      .agg(sum("amount_base"))
+    val wide0 = wide.na.fill(0.0, wide.columns.toSeq.drop(2))
 
     val withDefaults = Seq("Revenue", "COGS", "Expense").foldLeft(wide0) { (df, c) =>
       if (df.columns.contains(c)) df else df.withColumn(c, lit(0.0))

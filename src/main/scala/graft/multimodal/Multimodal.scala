@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Caches
+import graft.core.{Caches, Publish}
 
 /** Multimodal column plumbing (builder-prompt extension surface): treat
   * image/audio/video as opaque `binary` payloads with typed metadata, and
@@ -352,19 +352,21 @@ object Multimodal {
     * Non-default caps are a TEST lever (the truth-cap eviction pin needs
     * a reachable bound); the marker records the actual caps, so a
     * custom-cap artifact can never pass the production layout gate.
+    * Postings, sets and marker publish together ([[Publish.dir]]).
     */
   private[graft] def writeFrameArtifacts(fh0: DataFrame, path: String,
       repCap: Int = FRAME_DF_CAP,
       truthCap: Int = FRAME_TRUTH_DF_CAP): Unit = Caches.scoped { own =>
     val fh = own(fh0)
     val ev = own(truthEvidence(fh, truthCap))
-    electReps(ev, repCap)
-      .write.mode("overwrite").parquet(s"$path/postings")
-    ev.groupBy("media_id").agg(collect_set("fhash48").as("fhs"))
-      .write.mode("overwrite").parquet(s"$path/sets")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, FRAME_INDEX_LAYOUT_FILE),
-      frameIndexLayoutMarkerFor(repCap, truthCap))
+    Publish.dir(path) { stage =>
+      electReps(ev, repCap).write.mode("overwrite").parquet(s"$stage/postings")
+      ev.groupBy("media_id").agg(collect_set("fhash48").as("fhs"))
+        .write.mode("overwrite").parquet(s"$stage/sets")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(stage, FRAME_INDEX_LAYOUT_FILE),
+        frameIndexLayoutMarkerFor(repCap, truthCap))
+    }
   }
 
   /** the evidence bound, once: drop hashes carried by more than
@@ -764,30 +766,18 @@ object Multimodal {
     * checkpoint shows a started-but-uncommitted batch (MediaStreamSpec
     * pins the refusal).
     *
-    * Same fresh-path + stage-then-atomic-rename publish discipline as
-    * the text compactor (a crash between the postings and sets writes
-    * can never leave a torn artifact at the published path).
+    * The output must be a fresh path, as for the text compactor.
     */
   private[graft] def compactFrameSegments(spark: SparkSession,
       paths: Seq[String], outPath: String): Unit = {
     require(paths.nonEmpty, "compactFrameSegments needs at least one segment")
     paths.foreach(requireFrameIndexLayout)
-    val outAbs = java.nio.file.Paths.get(outPath).toAbsolutePath.normalize
-    paths.foreach { p =>
-      val in = java.nio.file.Paths.get(p).toAbsolutePath.normalize
-      require(!outAbs.startsWith(in) && !in.startsWith(outAbs),
-        s"compactFrameSegments output $outPath overlaps input segment $p")
-    }
-    val staging = outAbs.resolveSibling("." + outAbs.getFileName + ".staging")
-    graft.core.Scratch.deleteTree(staging)
+    Publish.requireDisjoint(outPath, paths, "compactFrameSegments")
     writeFrameArtifacts(
       readFrameIndexSets(spark, paths)
         .select(col("media_id"), explode(col("fhs")).as("fhash48"))
         .distinct(),
-      staging.toString)
-    graft.core.Scratch.deleteTree(outAbs)
-    java.nio.file.Files.move(staging, outAbs,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      outPath)
   }
 
   /** column-level digest/size checks (the oracle-checked slice — see

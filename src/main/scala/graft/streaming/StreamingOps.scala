@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.Publish
+
 /** Structured Streaming surface over the `events` shape (event_id, ts,
   * user_id, event_type, value, props) — the reference is batch-only, so
   * this is the §7 extension surface: tumbling/sliding windows with
@@ -239,7 +241,7 @@ object StreamingOps {
     val sig = Corpus.bandSignaturesCarrying(
       Corpus.withShingles(newDocs).select("doc_id", "sh"), Seq("sh"))
     val candWithSha = sig.as("a")
-      .join(Corpus.readIndexSignatures(spark, indexPath).as("b"),
+      .join(Corpus.readIndexSignatures(spark, Seq(indexPath)).as("b"),
         col("a.band_id") === col("b.band_id") &&
           col("a.band_key") === col("b.band_key"))
       .select(col("a.doc_id").as("new_id"), col("a.sh").as("sha"),
@@ -249,7 +251,7 @@ object StreamingOps {
     // so the layout/rounding/threshold contracts cannot diverge between
     // the two paths the spec pins equal
     Corpus.verifyAgainstIndex(candWithSha,
-      Corpus.readIndexShingles(spark, indexPath), threshold)
+      Corpus.readIndexShingles(spark, Seq(indexPath)), threshold)
   }
 
   /** streaming MULTIMODAL dedup against a persisted frame-hash index
@@ -353,48 +355,17 @@ object StreamingOps {
     finally ls.close()
   }
 
-  /** Atomic versioned publish: run `write` against a dot-named staging
-    * directory, then ONE same-filesystem rename into place. A reader
-    * listing versions ([[numberedVersions]] skips dot-names) therefore
-    * NEVER sees a partial version — before the rename the name does not
-    * exist, after it the directory is complete, _SUCCESS included. The
-    * in-place `df.write.parquet(v_N)` it replaces created the directory
-    * at job start and filled it file by file, so a concurrent reader
-    * could list v_N mid-write and read a half-written snapshot. A
-    * leftover stage from a crashed publish is cleared on the next
-    * publish of the same version (replay); replay of an already-visible
-    * version still has a delete-then-rename window, which is why
-    * readers that need monotonic consistency follow the `_LATEST`
-    * pointer ([[latestCompleteVersion]]) instead of the listing.
-    */
-  private def publishDirAtomic(basePath: String, dirName: String)(
-      write: String => Unit): Unit = {
-    val base = java.nio.file.Paths.get(basePath)
-    java.nio.file.Files.createDirectories(base)
-    val stage = base.resolve(s".stage_$dirName")
-    graft.core.Scratch.deleteTree(stage)
-    write(stage.toString)
-    val target = base.resolve(dirName)
-    graft.core.Scratch.deleteTree(target)
-    java.nio.file.Files.move(stage, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
   /** Advance the newest-complete-version pointer (`_LATEST` under the
-    * versioned base) to `n` — atomically (temp file + rename), and only
-    * forward: a REPLAYED micro-batch re-publishes an older version and
-    * must not move serving readers back in time.
+    * versioned base) to `n`, only forward: a REPLAYED micro-batch
+    * re-publishes an older version and must not move serving readers
+    * back in time.
     */
-  private def advanceLatestPointer(basePath: String, n: Long): Unit = {
-    val base = java.nio.file.Paths.get(basePath)
-    if (latestCompleteVersion(basePath).forall(_ < n)) {
-      val tmp = base.resolve("._LATEST.tmp")
-      java.nio.file.Files.writeString(tmp, n.toString)
-      java.nio.file.Files.move(tmp, base.resolve("_LATEST"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  private def advanceLatestPointer(basePath: String, n: Long): Unit =
+    if (latestCompleteVersion(basePath).forall(_ < n))
+      Publish.file(s"$basePath/_LATEST")(writeLong(n))
+
+  private def writeLong(n: Long)(path: String): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), n.toString)
 
   /** The newest COMPLETE published version under a versioned base, from
     * the `_LATEST` pointer — what a serving reader should open. The
@@ -612,13 +583,8 @@ object StreamingOps {
             case Some(Some(lock)) => try {
               // marker check-then-advance is safe HERE because both the
               // read and the rename happen inside the mutex
-              if (gcWatermark(segmentBasePath).forall(_ < w)) {
-                val tmp = base.resolve("._GC_WATERMARK.tmp")
-                java.nio.file.Files.writeString(tmp, w.toString)
-                java.nio.file.Files.move(tmp, base.resolve("_GC_WATERMARK"),
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-                  java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-              }
+              if (gcWatermark(segmentBasePath).forall(_ < w))
+                Publish.file(s"$segmentBasePath/_GC_WATERMARK")(writeLong(w))
               // sweep at the DIRECTORY's watermark, not this caller's w:
               // a stale caller (smaller horizon) arriving after a newer
               // sweep must finish the newer sweep's deletions, never
@@ -728,30 +694,23 @@ object StreamingOps {
       // the up-front check alone is check-then-act: the fold below can
       // take minutes, and a batch STARTING inside that window reads the
       // pre-fold segment set — publishing the shrunken cmp under it
-      // re-creates the replay hazard (r15 self-review). So: fold into a
-      // dot-named stage (invisible to numberedVersions, hence to every
-      // stream read set), RE-CHECK quiesce at the last instant, then one
-      // atomic rename. The remaining window is check→rename — one stat
-      // plus one rename — and even a batch landing inside it is
-      // DETECTED below rather than silent.
-      val base = java.nio.file.Paths.get(segmentBasePath)
-      val stage = base.resolve(s".oob_cmp_$last")
-      graft.core.Scratch.deleteTree(stage)
-      graft.multimodal.Multimodal.compactFrameSegments(spark, rs,
-        stage.toString)
-      def refuse(why: String): Nothing = {
-        graft.core.Scratch.deleteTree(stage)
-        throw new IllegalStateException(
-          s"out-of-band media compaction aborted before publish: $why " +
-            "(the staged fold was discarded; nothing visible changed — " +
-            "quiesce the stream and retry).")
+      // re-creates the replay hazard (r15 self-review). So: fold into the
+      // publish stage (invisible to numberedVersions, hence to every
+      // stream read set), RE-CHECK quiesce at the end of the write, where
+      // a throw discards the stage, then publish. The remaining window is
+      // check→rename — one stat plus one rename — and even a batch
+      // landing inside it is DETECTED below rather than silent.
+      def refuse(why: String): Nothing = throw new IllegalStateException(
+        s"out-of-band media compaction aborted before publish: $why " +
+          "(the staged fold was discarded; nothing visible changed — " +
+          "quiesce the stream and retry).")
+      Publish.dir(s"$segmentBasePath/cmp_$last") { stage =>
+        graft.multimodal.Multimodal.compactFrameSegments(spark, rs, stage)
+        uncommittedBatchId(checkpointPath)
+          .foreach(b => refuse(s"batch $b started during the fold"))
+        if (!lastCommittedBatchId(checkpointPath).contains(last))
+          refuse("the committed horizon moved during the fold")
       }
-      uncommittedBatchId(checkpointPath)
-        .foreach(b => refuse(s"batch $b started during the fold"))
-      if (!lastCommittedBatchId(checkpointPath).contains(last))
-        refuse("the committed horizon moved during the fold")
-      java.nio.file.Files.move(stage, base.resolve(s"cmp_$last"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       // post-publish detection for the residual window: a batch whose
       // offsets entry landed between the recheck and the rename may
       // have read EITHER segment set. It cannot be rolled back (the
@@ -840,9 +799,9 @@ object StreamingOps {
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val priorSegs = segmentReadSet(segmentBasePath, batchId)
-        // segment staged + renamed in LAST: a visible segment implies
-        // its output partition is already complete
-        publishDirAtomic(segmentBasePath, s"seg_$batchId") { stagePath =>
+        // segment published LAST: a visible segment implies its output
+        // partition is already complete
+        Publish.dir(s"$segmentBasePath/seg_$batchId") { stagePath =>
           val curated = graft.corpus.Corpus.curateIncremental(
             batch.toDF(), seedIndexPaths ++ priorSegs,
             stagePath, threshold, qualityGate)
@@ -890,7 +849,7 @@ object StreamingOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
         val priorSegs = segmentReadSet(segmentBasePath, batchId)
-        publishDirAtomic(segmentBasePath, s"seg_$batchId") { stagePath =>
+        Publish.dir(s"$segmentBasePath/seg_$batchId") { stagePath =>
           val survivors = graft.multimodal.Multimodal.curateMediaIncremental(
             batch.toDF(), seedIndexPaths ++ priorSegs, stagePath, minShared)
           survivors.write.mode("overwrite")
@@ -931,7 +890,7 @@ object StreamingOps {
           .getOrElse(seedSnapshotPath)
         val snap = spark.read.parquet(prior)
         val merged = graft.core.Merge.scd1Upsert(snap, batch.toDF(), key)
-        publishDirAtomic(snapshotBasePath, s"v_$batchId") { stagePath =>
+        Publish.dir(s"$snapshotBasePath/v_$batchId") { stagePath =>
           merged.write.mode("overwrite").parquet(stagePath)
         }
         advanceLatestPointer(snapshotBasePath, batchId)
@@ -976,14 +935,12 @@ object StreamingOps {
         val updated = graft.corpus.Corpus.updateClusters(
           spark.read.parquet(priorLabels), batch.toDF(),
           seedIndexPaths ++ priorSegs, threshold)
-        publishDirAtomic(s"$basePath/labels", s"v_$batchId") { stagePath =>
+        Publish.dir(s"$basePath/labels/v_$batchId") { stagePath =>
           updated.select("doc_id", "cluster_id")
             .write.mode("overwrite").parquet(stagePath)
         }
         advanceLatestPointer(s"$basePath/labels", batchId)
-        publishDirAtomic(s"$basePath/segments", s"seg_$batchId") { stagePath =>
-          graft.corpus.Corpus.writeLshIndex(batch.toDF(), stagePath)
-        }
+        graft.corpus.Corpus.writeLshIndex(batch.toDF(), s"$basePath/segments/seg_$batchId")
         advanceLatestPointer(s"$basePath/segments", batchId)
         maybeCompactSegments(spark, s"$basePath/segments", batchId,
           compactTrigger)

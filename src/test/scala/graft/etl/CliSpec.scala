@@ -150,6 +150,25 @@ class CliSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("malformed input is rejected naming the option and the subcommand") {
+    val base = tmpDir("cli_malformed")
+    val missing = intercept[IllegalArgumentException](
+      run("run", "--raw-dir", s"$base/raw", "--curated-dir", s"$base/curated",
+        "--reference-dir", s"$base/ref"))
+    assert(missing.getMessage.contains("run") && missing.getMessage.contains("--month"),
+      missing.getMessage)
+    val dangling = intercept[IllegalArgumentException](
+      run("curate", "--documents", s"$base/docs", "--out"))
+    assert(dangling.getMessage.contains("curate") && dangling.getMessage.contains("--out"),
+      dangling.getMessage)
+    val stray = intercept[IllegalArgumentException](
+      run("index", "--documents", s"$base/docs", "stray", "--out", s"$base/idx"))
+    assert(stray.getMessage.contains("index") && stray.getMessage.contains("stray"),
+      stray.getMessage)
+    assert(!new java.io.File(s"$base/curated").exists())
+    assert(!spark.sparkContext.isStopped)
+  }
+
   test("version prints without touching Spark") {
     // (the unknown-subcommand path calls sys.exit and is deliberately
     // not driven here — it would terminate the forked test JVM)

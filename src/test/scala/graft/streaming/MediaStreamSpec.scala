@@ -518,10 +518,10 @@ class MediaStreamSpec extends SparkSpec {
     // set — that invisibility is what makes the fold-then-recheck
     // publish safe (a batch starting mid-fold can never read a
     // half-built cmp)
-    val stray = java.nio.file.Paths.get(segBase, ".oob_cmp_99")
+    val stray = java.nio.file.Paths.get(segBase, ".stage_cmp_99")
     java.nio.file.Files.createDirectories(stray)
     try assert(!StreamingOps.segmentReadSet(segBase, 1000L)
-        .exists(_.contains("oob_cmp")),
+        .exists(_.contains(".stage_")),
       "a staged out-of-band fold leaked into a stream read set")
     finally graft.core.Scratch.deleteTree(stray)
     spark.catalog.clearCache()
