@@ -26,6 +26,8 @@ import org.apache.spark.sql.SparkSession
   * reader that cannot tolerate it follows a pointer file written by
   * [[file]].
   *
+  * [[stage]] runs step 1 now and leaves steps 2–4 to its caller, so
+  * outputs that belong together become visible only once all exist.
   * [[file]] publishes one local file the same way, with one replacing
   * rename instead of steps 2–4.
   *
@@ -38,7 +40,16 @@ import org.apache.spark.sql.SparkSession
   */
 object Publish {
 
-  def dir(target: String)(write: String => Unit): Unit = {
+  def dir(target: String)(write: String => Unit): Unit = stage(target)(write).publish()
+
+  /** [[dir]] in two steps: `write` fills the stage now (step 1), and the
+    * returned handle later publishes it (steps 2–4) or discards it.
+    * Until then the target is untouched and the stage stays readable at
+    * [[Staged.path]], so several outputs can be written first and made
+    * visible only once all of them exist. If `write` throws, the stage is
+    * deleted, as in [[dir]].
+    */
+  def stage(target: String)(write: String => Unit): Staged = {
     val t = Target(target)
     t.mkdirs(t.parent)
     val (stage, aside) = (t.sibling(".stage_"), t.sibling(".aside_"))
@@ -49,12 +60,26 @@ object Publish {
     var written = false
     try { write(t.show(stage)); written = true }
     finally if (!written) t.delete(stage)
-    val replacing = t.exists(t.path)
-    if (replacing) t.rename(t.path, aside)
-    var published = false
-    try { t.rename(stage, t.path); published = true }
-    finally if (!published && replacing) t.rename(aside, t.path)
-    t.delete(aside)
+    new Staged(t, stage, aside)
+  }
+
+  /** a written stage of [[stage]]: exactly one of [[publish]] and
+    * [[discard]] is called, once
+    */
+  final class Staged private[Publish] (t: Target, stage: HPath, aside: HPath) {
+    /** where the writer left the output */
+    val path: String = t.show(stage)
+
+    def publish(): Unit = {
+      val replacing = t.exists(t.path)
+      if (replacing) t.rename(t.path, aside)
+      var published = false
+      try { t.rename(stage, t.path); published = true }
+      finally if (!published && replacing) t.rename(aside, t.path)
+      t.delete(aside)
+    }
+
+    def discard(): Unit = t.delete(stage)
   }
 
   def file(target: String)(write: String => Unit): Unit = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Flat BI export ≙ reference scripts/export_bi_datasets.py: month-filter
   * the fact, margin-enrich + column-order the KPI, copy the DQ audit
-  * files, emit a data dictionary.
+  * files, emit a data dictionary. The three CSVs write side by side.
   */
 object BiExport {
 
@@ -26,7 +26,7 @@ object BiExport {
       .filter(col("month") === month)
     val keep = kpiCols.filter(enriched.columns.contains) ++
       Seq("gross_margin_pct", "operating_margin_pct")
-    enriched.select(keep.map(col): _*).orderBy("entity", "month")
+    EtlIO.sortedLocally(enriched.select(keep.map(col): _*), "entity", "month")
   }
 
   def export(
@@ -41,18 +41,13 @@ object BiExport {
     val factM = factForMonth(fact, month)
       .orderBy("date", "entity", "source", "document_id")
     val kpiM = kpiForMonth(kpi, month)
-    EtlIO.writeSingleCsv(factM, s"$outDir/fact_transactions.csv")
-    EtlIO.writeSingleCsv(dimAccounts, s"$outDir/dim_accounts.csv")
-    EtlIO.writeSingleCsv(kpiM, s"$outDir/kpi_monthly.csv")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(dqSummaryCsv),
-      java.nio.file.Paths.get(s"$outDir/dq_summary.csv"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(dqExceptionsCsv),
-      java.nio.file.Paths.get(s"$outDir/dq_exceptions.csv"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    EtlIO.concurrently(spark, Seq(
+      "fact_transactions" -> factM, "dim_accounts" -> dimAccounts, "kpi_monthly" -> kpiM)
+      .map { case (name, df) =>
+        s"bi: $name.csv" -> (() => EtlIO.writeSingleCsv(df, s"$outDir/$name.csv"))
+      })
+    EtlIO.copyFile(dqSummaryCsv, s"$outDir/dq_summary.csv")
+    EtlIO.copyFile(dqExceptionsCsv, s"$outDir/dq_exceptions.csv")
     // pandas-list rendering for byte parity with the reference's
     // data_dictionary.txt (data/bi/2025-12/data_dictionary.txt)
     def pyList(cols: Seq[String]): String = cols.map(c => s"'$c'").mkString("[", ", ", "]")

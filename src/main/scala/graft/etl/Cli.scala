@@ -120,23 +120,20 @@ object Cli {
         println(s"fact=${out.fact}")
         println(s"dim_accounts=${out.dimAccounts}")
         println(s"kpi=${out.kpi}")
+        // the three curated outputs, read once for every exporter
+        val (fact, dim, kpi) = (spark.read.parquet(out.fact),
+          spark.read.parquet(out.dimAccounts), spark.read.parquet(out.kpi))
         opts.get("star-dir").foreach { dir =>
-          StarSchema.export(spark,
-            spark.read.parquet(out.fact), spark.read.parquet(out.dimAccounts),
-            spark.read.parquet(out.kpi), opts("month"), dir)
+          StarSchema.export(spark, fact, dim, kpi, opts("month"), dir)
           println(s"star=$dir")
         }
         opts.get("bi-dir").foreach { dir =>
-          BiExport.export(spark,
-            spark.read.parquet(out.fact), spark.read.parquet(out.dimAccounts),
-            spark.read.parquet(out.kpi), out.dqExceptions, out.dqSummary,
+          BiExport.export(spark, fact, dim, kpi, out.dqExceptions, out.dqSummary,
             opts("month"), dir)
           println(s"bi=$dir")
         }
         opts.get("dashboard").foreach { path =>
-          val html = Dashboard.buildHtml(spark,
-            spark.read.parquet(out.fact), spark.read.parquet(out.dimAccounts),
-            spark.read.parquet(out.kpi),
+          val html = Dashboard.buildHtml(spark, fact, dim, kpi,
             spark.read.option("header", "true").csv(out.dqExceptions),
             spark.read.option("header", "true").csv(out.dqSummary),
             opts("month"))

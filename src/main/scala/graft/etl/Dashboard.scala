@@ -27,9 +27,8 @@ object Dashboard {
 
   /** KPI trend rows for the chosen entities (entity, month, metrics). */
   def kpiTrend(kpi: DataFrame, entities: Seq[String]): DataFrame =
-    kpi.filter(col("entity").isin(entities: _*))
-      .select("entity", "month", "Revenue", "gross_profit", "operating_profit")
-      .orderBy("entity", "month")
+    EtlIO.sortedLocally(kpi.filter(col("entity").isin(entities: _*))
+      .select("entity", "month", "Revenue", "gross_profit", "operating_profit"), "entity", "month")
 
   /** top-15 expense accounts by Σ|amount_base|
     * (build_dashboard.py:141–166: join COA, case-insensitive 'expense').
@@ -89,7 +88,10 @@ object Dashboard {
     case x => x.toString
   }
 
-  /** assemble the dashboard HTML from the curated layer. */
+  /** assemble the dashboard HTML from the curated layer; the four
+    * independent collects (the trend follows its top entities) run side
+    * by side
+    */
   def buildHtml(
       spark: SparkSession,
       fact: DataFrame,
@@ -99,13 +101,15 @@ object Dashboard {
       dqSummary: DataFrame,
       month: String): String = {
 
-    val top = topEntitiesByRevenue(kpi)
-    val topRows = top.collect()
-    val entities = topRows.map(_.getString(0)).toSeq
-    val trend = kpiTrend(kpi, entities).collect()
-    val expense = topExpenseAccounts(fact, dimAccounts).collect()
-    val exRows = dqExceptions.limit(200).collect()
-    val sumRows = dqSummary.collect()
+    val Seq(Seq(topRows, trend), Seq(expense), Seq(exRows), Seq(sumRows)) =
+      EtlIO.concurrently(spark, Seq[(String, () => Seq[Array[Row]])](
+        "dashboard: kpi trend" -> { () =>
+          val top = topEntitiesByRevenue(kpi).collect()
+          Seq(top, kpiTrend(kpi, top.map(_.getString(0)).toSeq).collect())
+        },
+        "dashboard: expense accounts" -> (() => Seq(topExpenseAccounts(fact, dimAccounts).collect())),
+        "dashboard: dq exceptions" -> (() => Seq(dqExceptions.limit(200).collect())),
+        "dashboard: dq summary" -> (() => Seq(dqSummary.collect()))))
 
     def rowsOf(rs: Array[Row]): Seq[Seq[String]] =
       rs.map(r => r.toSeq.map(fmt)).toSeq

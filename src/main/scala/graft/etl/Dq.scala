@@ -1,6 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -174,42 +176,45 @@ object Dq {
   val datasets: Seq[String] =
     Seq("sales", "expenses", "payroll", "inventory_movements", "fx_rates")
 
-  /** per-dataset error/warn/issue counts with PASS/FAIL status
-    * (quality.py:205–249): static dataset backbone left-joined to pivoted
-    * severity counts, zero-filled.
+  /** exception rows per (dataset, severity): the one grouped count that
+    * both the summary and the gate read
     */
-  def summaryTable(spark: SparkSession, exceptions: DataFrame, failOn: String): DataFrame = {
-    import spark.implicits._
-    val base = datasets.toDF("dataset")
-    val counts = exceptions
-      .groupBy("dataset")
-      .pivot("severity", Seq("ERROR", "WARN"))
-      .count()
-      .na.fill(0L, Seq("ERROR", "WARN"))
-      .withColumnRenamed("ERROR", "error_count")
-      .withColumnRenamed("WARN", "warn_count")
-    val status = FailOn.normalize(failOn) match {
-      case FailOn.Never => lit("PASS")
-      case FailOn.Warn  => when(col("issue_count") > 0, "FAIL").otherwise("PASS")
-      case _            => when(col("error_count") > 0, "FAIL").otherwise("PASS")
+  type SeverityCounts = Map[(String, String), Long]
+
+  def severityCounts(exceptions: DataFrame): SeverityCounts =
+    exceptions.groupBy("dataset", "severity").count().collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+
+  /** per-dataset error/warn/issue counts with PASS/FAIL status
+    * (quality.py:205–249): the static dataset backbone in the
+    * reference's order, zero-filled, as a local frame
+    */
+  def summaryTable(spark: SparkSession, counts: SeverityCounts, failOn: String): DataFrame = {
+    val rows = datasets.map { d =>
+      val (errors, warns) = (counts.getOrElse((d, "ERROR"), 0L), counts.getOrElse((d, "WARN"), 0L))
+      Row(d, errors, warns, errors + warns, status(errors, warns, failOn))
     }
-    base.join(counts, Seq("dataset"), "left")
-      .na.fill(0L, Seq("error_count", "warn_count"))
-      .withColumn("issue_count", col("error_count") + col("warn_count"))
-      .withColumn("status", status)
-      .select("dataset", "error_count", "warn_count", "issue_count", "status")
-      // preserve the reference's fixed dataset order
-      .orderBy(array_position(lit(datasets.toArray), col("dataset")))
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("dataset", StringType),
+      StructField("error_count", LongType, nullable = false),
+      StructField("warn_count", LongType, nullable = false),
+      StructField("issue_count", LongType, nullable = false),
+      StructField("status", StringType, nullable = false))))
   }
 
-  /** overall gate status (quality.py:186–202). */
-  def overallStatus(exceptions: DataFrame, failOn: String): String = {
-    FailOn.normalize(failOn) match {
-      case FailOn.Never => "PASS"
-      case FailOn.Warn  => if (exceptions.isEmpty) "PASS" else "FAIL"
-      case _ =>
-        if (exceptions.filter(col("severity") === "ERROR").isEmpty) "PASS" else "FAIL"
+  /** overall gate status (quality.py:186–202) */
+  def overallStatus(counts: SeverityCounts, failOn: String): String = {
+    val (errors, others) = counts.partition(_._1._2 == "ERROR")
+    status(errors.values.sum, others.values.sum, failOn)
+  }
+
+  private def status(errors: Long, warns: Long, failOn: String): String = {
+    val fails = FailOn.normalize(failOn) match {
+      case FailOn.Never => false
+      case FailOn.Warn  => errors + warns > 0
+      case _            => errors > 0
     }
+    if (fails) "FAIL" else "PASS"
   }
 
   /** empty exceptions frame with the audit schema + severity (V8). */

@@ -2,7 +2,11 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
+import scala.concurrent.{blocking, Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -250,9 +254,53 @@ object EtlIO {
     } finally Scratch.deleteTree(parts)
   }
 
-  def writeText(path: String, content: String): Unit = {
-    val p = Paths.get(path)
-    Option(p.getParent).foreach(Files.createDirectories(_))
-    Files.writeString(p, content)
+  def writeText(path: String, content: String): Unit =
+    Publish.file(path)(stage => Files.writeString(Paths.get(stage), content))
+
+  /** `src` copied to `path`, published like every other export */
+  def copyFile(src: String, path: String): Unit =
+    Publish.file(path)(stage => Files.copy(Paths.get(src), Paths.get(stage)))
+
+  /** `df` in `keys` order as one partition, for outputs that are
+    * audit-sized by contract (the DQ audit, dims, KPI tables, dashboard
+    * aggregates): a local sort behind a 1-partition exchange costs no
+    * range-sampling job, and every reader runs 1-task stages. The
+    * exchange (not a coalesce) keeps the work that builds `df` wide.
+    * Fact-sized frames keep a parallel `orderBy`.
+    */
+  def sortedLocally(df: DataFrame, keys: String*): DataFrame =
+    df.repartition(1).sortWithinPartitions(keys.map(org.apache.spark.sql.functions.col): _*)
+
+  /** an audit-sized frame computed once and served as a local relation:
+    * its readers plan over the rows instead of re-running its plan
+    */
+  def materialize(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
+
+  /** Runs independent sinks side by side, each in its own future and
+    * under its own job description, and returns their results in order
+    * once every one has stopped; the first failure in that order is then
+    * rethrown. A frame the sinks share is built before this call, never
+    * inside it: concurrent first readers of one cache each compute it.
+    */
+  def concurrently[T](spark: SparkSession, sinks: Seq[(String, () => T)]): Seq[T] =
+    settle(sinks.map { case (label, sink) => labelledFuture(spark, label)(sink()) }).map(_.get)
+
+  /** `body` with its jobs under the description `label` (the thread-local
+    * label that listener-based attribution reads), reset afterwards
+    */
+  private[etl] def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
+    spark.sparkContext.setJobDescription(label)
+    try body finally spark.sparkContext.setJobDescription(null)
+  }
+
+  /** [[labelled]] on a pool thread */
+  private[etl] def labelledFuture[T](spark: SparkSession, label: String)(body: => T): Future[T] =
+    Future(blocking(labelled(spark, label)(body)))
+
+  /** waits for every future, then returns their outcomes in order */
+  private[etl] def settle[T](futures: Seq[Future[T]]): Seq[Try[T]] = {
+    futures.foreach(Await.ready(_, Duration.Inf))
+    futures.map(_.value.get)
   }
 }

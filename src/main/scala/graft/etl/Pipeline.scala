@@ -1,22 +1,29 @@
 package graft.etl
 
-import scala.concurrent.{blocking, Await, Future}
+import scala.concurrent.{blocking, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Caches
+import graft.core.{Caches, Publish}
+
+import EtlIO.settle
 
 /** End-to-end monthly close ≙ reference pipeline.run_month
   * (pipeline.py:50–191): scan → validate (lazy-collect) → gate → month
   * filter → FX → fact → KPI → sinks.
   *
-  * Plan shape (SURVEY §3.1): stages form one logical plan forest; the DQ
-  * gate is the single mid-pipeline action (a count over the unioned
-  * exception plans) before the three writes. Raw frames are cached
-  * across the gate + fact build to avoid re-scanning (SURVEY §7.4.9).
+  * Plan shape (SURVEY §3.1): after the per-table coerce chains, the
+  * close is two concurrent branches over the chains' caches. The DQ
+  * branch writes the audit and decides the gate from one grouped count.
+  * The curated branch writes the fact, then the KPI from the fact's
+  * stage, and the dim, each into its own [[graft.core.Publish.stage]].
+  * The three tables are published only once the gate has passed and the
+  * fact has every FX rate, so a rejected close leaves the previous
+  * curated set as it was. Raw frames are cached across both branches to
+  * avoid re-scanning (SURVEY §7.4.9).
   */
 object Pipeline {
 
@@ -44,123 +51,113 @@ object Pipeline {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(curatedDir))
     // phase labels (guide §1.5): job descriptions are thread-local and
     // cost nothing; they exist so listener-based attribution (Profile) can
-    // split the close's AQE-future jobs by pipeline phase
-    val sc = spark.sparkContext
-    def phase[T](name: String)(body: => T): T = {
-      sc.setJobDescription(s"close: $name")
-      try body finally sc.setJobDescription(null)
-    }
+    // split the close's concurrent jobs by pipeline phase
+    def phase[T](name: String)(body: => T): T = EtlIO.labelled(spark, s"close: $name")(body)
+    def inPhase[T](name: String)(body: => T): Future[T] =
+      EtlIO.labelledFuture(spark, s"close: $name")(body)
 
     // reference COA → dim_accounts (pipeline.py:69–75)
     val coa = EtlIO.readCsv(spark, s"$referenceDir/chart_of_accounts.csv", Schemas.chartOfAccounts)
     val dimAccounts = Transform.dimAccounts(coa)
 
-    // raw scans, all-strings for pandera-style coercion checks
+    // raw scans, all-strings for pandera-style coercion checks; RI checks
+    // on sales/expenses (pipeline.py:126–127)
     val tables = Seq(
-      Dq.salesSchema(settings) -> s"$rawDir/sales.csv",
-      Dq.expensesSchema(settings) -> s"$rawDir/expenses.csv",
-      Dq.payrollSchema(settings) -> s"$rawDir/payroll.csv",
-      Dq.inventorySchema(settings) -> s"$rawDir/inventory_movements.csv",
-      Dq.fxSchema(settings) -> s"$rawDir/fx_rates.csv")
+      (Dq.salesSchema(settings), s"$rawDir/sales.csv", Some(dimAccounts)),
+      (Dq.expensesSchema(settings), s"$rawDir/expenses.csv", Some(dimAccounts)),
+      (Dq.payrollSchema(settings), s"$rawDir/payroll.csv", None),
+      (Dq.inventorySchema(settings), s"$rawDir/inventory_movements.csv", None),
+      (Dq.fxSchema(settings), s"$rawDir/fx_rates.csv", None))
 
     // every cache the close creates is released on every exit path,
     // gate rejection and missing FX rates included
     Caches.scoped { own =>
-      // One scan per table: the cached coerced frame feeds both the
-      // exception plans and the downstream fact build. The audited read
-      // splits off malformed lines as corrupt_record exceptions BEFORE
-      // coercion — a broken line is reported through the DQ gate, never
-      // silently padded into nulls (quality.py:98–115 philosophy).
+      // One scan per table: the cached read feeds both the exception
+      // plans and the downstream fact build. The audited read splits off
+      // malformed lines as corrupt_record exceptions BEFORE coercion — a
+      // broken line is reported through the DQ gate, never silently
+      // padded into nulls (quality.py:98–115 philosophy).
       //
-      // Each table's whole chain (audited read → coerce → index → cache
-      // → count) is built AND forced inside its own labelled future
-      // (guide §2.6 overlap-independent-jobs). Building is not free: the
-      // index's sort runs its sample and shuffle jobs while the frame is
-      // built, and planning a chain is driver-bound. On one thread the
-      // five chains would plan one after another before the first job
-      // ran; on five, planning and jobs overlap. Every future is awaited
-      // before the first failure is rethrown, so no chain is still
-      // creating caches when the scope releases them.
-      val chains = tables.map { case (ts, path) =>
-        Future(blocking(phase(s"coerce-${ts.name}") {
-          val audited = EtlIO.readCsvRawAudited(spark, path, ts.schema, ts.name, own)
-          val coerced = own(Validator.coerce(audited.clean, ts))
-          coerced.count()
-          val ex = Validator.exceptionsFromCoerced(spark, coerced, ts, Some(audited.header))
-            .unionByName(audited.exceptions)
-          (ts, coerced, ex)
-        }))
-      }
-      chains.foreach(Await.ready(_, Duration.Inf))
-      val validated = chains.map(_.value.get.get)
-      val coercedByName = validated.map { case (ts, coerced, _) => ts.name -> coerced }.toMap
-      val typedByName = validated.map { case (ts, coerced, _) =>
-        ts.name -> coerced.select(ts.schema.fieldNames.map(col).toSeq: _*)
+      // Each table's whole chain (audited read → probe → index, where a
+      // row check fires) is built AND forced inside its own labelled
+      // future (guide §2.6 overlap-independent-jobs): planning a chain is
+      // driver-bound, so on five threads planning and jobs overlap. Every
+      // future is awaited before the first failure is rethrown, so no
+      // chain is still creating caches when the scope releases them.
+      val audits = settle(tables.map { case (ts, path, coaCheck) =>
+        inPhase(s"coerce-${ts.name}") {
+          val read = EtlIO.readCsvRawAudited(spark, path, ts.schema, ts.name, own)
+          ts -> Validator.audit(spark, read, ts, coaCheck, own)
+        }
+      }).map(_.get)
+
+      // exception frames are audit-sized by CONTRACT (human-readable
+      // output, quality.py:205–249; the sink below is single-file CSV).
+      // Only the DQ branch reads this cache, one action after the other.
+      val withSeverity = own(EtlIO.sortedLocally(
+        Dq.addSeverity(audits.map(_._2.exceptions).reduce(_.unionByName(_))),
+        "dataset", "check", "index"))
+
+      // the curated branch's inputs, built before any branch starts so
+      // that nothing between the branches' start and their settling can
+      // throw: month window filter (pipeline.py:164–170)
+      val typed = audits.map { case (ts, a) =>
+        ts.name -> a.typed.select(ts.schema.fieldNames.map(col).toSeq: _*)
       }.toMap
-
-      // RI checks on sales/expenses (pipeline.py:126–127) rank rows by
-      // the coerce-time __idx of the cached frames
-      val riChecks = Seq(
-        Validator.accountInCoaIndexed(coercedByName("sales"), "sales", dimAccounts),
-        Validator.accountInCoaIndexed(coercedByName("expenses"), "expenses", dimAccounts))
-
-      val allExceptions = (validated.map(_._3) ++ riChecks).reduce(_.unionByName(_))
-      // exception frames are audit-sized by CONTRACT (human-readable output,
-      // quality.py:205–249; the sink below is single-file CSV), so their
-      // deterministic order comes from a local sort behind a 1-partition
-      // exchange instead of a global range sort: no range-sampling job, and
-      // every consumer of the cache (summary pivot, gate count, CSV write)
-      // runs 1-task stages instead of 32-wide ones — the close is
-      // orchestration-bound at bench scale and this is pure orchestration.
-      // repartition (not coalesce) keeps the check evaluation itself wide:
-      // the narrowing happens at a shuffle boundary, after the per-row
-      // checks ran parallel over the raw partitions. The fact/KPI sorts
-      // below stay parallel: those scale with the data.
-      val withSeverity = own(Dq.addSeverity(allExceptions)
-        .repartition(1)
-        .sortWithinPartitions("dataset", "check", "index"))
-
-      // gate: write audit trail, then fail if needed (pipeline.py:129–162)
-      val exPath = s"$curatedDir/dq_exceptions.csv"
-      val sumPath = s"$curatedDir/dq_summary.csv"
-      val summary = Dq.summaryTable(spark, withSeverity, mode)
-      phase("dq-exceptions")(EtlIO.writeSingleCsv(withSeverity, exPath))
-      phase("dq-summary")(EtlIO.writeSingleCsv(summary, sumPath))
-      if (phase("dq-gate")(Dq.overallStatus(withSeverity, mode)) == "FAIL")
-        throw DqGateFailedException(exPath, sumPath)
-
-      // month window filter (pipeline.py:164–170)
       val start = to_date(lit(s"$month-01"))
       val end = add_months(start, 1)
       def inWindow(df: DataFrame) =
         df.filter(col("date") >= start && col("date") < end)
 
-      val sales = inWindow(typedByName("sales"))
-      val expenses = inWindow(typedByName("expenses"))
-      val inventory = inWindow(typedByName("inventory_movements"))
-      val payroll = typedByName("payroll").filter(col("month") === month)
-      val fx = Transform.fxToBase(typedByName("fx_rates"), settings.baseCurrency)
+      val sales = inWindow(typed("sales"))
+      val expenses = inWindow(typed("expenses"))
+      val inventory = inWindow(typed("inventory_movements"))
+      val payroll = typed("payroll").filter(col("month") === month)
+      val fx = Transform.fxToBase(typed("fx_rates"), settings.baseCurrency)
 
+      // DQ branch: write the audit trail, then decide (pipeline.py:129–162)
+      val exPath = s"$curatedDir/dq_exceptions.csv"
+      val sumPath = s"$curatedDir/dq_summary.csv"
+      val gate = Future(blocking {
+        phase("dq-exceptions")(EtlIO.writeSingleCsv(withSeverity, exPath))
+        val counts = phase("dq-gate")(Dq.severityCounts(withSeverity))
+        phase("dq-summary")(EtlIO.writeSingleCsv(Dq.summaryTable(spark, counts, mode), sumPath))
+        Dq.overallStatus(counts, mode) == "PASS"
+      })
+
+      // curated branch, beside the DQ branch: the three staged tables
       val outFact = s"$curatedDir/fact_transactions.parquet"
       val outDim = s"$curatedDir/dim_accounts.parquet"
       val outKpi = s"$curatedDir/kpi_monthly.parquet"
-      // each build runs inside its sink's phase: the fact build's
-      // missing-rate collect and the KPI build's collects are jobs too
-      phase("fact-write")(EtlIO.writeParquet(Transform.toFactTransactions(
-        sales, expenses, payroll, inventory, fx, settings.baseCurrency), outFact))
-      phase("dim-write")(EtlIO.writeParquet(dimAccounts, outDim))
-      // KPI derives from the JUST-WRITTEN fact artifact: the fact frame is
-      // consumed twice (its own sink + the KPI aggregation), and un-cached
-      // that re-ran the whole five-source coerce→union→fx transform per
-      // consumer. Reading the materialized artifact back is the
-      // production shape — the close's fact table IS the durable output
-      // downstream reads — and costs one columnar scan instead of a
-      // second transform (or a fact-sized cache pinning executor memory;
-      // parquet round-trips the decimal/date/string columns exactly, so
-      // kpi_monthly is byte-identical — GoldenParitySpec).
-      phase("kpi-write")(EtlIO.writeParquet(
-        Transform.kpiMonthly(spark.read.parquet(outFact), dimAccounts), outKpi))
+      // the missing-rate probe rides the fact write: the write counts the
+      // rows without a rate, and only a close that has some pays a second
+      // job, over the staged fact, to list them
+      val fact = inPhase("fact-write")(Publish.stage(outFact) { stage =>
+        val noRate = Observation()
+        EtlIO.writeParquet(Transform.toFactTransactions(
+          sales, expenses, payroll, inventory, fx, settings.baseCurrency)
+          .observe(noRate, count(when(col("rate").isNull, 1)).as("rows")), stage)
+        if (noRate.get("rows").asInstanceOf[Long] > 0)
+          throw Transform.MissingFxRatesException(Transform.missingFxPairs(spark.read.parquet(stage)))
+      })
+      val dim = inPhase("dim-write")(Publish.stage(outDim)(EtlIO.writeParquet(dimAccounts, _)))
+      // the KPI derives from the fact's stage: one columnar scan of the
+      // durable output instead of a second transform or a fact-sized
+      // cache (parquet round-trips the columns exactly)
+      val kpi = fact.flatMap(f => inPhase("kpi-write")(Publish.stage(outKpi)(
+        EtlIO.writeParquet(Transform.kpiMonthly(spark.read.parquet(f.path), dimAccounts), _))))
 
+      // commit: nothing returns or throws while a branch still runs; the
+      // gate's verdict wins over the fact's missing rates, as it did when
+      // the gate ran first
+      val curated = settle(Seq(fact, dim, kpi))
+      val verdict = settle(Seq(gate)).head
+        .flatMap(pass => if (pass) Success(()) else Failure(DqGateFailedException(exPath, sumPath)))
+        .flatMap(_ => curated.collectFirst { case Failure(e) => Failure(e) }.getOrElse(Success(())))
+      verdict match {
+        case Success(_) => curated.foreach(_.get.publish())
+        case Failure(e) => curated.foreach(_.foreach(_.discard())); throw e
+      }
       Outputs(exPath, sumPath, outFact, outDim, outKpi)
     }
   }

@@ -4,14 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import EtlIO.sortedLocally
+
 /** Star-schema BI export ≙ reference scripts/export_powerbi_star_schema.py:
   * dim_date / dim_month / dim_entity / dim_account (dense surrogate keys)
   * + fact_gl / fact_kpi_monthly.
   *
   * Surrogate keys are `row_number` over the sorted dim (SURVEY W1) —
   * dense and deterministic, never `monotonically_increasing_id`. Dims are
-  * tiny by definition, so the single-partition window is fine; facts get
-  * their keys via broadcast joins (the reference's dict `.map`, J5).
+  * tiny by definition, so the single-partition window is fine and each
+  * dim is [[EtlIO.sortedLocally]]; facts get their keys via broadcast
+  * joins (the reference's dict `.map`, J5).
   */
 object StarSchema {
 
@@ -53,7 +56,7 @@ object StarSchema {
     val keyed = entities.withColumn("entity_key",
       row_number().over(Window.orderBy("entity")))
     if (!factM.columns.contains("currency"))
-      return keyed.select("entity_key", "entity").orderBy("entity_key")
+      return sortedLocally(keyed.select("entity_key", "entity"), "entity_key")
     // "first per entity" in the fact's deterministic sort order (pandas
     // groupby().first() over the date/source/document-sorted fact); fall
     // back to whichever order keys the fact actually has
@@ -63,27 +66,25 @@ object StarSchema {
       .groupBy("entity")
       .agg(min_by(col("currency"),
         struct((orderKeys :+ "currency").map(col): _*)).as("currency"))
-    keyed.join(broadcast(firstCurrency), Seq("entity"), "left")
-      .select("entity_key", "entity", "currency")
-      .orderBy("entity_key")
+    sortedLocally(keyed.join(broadcast(firstCurrency), Seq("entity"), "left")
+      .select("entity_key", "entity", "currency"), "entity_key")
   }
 
   /** COA with dense account_key over sorted codes
     * (export_powerbi_star_schema.py:96–123).
     */
   def dimAccount(dimAccounts: DataFrame): DataFrame =
-    dimAccounts
+    sortedLocally(dimAccounts
       .withColumn("account_code", col("account_code").cast("string"))
       .dropDuplicates("account_code")
       .withColumn("account_key", row_number().over(Window.orderBy("account_code")))
-      .select("account_key", "account_code", "account_name", "account_type")
-      .orderBy("account_key")
+      .select("account_key", "account_code", "account_name", "account_type"), "account_key")
 
   /** calendar dim over the distinct fact dates
     * (export_powerbi_star_schema.py:126–156).
     */
   def dimDate(factM: DataFrame): DataFrame =
-    factM.select(to_date(col("date")).as("date")).filter(col("date").isNotNull)
+    sortedLocally(factM.select(to_date(col("date")).as("date")).filter(col("date").isNotNull)
       .distinct()
       .select(
         date_format(col("date"), "yyyyMMdd").cast("int").as("date_key"),
@@ -95,16 +96,14 @@ object StarSchema {
         month(col("date")).as("month"),
         date_format(col("date"), "MMM").as("month_name"),
         weekofyear(col("date")).as("week"),
-        dayofmonth(col("date")).as("day"))
-      .orderBy("date_key")
+        dayofmonth(col("date")).as("day")), "date_key")
 
   /** month dim rolled up from dim_date
     * (export_powerbi_star_schema.py:159–170).
     */
   def dimMonth(dimDate: DataFrame): DataFrame =
-    dimDate.groupBy("month_key", "month_label", "year", "quarter", "month", "month_name")
-      .agg(min("date_key").as("month_start_date_key"))
-      .orderBy("month_key")
+    sortedLocally(dimDate.groupBy("month_key", "month_label", "year", "quarter", "month", "month_name")
+      .agg(min("date_key").as("month_start_date_key")), "month_key")
 
   /** GL fact with surrogate keys (export_powerbi_star_schema.py:173–256):
     * amount from amount_base, date/month keys from the date, entity and
@@ -136,16 +135,18 @@ object StarSchema {
     val filtered = kpi.filter(col("month") === month)
     val kpiCols = Seq("Asset", "COGS", "Expense", "Liability", "Revenue",
       "gross_profit", "operating_profit").filter(filtered.columns.contains)
-    Transform.addMarginCols(filtered)
+    sortedLocally(Transform.addMarginCols(filtered)
       .join(broadcast(dimEntity.select("entity", "entity_key")), Seq("entity"), "left")
       .withColumn("month_key", lit(monthKey))
       .select(("month_key" +: "entity_key" +: (kpiCols ++
-        Seq("gross_margin_pct", "operating_margin_pct"))).map(col): _*)
-      .orderBy("entity_key")
+        Seq("gross_margin_pct", "operating_margin_pct"))).map(col): _*), "entity_key")
   }
 
   /** full export ≙ the script's main: month-filter the fact, build dims
-    * then facts, write 6 single-file CSVs + model notes.
+    * then facts, write 6 single-file CSVs + model notes. The three keyed
+    * dims are each computed once, side by side, and served as local
+    * frames to their CSVs and the two facts; the six CSVs then write
+    * side by side.
     */
   def export(
       spark: SparkSession,
@@ -160,16 +161,20 @@ object StarSchema {
         .withColumn("date", col(dc))
       case None => fact
     }
-    val dEntity = dimEntity(factM, kpi)
-    val dAccount = dimAccount(dimAccounts)
-    val dDate = dimDate(factM)
-    val dMonth = dimMonth(dDate)
-    EtlIO.writeSingleCsv(dDate, s"$outDir/dim_date.csv")
-    EtlIO.writeSingleCsv(dMonth, s"$outDir/dim_month.csv")
-    EtlIO.writeSingleCsv(dEntity, s"$outDir/dim_entity.csv")
-    EtlIO.writeSingleCsv(dAccount, s"$outDir/dim_account.csv")
-    EtlIO.writeSingleCsv(factGl(factM, dEntity, dAccount), s"$outDir/fact_gl.csv")
-    EtlIO.writeSingleCsv(factKpiMonthly(kpi, dEntity, month), s"$outDir/fact_kpi_monthly.csv")
+    val Seq(dEntity, dAccount, dDate) = EtlIO.concurrently(spark, Seq(
+      "star: dim_entity" -> (() => EtlIO.materialize(dimEntity(factM, kpi))),
+      "star: dim_account" -> (() => EtlIO.materialize(dimAccount(dimAccounts))),
+      "star: dim_date" -> (() => EtlIO.materialize(dimDate(factM)))))
+    val sinks = Seq(
+      "dim_date" -> dDate,
+      "dim_month" -> dimMonth(dDate),
+      "dim_entity" -> dEntity,
+      "dim_account" -> dAccount,
+      "fact_gl" -> factGl(factM, dEntity, dAccount),
+      "fact_kpi_monthly" -> factKpiMonthly(kpi, dEntity, month))
+    EtlIO.concurrently(spark, sinks.map { case (name, df) =>
+      s"star: $name.csv" -> (() => EtlIO.writeSingleCsv(df, s"$outDir/$name.csv"))
+    })
     EtlIO.writeText(s"$outDir/POWERBI_MODEL_NOTES.txt", modelNotes(month))
   }
 

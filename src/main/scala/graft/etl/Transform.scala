@@ -25,7 +25,8 @@ object Transform {
       .filter(col("to_currency") === baseCurrency)
 
   /** Raised when fact rows reference (date, currency) pairs with no FX
-    * rate (transform.py:40–42).
+    * rate (transform.py:40–42); `pairs` are the first 20 in (date,
+    * currency) order.
     */
   final case class MissingFxRatesException(pairs: Seq[(String, String)])
     extends RuntimeException(
@@ -33,36 +34,50 @@ object Transform {
 
   /** FX-normalize `amount` to the base currency (transform.py:19–46):
     * left-broadcast-join the day-grain rate, base currency pinned at 1.0,
-    * hard error listing the distinct missing (date, currency) pairs,
+    * hard error listing the missing (date, currency) pairs,
     * amount_base = bround(amount·rate, 2).
     *
-    * The missing-rate probe is one small aggregate over the joined plan —
-    * the only mid-pipeline action, mirroring the reference's fail-fast
-    * contract.
+    * Eager: the missing-rate probe is one small aggregate over the joined
+    * plan, run before this returns. The close instead counts the rows
+    * without a rate inside its fact write ([[Pipeline.runMonth]]).
     */
   def addFxAmountBase(df: DataFrame, fx: DataFrame, baseCurrency: String): DataFrame = {
+    val joined = withRate(df, fx, baseCurrency)
+    val missing = missingFxPairs(joined.withColumn("date", col("date_key")))
+    if (missing.nonEmpty) throw MissingFxRatesException(missing)
+    withAmountBase(joined)
+  }
+
+  /** `df` plus the day-grain `rate` into the base currency, null where
+    * none exists; lazy
+    */
+  private def withRate(df: DataFrame, fx: DataFrame, baseCurrency: String): DataFrame = {
     val fxLookup = fx.select(
       col("date").as("fx_date"),
       col("from_currency"),
       col("rate").as("fx_rate"))
-    val joined = df
+    df
       .withColumn("date_key", to_date(col("date")))
       .join(broadcast(fxLookup),
         col("date_key") === col("fx_date") && col("currency") === col("from_currency"),
         "left")
       .withColumn("rate",
         when(col("currency") === baseCurrency, lit(1.0)).otherwise(col("fx_rate")))
+  }
 
-    val missing = joined.filter(col("rate").isNull)
-      .select(col("date_key").cast("string"), col("currency"))
-      .distinct().limit(20).collect()
-    if (missing.nonEmpty)
-      throw MissingFxRatesException(missing.toSeq.map(r => (r.getString(0), r.getString(1))))
-
+  private def withAmountBase(joined: DataFrame): DataFrame =
     joined
       .withColumn("amount_base", bround(col("amount") * col("rate"), 2))
       .drop("date_key", "fx_date", "from_currency", "fx_rate")
-  }
+
+  /** the first 20 distinct (date, currency) pairs, in that order, of the
+    * rows of `rows` whose `rate` is null
+    */
+  def missingFxPairs(rows: DataFrame): Seq[(String, String)] =
+    rows.filter(col("rate").isNull)
+      .select(col("date").cast("string").as("date"), col("currency"))
+      .distinct().orderBy("date", "currency").limit(20).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
 
   private val factShape =
     Seq("date", "entity", "source", "document_id", "account_code", "currency", "amount", "description")
@@ -72,6 +87,10 @@ object Transform {
     * posted at month-end to 61000001 as −net, inventory priced
     * qty×unit_cost signed by movement type), union-all, FX-normalize,
     * deterministic sort, txn_id concat.
+    *
+    * Lazy: a row with no FX rate keeps a null `rate` and `amount_base`.
+    * The caller checks for such rows ([[missingFxPairs]]) before the
+    * fact becomes visible, as the close does in its fact write.
     */
   def toFactTransactions(
       sales: DataFrame,
@@ -120,7 +139,7 @@ object Transform {
       .withColumn("account_code", col("account_code").cast("string"))
       .withColumn("currency", col("currency").cast("string"))
 
-    addFxAmountBase(unioned, fx, baseCurrency)
+    withAmountBase(withRate(unioned, fx, baseCurrency))
       .withColumn("txn_id",
         concat_ws("|", col("entity"), col("source"), col("document_id")))
       .select(("txn_id" +: factShape.patch(6, Seq("amount", "rate", "amount_base"), 1))
@@ -137,7 +156,8 @@ object Transform {
     * (dropna=True) drops groups whose every account_type is unmapped.
     * Spark's value-less `pivot` is exactly that over the non-null types:
     * one distinct job finds the observed values, sorted, and the pivot
-    * is then one shuffle on (entity, month).
+    * is then one shuffle on (entity, month). The table is audit-sized
+    * (entities × months): [[EtlIO.sortedLocally]].
     */
   def kpiMonthly(fact: DataFrame, dimAccounts: DataFrame): DataFrame = {
     val wide = fact
@@ -157,12 +177,11 @@ object Transform {
     val extraCols = withDefaults.columns.toSeq
       .filterNot(Seq("entity", "month").contains)
 
-    withDefaults
+    EtlIO.sortedLocally(withDefaults
       .withColumn("gross_profit", bround(col("Revenue") + col("COGS"), 2))
       .withColumn("operating_profit", bround(col("gross_profit") + col("Expense"), 2))
       .select((Seq("entity", "month") ++ extraCols ++
-        Seq("gross_profit", "operating_profit")).distinct.map(col): _*)
-      .orderBy("entity", "month")
+        Seq("gross_profit", "operating_profit")).distinct.map(col): _*), "entity", "month")
   }
 
   /** margin % enrichment (export_bi_datasets.py:45–55 and star export):

@@ -115,15 +115,17 @@ class DqEngineSpec extends SparkSpec {
       Seq(("sales", 0L, "amount", "greater_than(0.0)", "-1", "Column", null: Integer))
         .toDF("dataset", "index", "column", "check", "failure_case", "schema_context", "check_number")
         .withColumn("check_number", col("check_number").cast("int")))
-    val sum = Dq.summaryTable(spark, ex, FailOn.Error).collect()
+    // the close's one grouped count feeds both the summary and the gate
+    val counts = Dq.severityCounts(ex)
+    val sum = Dq.summaryTable(spark, counts, FailOn.Error).collect()
     assert(sum.map(_.getString(0)).toSeq ==
       Seq("sales", "expenses", "payroll", "inventory_movements", "fx_rates"))
     val sales = sum.head
     assert(sales.getAs[Long]("warn_count") == 1)
     assert(sales.getAs[Long]("error_count") == 0)
     assert(sales.getAs[String]("status") == "PASS") // ERROR mode ignores warns
-    assert(Dq.overallStatus(ex, FailOn.Error) == "PASS")
-    assert(Dq.overallStatus(ex, FailOn.Warn) == "FAIL")
-    assert(Dq.overallStatus(ex, FailOn.Never) == "PASS")
+    assert(Dq.overallStatus(counts, FailOn.Error) == "PASS")
+    assert(Dq.overallStatus(counts, FailOn.Warn) == "FAIL")
+    assert(Dq.overallStatus(counts, FailOn.Never) == "PASS")
   }
 }

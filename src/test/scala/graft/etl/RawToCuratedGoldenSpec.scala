@@ -294,4 +294,28 @@ class RawToCuratedGoldenSpec extends SparkSpec {
     }
     assert(e.pairs == Seq(("2025-12-07", "TZS")), s"got ${e.pairs}")
   }
+
+  test("more than 20 missing FX pairs list the first 20 in (date, currency) order") {
+    val base = tmpDir("raw_golden_many_missing_fx")
+    SampleData.write(s"$base/raw", "2025-12")
+    SampleData.writeChartOfAccounts(s"$base/ref")
+    val raw = java.nio.file.Paths.get(s"$base/raw")
+    java.nio.file.Files.writeString(raw.resolve("fx_rates.csv"), "date,from_currency,to_currency,rate\n")
+    // every non-USD fact row misses its rate: (date, currency) of the
+    // dated sources in the month, and payroll posted on the month's end
+    def rows(file: String): Seq[Array[String]] =
+      java.nio.file.Files.readAllLines(raw.resolve(file)).toArray(Array.empty[String])
+        .toSeq.tail.filter(_.nonEmpty).map(_.split(",", -1))
+    val dated = Seq("sales.csv" -> 4, "expenses.csv" -> 4, "inventory_movements.csv" -> 6)
+      .flatMap { case (f, cur) => rows(f).map(r => (r(0), r(cur))) }
+      .filter(_._1.startsWith("2025-12"))
+    val payroll = rows("payroll.csv").filter(_(0) == "2025-12").map(r => ("2025-12-31", r(3)))
+    val all = (dated ++ payroll).filter(_._2 != "USD").distinct.sorted
+    assert(all.size > 20, s"only ${all.size} missing pairs")
+    val e = intercept[Transform.MissingFxRatesException] {
+      Pipeline.runMonth(spark, Settings(), "2025-12",
+        s"$base/raw", s"$base/curated", s"$base/ref")
+    }
+    assert(e.pairs == all.take(20), s"got ${e.pairs}")
+  }
 }
