@@ -1,21 +1,20 @@
 package graft.core
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.TimeUnit
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Process-wide store for derived artifacts (posting and LSH indexes,
   * trained quantizers, BPE merge tables, cluster tables) and for scalar
   * statistics measured over them. Entries are keyed by (family, input
-  * fingerprint). The fingerprint is the sorted (relative path, size,
-  * mtime) listing of every file under the input table, e.g.
-  * `$dir/documents.parquet`. Rewriting an input in place therefore
-  * changes the key: the next call rebuilds into a fresh temp dir and
-  * deletes the stale one. Reuse across calls is sound only because it
+  * fingerprint). The fingerprint is the sorted (uri, size, mtime)
+  * listing of every file under the input table, e.g.
+  * `$dir/documents.parquet`, read through Hadoop's FileSystem ([[listing]]).
+  * Rewriting an input in place therefore changes the key: the next call
+  * rebuilds into a fresh temp dir and deletes the stale one. Reuse across calls is sound only because it
   * is keyed by what the artifact was built from.
   *
   * Builds are single-flight per (family, input). One caller builds while
@@ -44,7 +43,7 @@ object Artifacts {
   /** one key's state; read and written only under its own monitor */
   private final class Slot { var fp: Fingerprint = null; var value: Any = null }
 
-  /** (family, absolute input, None for the dir | Some(statistic key)) */
+  /** (family, qualified input URI, None for the dir | Some(statistic key)) */
   private val slots =
     new java.util.concurrent.ConcurrentHashMap[(String, String, Option[String]), Slot]()
   private val trainSecs = scala.collection.mutable.TreeMap.empty[String, Double]
@@ -139,25 +138,12 @@ object Artifacts {
   }
 
   /** the origin of a frame built now from `from` and the tables under
-    * `inputs`, listed through Hadoop's FileSystem as Spark reads them
-    * (so any URI Spark reads works)
+    * `inputs` ([[listing]])
     */
   private def originOf(from: DataFrame, inputs: Seq[String]): Origin = {
     val conf = from.sparkSession.sparkContext.hadoopConfiguration
-    // sorted (uri, size, mtime in ms) of every file under `path`; a
-    // listStatus walk, since `listFiles` also looks up every file's block
-    // locations (about 170 ms for a 9-directory index on a local disk)
-    def listing(path: String): Fingerprint = {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(conf)
-      def walk(p: org.apache.hadoop.fs.Path): Fingerprint =
-        fs.listStatus(p).toVector.flatMap { st =>
-          if (st.isDirectory) walk(st.getPath)
-          else Vector((st.getPath.toString, st.getLen, st.getModificationTime))
-        }
-      walk(root).sorted
-    }
-    Origin(inputs.map(listing), from.inputFiles.toVector.flatMap(listing).sorted,
+    Origin(inputs.map(listing(conf, _)),
+      from.inputFiles.toVector.flatMap(listing(conf, _)).sorted,
       from.queryExecution.analyzed)
   }
 
@@ -166,10 +152,12 @@ object Artifacts {
 
   private def memo[V](family: String, input: String, key: Option[String])(
       make: Option[V] => V): V = {
-    val abs = Paths.get(input).toAbsolutePath.normalize
-    val slot = slots.computeIfAbsent((family, abs.toString, key), _ => new Slot)
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    val path = new HPath(input)
+    val qualified = path.getFileSystem(conf).makeQualified(path).toString
+    val slot = slots.computeIfAbsent((family, qualified, key), _ => new Slot)
     slot.synchronized {
-      val fp = fingerprint(abs)
+      val fp = listing(conf, qualified)
       if (slot.fp != fp) {
         slot.value = make(Option(slot.value).map(_.asInstanceOf[V]))
         slot.fp = fp
@@ -178,16 +166,21 @@ object Artifacts {
     }
   }
 
-  /** sorted (relative path, size, mtime in ns) of every file under
-    * `input`, which may be one file or a directory tree. A missing input
-    * throws.
+  /** sorted (uri, size, mtime in ms) of every file under `path`, which
+    * may be one file or a directory tree, listed through Hadoop's
+    * FileSystem as Spark reads it (so any URI Spark reads works). A
+    * `listStatus` walk, since `listFiles` also looks up every file's
+    * block locations (about 170 ms for a 9-directory index on a local
+    * disk). A missing input throws.
     */
-  private def fingerprint(input: Path): Fingerprint = {
-    val walk = Files.walk(input)
-    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
-      (input.relativize(f).toString, Files.size(f),
-        Files.getLastModifiedTime(f).to(TimeUnit.NANOSECONDS))
-    }.toVector.sorted
-    finally walk.close()
+  private def listing(conf: Configuration, path: String): Fingerprint = {
+    val root = new HPath(path)
+    val fs = root.getFileSystem(conf)
+    def walk(p: HPath): Fingerprint =
+      fs.listStatus(p).toVector.flatMap { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else Vector((st.getPath.toString, st.getLen, st.getModificationTime))
+      }
+    walk(root).sorted
   }
 }

@@ -856,12 +856,15 @@ object Corpus {
     * cached frame poisons the candidate machinery upstream (62 GB W,
     * reverted), so the candidate side always sees the unhinted plan.
     *
-    * Returns (candidates to use, verify side to use); the caches it
-    * creates belong to `own`.
+    * `key` is the sets' id column and `measure` re-measures a pruned
+    * set frame (the multimodal evidence sets pass `media_id` and their
+    * own long-array arithmetic). Returns (candidates to use, verify side
+    * to use); the caches it creates belong to `own`.
     */
   private[graft] def dispatchVerifySets(cand0: DataFrame,
       candIdCols: Seq[String], sets: DataFrame,
-      setsBytes: Long, own: Caches): (DataFrame, DataFrame) = {
+      setsBytes: Long, own: Caches, key: String = "doc_id",
+      measure: DataFrame => Long = setFrameBytes): (DataFrame, DataFrame) = {
     val budget = verifyBroadcastBudget(sets.sparkSession)
     // strict <: a zero/empty-frame measurement must not satisfy the
     // zero-budget spec knob (budget 0 means "never hint", and
@@ -869,10 +872,10 @@ object Corpus {
     if (setsBytes < budget) (cand0, broadcast(sets))
     else {
       val cand = own(cand0)
-      val ids = candIdCols.map(c => cand.select(col(c).as("doc_id")))
+      val ids = candIdCols.map(c => cand.select(col(c).as(key)))
         .reduce(_.union(_)).distinct()
-      val pruned = own(sets.join(ids, Seq("doc_id"), "left_semi"))
-      if (setFrameBytes(pruned) < budget) (cand, broadcast(pruned))
+      val pruned = own(sets.join(ids, Seq(key), "left_semi"))
+      if (measure(pruned) < budget) (cand, broadcast(pruned))
       else { own.drop(pruned); (cand, sets) }
     }
   }

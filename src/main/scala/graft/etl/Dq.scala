@@ -41,9 +41,10 @@ object Dq {
       frameChecks: Seq[FrameCheck] = Nil)
 
   // ---- check constructors (the DSL) --------------------------------------
-  // Checks run over [[Validator.coerce]]'s frame: `c` is the typed column,
-  // `rawCol(c)` the original string. notNull looks at the raw value so a
-  // dtype-coercion failure (raw non-null, typed null) reports exactly once.
+  // Checks run over [[Validator.audit]]'s typed frame: `c` is the typed
+  // column, `rawCol(c)` the original string. notNull looks at the raw value
+  // so a dtype-coercion failure (raw non-null, typed null) reports exactly
+  // once.
 
   def rawCol(c: String): String = s"__raw_$c"
 

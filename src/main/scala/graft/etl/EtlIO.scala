@@ -16,9 +16,9 @@ import graft.core.{Caches, Publish, Scratch}
 /** IO layer ≙ reference io_utils.py + the single-file CSV output contract
   * (SURVEY §2.1 S1–S4, §7.4.6).
   *
-  * CSV reads are schema'd, never inferred. [[readCsvRaw]] reads every
-  * column as string so the DQ engine can report pandera-style
-  * dtype-coercion failures; [[Validator.coerce]] applies the typed cast
+  * CSV reads are schema'd, never inferred. [[readCsvRawAudited]] reads
+  * every column as string so the DQ engine can report pandera-style
+  * dtype-coercion failures; [[Validator.audit]] applies the typed cast
   * afterward. Missing files raise (reference io_utils.py:9–10).
   */
 object EtlIO {
@@ -85,16 +85,6 @@ object EtlIO {
     (asStrings, cols)
   }
 
-  /** all-strings CSV read, bound by header name ([[bindByHeader]]). */
-  def readCsvRaw(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val (asStrings, cols) = bindByHeader(csvHeader(path), schema)
-    spark.read
-      .option("header", "true")
-      .schema(asStrings)
-      .csv(path)
-      .select(cols: _*)
-  }
-
   /** name of the corrupt-record channel column on audited reads;
     * never collides with a contract column.
     */
@@ -126,10 +116,11 @@ object EtlIO {
   final case class AuditedCsv(clean: DataFrame, exceptions: DataFrame,
       header: Seq[String])
 
-  /** [[readCsvRaw]] plus a corrupt-record audit channel: malformed lines
-    * (wrong delimiter count — with an all-strings schema nothing else
-    * can fail) surface as `corrupt_record` exception rows instead of
-    * being silently padded/truncated by PERMISSIVE mode. The parsed
+  /** all-strings CSV read, bound by header name ([[bindByHeader]]), with
+    * a corrupt-record audit channel: malformed lines (wrong delimiter
+    * count — with an all-strings schema nothing else can fail) surface
+    * as `corrupt_record` exception rows instead of being silently
+    * padded/truncated by PERMISSIVE mode. The parsed
     * frame is cached by the caller's owner `own`: Spark disallows
     * queries over a raw CSV/JSON scan whose referenced columns are only
     * the corrupt-record column, and the exceptions branch is exactly

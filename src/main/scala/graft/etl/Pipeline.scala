@@ -78,16 +78,20 @@ object Pipeline {
       // broken line is reported through the DQ gate, never silently
       // padded into nulls (quality.py:98–115 philosophy).
       //
-      // Each table's whole chain (audited read → probe → index, where a
-      // row check fires) is built AND forced inside its own labelled
-      // future (guide §2.6 overlap-independent-jobs): planning a chain is
-      // driver-bound, so on five threads planning and jobs overlap. Every
-      // future is awaited before the first failure is rethrown, so no
-      // chain is still creating caches when the scope releases them.
+      // Each table's chain (audited read → indexed typed view →
+      // exception plans) is built, and its cached read forced, inside its
+      // own labelled future (guide §2.6 overlap-independent-jobs):
+      // planning a chain is driver-bound, so on five threads planning and
+      // jobs overlap. Every future is awaited before the first failure is
+      // rethrown, so no chain is still creating caches when the scope
+      // releases them.
       val audits = settle(tables.map { case (ts, path, coaCheck) =>
         inPhase(s"coerce-${ts.name}") {
           val read = EtlIO.readCsvRawAudited(spark, path, ts.schema, ts.name, own)
-          ts -> Validator.audit(spark, read, ts, coaCheck, own)
+          // fills the read's cache in this chain's own job, before either
+          // branch reads it (isEmpty: one job; count would take two)
+          read.clean.isEmpty
+          ts -> Validator.audit(spark, read, ts, coaCheck)
         }
       }).map(_.get)
 

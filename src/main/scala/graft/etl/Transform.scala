@@ -32,44 +32,6 @@ object Transform {
     extends RuntimeException(
       s"Missing FX rates for: ${pairs.map { case (d, c) => s"($d, $c)" }.mkString(", ")}")
 
-  /** FX-normalize `amount` to the base currency (transform.py:19–46):
-    * left-broadcast-join the day-grain rate, base currency pinned at 1.0,
-    * hard error listing the missing (date, currency) pairs,
-    * amount_base = bround(amount·rate, 2).
-    *
-    * Eager: the missing-rate probe is one small aggregate over the joined
-    * plan, run before this returns. The close instead counts the rows
-    * without a rate inside its fact write ([[Pipeline.runMonth]]).
-    */
-  def addFxAmountBase(df: DataFrame, fx: DataFrame, baseCurrency: String): DataFrame = {
-    val joined = withRate(df, fx, baseCurrency)
-    val missing = missingFxPairs(joined.withColumn("date", col("date_key")))
-    if (missing.nonEmpty) throw MissingFxRatesException(missing)
-    withAmountBase(joined)
-  }
-
-  /** `df` plus the day-grain `rate` into the base currency, null where
-    * none exists; lazy
-    */
-  private def withRate(df: DataFrame, fx: DataFrame, baseCurrency: String): DataFrame = {
-    val fxLookup = fx.select(
-      col("date").as("fx_date"),
-      col("from_currency"),
-      col("rate").as("fx_rate"))
-    df
-      .withColumn("date_key", to_date(col("date")))
-      .join(broadcast(fxLookup),
-        col("date_key") === col("fx_date") && col("currency") === col("from_currency"),
-        "left")
-      .withColumn("rate",
-        when(col("currency") === baseCurrency, lit(1.0)).otherwise(col("fx_rate")))
-  }
-
-  private def withAmountBase(joined: DataFrame): DataFrame =
-    joined
-      .withColumn("amount_base", bround(col("amount") * col("rate"), 2))
-      .drop("date_key", "fx_date", "from_currency", "fx_rate")
-
   /** the first 20 distinct (date, currency) pairs, in that order, of the
     * rows of `rows` whose `rate` is null
     */
@@ -85,7 +47,9 @@ object Transform {
   /** Unified GL fact across the four sources (transform.py:49–110):
     * conform each to the common 8-column shape (expenses negated, payroll
     * posted at month-end to 61000001 as −net, inventory priced
-    * qty×unit_cost signed by movement type), union-all, FX-normalize,
+    * qty×unit_cost signed by movement type), union-all, FX-normalize
+    * (transform.py:19–46: left-broadcast-join the day-grain rate, base
+    * currency pinned at 1.0, amount_base = bround(amount·rate, 2)),
     * deterministic sort, txn_id concat.
     *
     * Lazy: a row with no FX rate keeps a null `rate` and `amount_base`.
@@ -139,7 +103,19 @@ object Transform {
       .withColumn("account_code", col("account_code").cast("string"))
       .withColumn("currency", col("currency").cast("string"))
 
-    withAmountBase(withRate(unioned, fx, baseCurrency))
+    val fxLookup = fx.select(
+      col("date").as("fx_date"),
+      col("from_currency"),
+      col("rate").as("fx_rate"))
+    unioned
+      .withColumn("date_key", to_date(col("date")))
+      .join(broadcast(fxLookup),
+        col("date_key") === col("fx_date") && col("currency") === col("from_currency"),
+        "left")
+      .withColumn("rate",
+        when(col("currency") === baseCurrency, lit(1.0)).otherwise(col("fx_rate")))
+      .withColumn("amount_base", bround(col("amount") * col("rate"), 2))
+      .drop("date_key", "fx_date", "from_currency", "fx_rate")
       .withColumn("txn_id",
         concat_ws("|", col("entity"), col("source"), col("document_id")))
       .select(("txn_id" +: factShape.patch(6, Seq("amount", "rate", "amount_base"), 1))

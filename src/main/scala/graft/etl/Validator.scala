@@ -1,10 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
-
-import graft.core.Caches
 
 import Dq._
 
@@ -39,21 +36,6 @@ object Validator {
     (names ++ table.schema.fieldNames.map(rawCol)).map(col)
   }
 
-  /** `df` plus `name` = each row's 0-based rank in `order`: one global
-    * sort, numbered in partition order by `zipWithIndex`. The numbering
-    * reads the sorted partitions as AQE left them, so coalescing them
-    * can neither drop nor repeat a row. Eager: building it runs the
-    * sort's sample and shuffle jobs and one per-partition count, so the
-    * close builds it only for a table that has a row exception
-    * ([[audit]]).
-    */
-  private def withIndex(df: DataFrame, order: Seq[Column], name: String): DataFrame = {
-    val numbered = df.sort(order: _*).rdd.zipWithIndex()
-      .map { case (row, i) => Row.fromSeq(row.toSeq :+ i) }
-    df.sparkSession.createDataFrame(numbered,
-      df.schema.add(name, LongType, nullable = false))
-  }
-
   /** typed view of an all-strings frame + per-column raw copies */
   private def typedView(raw: DataFrame, table: TableSchema): DataFrame = {
     val fields = table.schema.fields.toSeq
@@ -62,82 +44,30 @@ object Validator {
         fields.map(f => col(f.name).as(rawCol(f.name))): _*)
   }
 
-  /** [[typedView]] + the deterministic row index (built eagerly, see
-    * [[withIndex]]).
-    */
-  def coerce(raw: DataFrame, table: TableSchema): DataFrame =
-    withIndex(typedView(raw, table), indexOrder(table), "__idx")
-
-  /** one table as the close audits it: `typed` is the [[coerce]] shape
-    * (`__idx` null when the table needed no index), `exceptions` its lazy
-    * exception rows, corrupt lines included
+  /** one table as the close audits it: `typed` is the typed view plus
+    * the raw strings and `__idx`, `exceptions` its lazy exception rows,
+    * corrupt lines included
     */
   final case class Audit(typed: DataFrame, exceptions: DataFrame)
 
-  /** The close's validation of one audited read, with the row index
-    * built only where a row exception needs it. `__idx` is read only by
-    * the column-check and account_in_coa rows, so one probe over the
-    * read asks whether any of those fires ([[rowChecksFire]]). If one
-    * does, the table is indexed and cached by `own` exactly as
-    * [[coerce]] does; if none does, `typed` is the unindexed view over
-    * the read, in the same row order, and the two generators are left
-    * out, having nothing to report. `coa` holds the chart of accounts
-    * for a table under the account_in_coa check.
+  /** The close's validation of one audited read, lazily: `typed` is the
+    * read in [[indexOrder]] as one sorted partition, and every reader of
+    * it (the exception generators, the fact) plans over that one order,
+    * so rows that tie downstream (two movements of one sku on one day,
+    * in the fact's order) keep the order their index gives them. `coa`
+    * holds the chart of accounts for a table under the account_in_coa
+    * check.
     */
   def audit(spark: SparkSession, read: EtlIO.AuditedCsv, table: TableSchema,
-      coa: Option[DataFrame], own: Caches): Audit = {
-    val view = typedView(read.clean, table)
-    val indexed = rowChecksFire(view, table, coa)
-    val typed =
-      if (indexed) {
-        val coerced = own(withIndex(view, indexOrder(table), "__idx"))
-        coerced.count()
-        coerced
-      } else {
-        // one partition in index order, sorted by whoever reads it: rows
-        // that tie downstream (two movements of one sku on one day, in
-        // the fact's order) keep the order an indexed table gives them
-        view.coalesce(1).sortWithinPartitions(indexOrder(table): _*)
-          .withColumn("__idx", lit(null).cast(LongType))
-      }
-    val columnRows = if (indexed) columnExceptions(typed, table) else Nil
-    val coaRows = coa.filter(_ => indexed).map(accountInCoaIndexed(typed, table.name, _))
-    val exceptions = tableExceptions(spark, typed, table, Some(read.header), columnRows) +:
-      coaRows.toSeq :+ read.exceptions
+      coa: Option[DataFrame]): Audit = {
+    val typed = typedView(read.clean, table).coalesce(1)
+      .sortWithinPartitions(indexOrder(table): _*)
+      // in one partition the id is exactly the row's position, 0..n-1
+      .withColumn("__idx", monotonically_increasing_id())
+    val exceptions = tableExceptions(spark, typed, table, read.header) +:
+      coa.map(accountInCoa(typed, table.name, _)).toSeq :+ read.exceptions
     Audit(typed, exceptions.reduce(_.unionByName(_)))
   }
-
-  /** whether a column check fires on a row of `typed`, or, given the
-    * COA, a row's account_code is missing from it: one pass that stops
-    * at the first such row. It filters on the generators' own
-    * predicates ([[ColumnCheck.violation]], [[markCoa]]), so it fires
-    * exactly when they would report a row.
-    */
-  private def rowChecksFire(typed: DataFrame, table: TableSchema,
-      coa: Option[DataFrame]): Boolean = {
-    val fires = table.columnChecks.map(_.violation).foldLeft(lit(false))(_ || _)
-    val probed = coa.fold(typed.filter(fires))(c =>
-      markCoa(typed, c).filter(fires || col(InCoa).isNull))
-    !probed.isEmpty
-  }
-
-  /** all exception rows for one table (dataset, index, column, check,
-    * failure_case, schema_context, check_number).
-    */
-  def exceptions(
-      spark: SparkSession,
-      raw: DataFrame,
-      table: TableSchema,
-      actualColumns: Option[Seq[String]] = None): DataFrame =
-    exceptionsFromCoerced(spark, coerce(raw, table), table, actualColumns)
-
-  /** same, over an already-[[coerce]]d (and possibly cached) frame */
-  def exceptionsFromCoerced(
-      spark: SparkSession,
-      typed: DataFrame,
-      table: TableSchema,
-      actualColumns: Option[Seq[String]] = None): DataFrame =
-    tableExceptions(spark, typed, table, actualColumns, columnExceptions(typed, table))
 
   /** ALL column checks evaluate in ONE pass (SURVEY §2.9 V1): a per-row
     * array of fired-check structs, exploded and null-filtered. One scan
@@ -170,37 +100,31 @@ object Validator {
           col("ck.check_number").as("check_number")))
     }
 
-  /** `columnRows` plus the table's frame checks and strict-header
-    * rows, with the dataset name
+  /** the table's column-check, frame-check and strict-header rows
+    * (`header` is the file's), with the dataset name
     */
-  private def tableExceptions(
-      spark: SparkSession,
-      typed: DataFrame,
-      table: TableSchema,
-      actualColumns: Option[Seq[String]],
-      columnRows: Seq[DataFrame]): DataFrame = {
+  private def tableExceptions(spark: SparkSession, typed: DataFrame,
+      table: TableSchema, header: Seq[String]): DataFrame = {
 
     val frameExceptions = table.frameChecks.map(_.exceptions(typed))
 
     // strict=True header enforcement (driver-side, quality.py:29 etc.)
-    val headerExceptions = actualColumns.toSeq.flatMap { actual =>
-      val expected = table.schema.fieldNames.toSeq
-      val extra = actual.filterNot(expected.contains)
-        .map(c => (c, "column_in_schema", s"unexpected column '$c'"))
-      val missing = expected.filterNot(actual.contains)
-        .map(c => (c, "column_required", s"missing column '$c'"))
-      (extra ++ missing).map { case (c, check, msg) =>
-        import spark.implicits._
-        Seq((c, check, msg)).toDF("column", "check", "failure_case")
-          .select(
-            lit(null).cast("long").as("index"),
-            col("column"), col("check"), col("failure_case"),
-            lit("DataFrameSchema").as("schema_context"),
-            lit(null).cast("int").as("check_number"))
-      }
+    val expected = table.schema.fieldNames.toSeq
+    val extra = header.filterNot(expected.contains)
+      .map(c => (c, "column_in_schema", s"unexpected column '$c'"))
+    val missing = expected.filterNot(header.contains)
+      .map(c => (c, "column_required", s"missing column '$c'"))
+    val headerExceptions = (extra ++ missing).map { case (c, check, msg) =>
+      import spark.implicits._
+      Seq((c, check, msg)).toDF("column", "check", "failure_case")
+        .select(
+          lit(null).cast("long").as("index"),
+          col("column"), col("check"), col("failure_case"),
+          lit("DataFrameSchema").as("schema_context"),
+          lit(null).cast("int").as("check_number"))
     }
 
-    val all = columnRows ++ frameExceptions ++ headerExceptions
+    val all = columnExceptions(typed, table) ++ frameExceptions ++ headerExceptions
     val unioned = all.reduceOption(_.unionByName(_))
       .getOrElse(Dq.emptyExceptions(spark).drop("severity", "dataset"))
     unioned.select(lit(table.name).as("dataset"),
@@ -209,20 +133,15 @@ object Validator {
   }
 
   /** referential-integrity exception generator ≙ pipeline._dq_account_in_coa
-    * (pipeline.py:30–47): rows whose account_code is not in the COA.
+    * (pipeline.py:30–47): rows of the audited `typed` whose account_code
+    * is not in the COA (broadcast, SURVEY J6), a null code included,
+    * each reported once at its `__idx`
     */
-  def accountInCoa(df: DataFrame, dataset: String, coaCodes: DataFrame, orderKeys: Seq[String]): DataFrame =
-    accountInCoaIndexed(withIndex(df, orderKeys.map(col), "__idx"), dataset, coaCodes)
-
-  /** [[accountInCoa]] over a frame that already carries the coerce-time
-    * `__idx`: [[indexOrder]] puts the natural keys first, so the
-    * close's RI checks reuse that rank instead of sorting the two
-    * biggest tables a second time.
-    */
-  def accountInCoaIndexed(indexed: DataFrame, dataset: String,
+  private def accountInCoa(typed: DataFrame, dataset: String,
       coaCodes: DataFrame): DataFrame =
-    markCoa(indexed, coaCodes)
-      .filter(col(InCoa).isNull)
+    typed
+      .join(broadcast(coaCodes.select(col("account_code").cast("string").as("account_code"))),
+        Seq("account_code"), "left_anti")
       .select(
         lit(dataset).as("dataset"),
         col("__idx").as("index"),
@@ -231,15 +150,4 @@ object Validator {
         col("account_code").cast("string").as("failure_case"),
         lit("Column").as("schema_context"),
         lit(null).cast("int").as("check_number"))
-
-  private val InCoa = "__in_coa"
-
-  /** `df` left-joined to the COA's codes (broadcast, SURVEY J6):
-    * `__in_coa` is null on exactly the rows a left-anti join on
-    * account_code keeps, a null code included, and each such row
-    * appears once
-    */
-  private def markCoa(df: DataFrame, coaCodes: DataFrame): DataFrame =
-    df.join(broadcast(coaCodes.select(col("account_code").cast("string").as("account_code"))
-      .withColumn(InCoa, lit(true))), Seq("account_code"), "left")
 }

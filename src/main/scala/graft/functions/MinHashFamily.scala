@@ -23,23 +23,6 @@ object MinHashFamily {
   def aSql: String = (0 until H).map(a).mkString("[", ", ", "]")
   def bSql: String = (0 until H).map(b).mkString("[", ", ", "]")
 
-  /** the base: first 12 md5 hex digits folded to an int, mod P — Spark
-    * expression text (col = the string column to hash).
-    *
-    * NOTE: `md5($col)` sits inside the per-digit lambda, so HOF evaluation
-    * recomputes it 12× per value (lambdas don't hoist loop-invariants).
-    * Prefer [[basesFromShinglesExprSql]], which hashes each string ONCE.
-    */
-  def baseExprSql(col: String): String =
-    s"""aggregate(transform(sequence(1, 12),
-       |  i -> instr('0123456789abcdef', substring(md5($col), i, 1)) - 1),
-       |  cast(0 as bigint), (b, c) -> b * 16 + c) % $P""".stripMargin
-
-  /** array of bases for an array-of-strings column, ONE md5 per element:
-    * the inner transform materializes each md5 hex string once, the outer
-    * lambda folds its first 12 digits. Narrow per-row work — no explode,
-    * no shuffle — shared by the LSH signature build and the sketch UDAF.
-    */
   /** JVM-side twin of the SQL base computation (fold of the first 12 md5
     * hex digits, mod P) — used by the streaming sketch updater; must stay
     * digit-for-digit identical to [[basesFromShinglesExprSql]].
@@ -64,6 +47,11 @@ object MinHashFamily {
     else w.iterator.sliding(2).withPartial(false).map(_.mkString(" "))
   }
 
+  /** array of bases for an array-of-strings column, ONE md5 per element:
+    * the inner transform materializes each md5 hex string once, the outer
+    * lambda folds its first 12 digits. Narrow per-row work — no explode,
+    * no shuffle — shared by the LSH signature build and the sketch UDAF.
+    */
   def basesFromShinglesExprSql(arrCol: String): String =
     s"""transform(transform($arrCol, t -> md5(t)), h ->
        |  aggregate(transform(sequence(1, 12),

@@ -515,21 +515,12 @@ object Multimodal {
     */
   private[graft] def verifySetPairs(cand0: DataFrame, sets0: DataFrame,
       minShared: Int, own: Caches): DataFrame = {
-    val budget = graft.corpus.Corpus.verifyBroadcastBudget(sets0.sparkSession)
     // cached: the measuring aggregate and the two verify joins would
     // each re-run the sets build (a collect_set over the evidence
     // frame) otherwise
     val sets = own(sets0)
-    val (cand, setsSide) =
-      if (frameSetBytes(sets) < budget) (cand0, broadcast(sets))
-      else {
-        val c = own(cand0)
-        val ids = c.select(col("doc_a").as("media_id"))
-          .union(c.select(col("doc_b").as("media_id"))).distinct()
-        val pruned = own(sets.join(ids, Seq("media_id"), "left_semi"))
-        if (frameSetBytes(pruned) < budget) (c, broadcast(pruned))
-        else { own.drop(pruned); (c, sets) }
-      }
+    val (cand, setsSide) = graft.corpus.Corpus.dispatchVerifySets(cand0,
+      Seq("doc_a", "doc_b"), sets, frameSetBytes(sets), own, "media_id", frameSetBytes)
     cand
       .join(setsSide.select(col("media_id").as("doc_a"), col("fhs").as("__fha")),
         Seq("doc_a"))

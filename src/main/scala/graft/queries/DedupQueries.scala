@@ -372,20 +372,7 @@ object DedupQueries {
       least(col("a.n2") - col("a.rn"), col("b.n2") - col("b.rn"))
     val posReq = ceil(lit(tEff) * least(col("a.n"), col("b.n")) - lit(1e-9))
       .cast("int")
-    // r15 spill-attribution knob (diagnostic, default off): the sf10
-    // StageProfile run pinned ALL of x4/x20's residual spill to the ONE
-    // stage holding this join's SMJ sorts + the pair distinct. This
-    // LOCALLY-scoped hint (probe side only — the r13 experiment that
-    // poisoned the candidate machinery hinted the SHARED cached frame)
-    // swaps the SMJ for a shuffled-hash join so an A/B can separate
-    // sort-spill from distinct-agg-spill; see BASELINE §r15 for the
-    // measured outcome before promoting it past a diagnostic.
-    val probeSide =
-      if (postings0.sparkSession.conf
-          .getOption("graft.candidate.shuffleHash").contains("true"))
-        aSized.hint("SHUFFLE_HASH")
-      else aSized
-    val pairs0 = probeSide.as("a").join(b.as("b"),
+    val pairs0 = aSized.as("a").join(b.as("b"),
       if (posFilter) cond && posBound >= posReq else cond)
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))

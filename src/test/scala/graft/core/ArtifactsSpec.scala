@@ -59,6 +59,25 @@ class ArtifactsSpec extends SparkSpec {
     assert(count() == 2L && rows.get == 2)
   }
 
+  test("dir over a file: URI input builds once and rebuilds on rewrite") {
+    val in = s"${tmpDir("artifacts_uri")}/documents.parquet"
+    writeIds(in, Seq(1L, 2L))
+    val uri = Paths.get(in).toUri.toString
+    assert(uri.startsWith("file:"))
+    val builds = new AtomicInteger
+    val first = sumArtifact("spec_uri", uri, builds)
+    assert(sumOf(first) == 3L)
+    assert(sumArtifact("spec_uri", uri, builds) == first && builds.get == 1)
+    // the URI and the plain path name one input
+    assert(sumArtifact("spec_uri", in, builds) == first && builds.get == 1)
+
+    writeIds(in, Seq(10L, 11L))
+    val second = sumArtifact("spec_uri", uri, builds)
+    assert(builds.get == 2)
+    assert(sumOf(second) == 21L)
+    assert(!Files.exists(Paths.get(first)), s"stale artifact $first still on disk")
+  }
+
   test("inputs whose dirs sanitize to one scratch key get separate artifacts") {
     val base = tmpDir("artifacts_sanitize")
     val (dirA, dirB) = (s"$base/a-b", s"$base/a_b")

@@ -10,11 +10,13 @@ import org.apache.spark.sql.graftbridge.CacheProbe
 import graft.SparkSpec
 import graft.core.Caches
 
-/** The coerce-time row index and the close's cache ownership, on the
+/** The audit's row index and the close's cache ownership, on the
   * 4-core AQE test session:
   *
   *  - at 100 times the reference volume every raw row keeps exactly one
   *    index, the indices are 0..n-1 and follow the natural-key order;
+  *  - a clean table is indexed too, and a defect in one row moves no
+  *    other row's index;
   *  - a 100x close reports each hand-injected ERROR defect exactly once;
   *  - rows whose typed values tie index by their raw strings, whatever
   *    the input order;
@@ -49,8 +51,8 @@ class CloseIndexSpec extends SparkSpec {
     "fx_rates" -> 3L * 31)
 
   /** runs `body` under the AQE coalescing floor `Sessions.local` gives
-    * every CLI close (64k, not the 1 MB default): with it AQE coalesces
-    * the index's shuffles into uneven partitions at 100x volume
+    * every CLI close (64k, not the 1 MB default), so the close's shuffles
+    * coalesce into the uneven partitions a CLI close sees at 100x volume
     */
   private def withCloseAqe[T](body: => T): T = {
     val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
@@ -82,7 +84,7 @@ class CloseIndexSpec extends SparkSpec {
       Caches.scoped { own =>
         val audited = EtlIO.readCsvRawAudited(spark, s"$raw/$file", ts.schema, ts.name, own)
         val keyCols = ts.orderKeys.map(k => col(Dq.rawCol(k)))
-        val rows = withCloseAqe(Validator.coerce(audited.clean, ts)
+        val rows = withCloseAqe(Validator.audit(spark, audited, ts, None).typed
           .select(col("__idx") +: keyCols: _*).collect())
         val n = expected(ts.name)
         assert(rows.length == n, s"${ts.name}: ${rows.length} coerced rows, $n raw")
@@ -166,10 +168,33 @@ class CloseIndexSpec extends SparkSpec {
     Seq(dates, dates.reverse).foreach { input =>
       val raw = input.map(d => (d, "TLM", "INV-1", "40000001", "USD", "10", "x"))
         .toDF("date", "entity", "invoice_id", "account_code", "currency", "amount", "description")
-      val idx = Validator.coerce(raw, Dq.salesSchema(settings))
+      val idx = Audits.of(raw, Dq.salesSchema(settings)).typed
         .select(Dq.rawCol("date"), "__idx").as[(String, Long)].collect().toMap
       assert(idx == dates.zipWithIndex.map { case (d, i) => d -> i.toLong }.toMap)
     }
+  }
+
+  test("a clean table is indexed, and a defect moves no other row's index") {
+    // natural keys (entity, invoice_id) are unique, so the index is the
+    // rank in that order; the input arrives out of order, in 3 partitions
+    val keys = Seq(("TLM", "INV-3"), ("ARK", "INV-2"), ("TLM", "INV-1"),
+      ("ARK", "INV-7"), ("TLM", "INV-2"), ("ARK", "INV-1"))
+    def sales(bad: String) = keys.map { case (e, id) =>
+      ("2025-12-01", e, id, "40000001", "USD", if (id == bad && e == "TLM") "oops" else "5", "x")
+    }.toDF("date", "entity", "invoice_id", "account_code", "currency", "amount", "description")
+      .repartition(3)
+    def indexOf(bad: String): Map[(String, String), Long] =
+      Audits.of(sales(bad), Dq.salesSchema(settings)).typed
+        .select("entity", "invoice_id", "__idx").as[(String, String, Long)].collect()
+        .map { case (e, id, i) => (e, id) -> i }.toMap
+    val clean = indexOf(bad = "none")
+    assert(clean == keys.sorted.zipWithIndex.map { case (k, i) => k -> i.toLong }.toMap)
+
+    val defective = indexOf(bad = "INV-2")
+    assert(defective == clean)
+    val ex = Audits.of(sales("INV-2"), Dq.salesSchema(settings)).exceptions
+      .select("index", "check").as[(Long, String)].collect().toSeq
+    assert(ex == Seq(clean(("TLM", "INV-2")) -> "dtype('double')"))
   }
 
   test("a close releases every cache it creates: clean, gate-rejected and missing-FX exits") {

@@ -19,7 +19,7 @@ class DqEngineSpec extends SparkSpec {
     val raw = salesRaw(Seq(
       ("2025-12-01", "TLM", "INV-1", "40000001", "USD", "100.5", "ok"),
       ("2025-12-02", "TLM", "INV-2", "40000001", "EUR", "10", "ok")))
-    val ex = Validator.exceptions(spark, raw, Dq.salesSchema(settings))
+    val ex = Audits.of(raw, Dq.salesSchema(settings)).exceptions
     assert(ex.isEmpty)
   }
 
@@ -32,7 +32,7 @@ class DqEngineSpec extends SparkSpec {
       ("2025-12-05", "TLM", "INV-5", "40000001", "USD", "5", "dup"),
       ("2025-12-06", "TLM", "INV-5", "40000001", "USD", "6", "dup")))             // dup keys → WARN
     val ex = Dq.addSeverity(
-      Validator.exceptions(spark, raw, Dq.salesSchema(settings))).cache()
+      Audits.of(raw, Dq.salesSchema(settings)).exceptions).cache()
 
     val byCheck = ex.groupBy("check").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -56,23 +56,23 @@ class DqEngineSpec extends SparkSpec {
       ("2025-12", "TLM", "E1", "USD", "1000", "100", "900"),
       ("2025-12", "TLM", "E2", "USD", "1000", "100", "850"))
       .toDF("month", "entity", "employee_id", "currency", "gross", "deductions", "net")
-    val ex = Validator.exceptions(spark, raw, Dq.payrollSchema(settings))
+    val ex = Audits.of(raw, Dq.payrollSchema(settings)).exceptions
     assert(ex.filter(col("check") === "payroll_identity").count() == 1)
   }
 
   test("fx dataset violations are always ERROR") {
     val raw = Seq(("2025-12-01", "TZS", "USD", "-1"))
       .toDF("date", "from_currency", "to_currency", "rate")
-    val ex = Dq.addSeverity(Validator.exceptions(spark, raw, Dq.fxSchema(settings)))
+    val ex = Dq.addSeverity(Audits.of(raw, Dq.fxSchema(settings)).exceptions)
     assert(ex.count() == 1)
     assert(ex.select("severity").head().getString(0) == "ERROR")
   }
 
   test("strict header enforcement reports unexpected and missing columns") {
     val raw = salesRaw(Seq(("2025-12-01", "TLM", "INV-1", "40000001", "USD", "1", "x")))
-    val ex = Validator.exceptions(spark, raw, Dq.salesSchema(settings),
-      actualColumns = Some(Seq("date", "entity", "invoice_id", "account_code",
-        "currency", "amount", "description", "rogue_extra")))
+    val ex = Audits.of(raw, Dq.salesSchema(settings),
+      header = Some(Seq("date", "entity", "invoice_id", "account_code",
+        "currency", "amount", "description", "rogue_extra"))).exceptions
     val checks = ex.select("check").collect().map(_.getString(0))
     assert(checks.contains("column_in_schema"))
   }
@@ -82,32 +82,33 @@ class DqEngineSpec extends SparkSpec {
       ("2025-12-01", "TLM", "INV-1", "40000001", "USD", "1", "ok"),
       ("2025-12-02", "TLM", "INV-2", "99999999", "USD", "1", "bad")))
     val coa = Seq("40000001").toDF("account_code")
-    val ex = Validator.accountInCoa(df, "sales", coa, Seq("entity", "invoice_id"))
+    // the rows are clean but for the code, so the audit is exactly the RI row
+    val ex = Audits.of(df, Dq.salesSchema(settings), Some(coa)).exceptions
     val rows = ex.collect()
     assert(rows.length == 1)
     assert(rows.head.getAs[String]("failure_case") == "99999999")
     assert(Dq.addSeverity(ex).head().getAs[String]("severity") == "ERROR")
   }
 
-  test("accountInCoaIndexed over the coerced frame equals accountInCoa (r17 RI index reuse)") {
-    // the pipeline shape: RI rides the coerce-time __idx (natural keys
-    // lead indexOrder, so the ranks coincide) instead of re-deriving a
-    // global index — this pins the outputs identical, duplicate natural
-    // keys included (both bad rows share a key; both must report)
+  test("account_in_coa rows carry their natural-key index, duplicate keys included") {
+    // the RI rows read the audit's one row index: rank in (entity,
+    // invoice_id, then every other column) order. TLM/INV-2 is a
+    // duplicate natural key whose rows both report, a null code reports
+    // once, and a code the COA lists twice matches as if listed once.
     val df = salesRaw(Seq(
       ("2025-12-01", "TLM", "INV-1", "40000001", "USD", "1", "ok"),
       ("2025-12-02", "TLM", "INV-2", "99999999", "USD", "1", "bad"),
-      ("2025-12-03", "ARK", "INV-9", "55555555", "USD", "2", "bad2")))
-    val coa = Seq("40000001").toDF("account_code")
-    val viaOwnIndex = Validator
-      .accountInCoa(df, "sales", coa, Seq("entity", "invoice_id"))
-      .orderBy("index").collect().toSeq
-    val viaCoerceIndex = Validator
-      .accountInCoaIndexed(Validator.coerce(df, Dq.salesSchema(settings)),
-        "sales", coa)
-      .orderBy("index").collect().toSeq
-    assert(viaCoerceIndex == viaOwnIndex)
-    assert(viaCoerceIndex.length == 2)
+      ("2025-12-03", "ARK", "INV-9", "55555555", "USD", "2", "bad2"),
+      ("2025-12-04", "TLM", "INV-2", "77777777", "USD", "3", "bad3"),
+      ("2025-12-05", "ARK", "INV-10", null, "USD", "4", "no code")))
+    val coa = Seq("40000001", "40000001").toDF("account_code")
+    val ri = Audits.of(df, Dq.salesSchema(settings), Some(coa)).exceptions
+      .filter(col("check") === "account_in_coa")
+      .select("dataset", "index", "column", "failure_case", "schema_context", "check_number")
+      .as[(String, Long, String, String, String, Option[Int])]
+      .collect().sortBy(_._2).toSeq
+    assert(ri == Seq(0L -> null, 1L -> "55555555", 3L -> "99999999", 4L -> "77777777")
+      .map { case (i, code) => ("sales", i, "account_code", code, "Column", None) })
   }
 
   test("summary has the five-dataset backbone with zero-fill and gate status") {

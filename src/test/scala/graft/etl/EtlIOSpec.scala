@@ -95,11 +95,15 @@ class EtlIOSpec extends SparkSpec {
     val p = s"${tmpDir("etlio")}/q.csv"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
       "entity,\"note, detail\"\nTLM,hello\n")
-    val df = EtlIO.readCsvRaw(spark, p,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("entity",
-          org.apache.spark.sql.types.StringType))))
-    assert(df.columns.toSeq == Seq("entity"))
-    assert(df.collect().map(_.getString(0)).toSeq == Seq("TLM"))
+    graft.core.Caches.scoped { own =>
+      val read = EtlIO.readCsvRawAudited(spark, p,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("entity",
+            org.apache.spark.sql.types.StringType))), "q", own)
+      assert(read.header == Seq("entity", "note, detail"))
+      assert(read.clean.columns.toSeq == Seq("entity"))
+      assert(read.clean.collect().map(_.getString(0)).toSeq == Seq("TLM"))
+      assert(read.exceptions.isEmpty)
+    }
   }
 }

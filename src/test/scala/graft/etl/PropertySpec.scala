@@ -47,13 +47,19 @@ class PropertySpec extends SparkSpec {
       day <- Gen.chooseNum(1, 28)
     } yield (f"2025-12-$day%02d", ccy, amt)
     forAllSeeded(Gen.listOfN(60, row)) { rows =>
-      val df = rows.toDF("date", "currency", "amount")
+      val sales = rows.zipWithIndex.map { case ((d, ccy, amt), i) =>
+          (d, "TLM", s"INV-$i", "40000001", ccy, amt, "x") }
+        .toDF("date", "entity", "invoice_id", "account_code", "currency", "amount", "description")
         .withColumn("date", to_date(col("date")))
+      def none(schema: org.apache.spark.sql.types.StructType) =
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       val fx = (1 to 28).flatMap(d => Seq(
         (f"2025-12-$d%02d", "EUR", "USD", 1.1), (f"2025-12-$d%02d", "TZS", "USD", 0.0004)))
         .toDF("date", "from_currency", "to_currency", "rate")
         .withColumn("date", to_date(col("date")))
-      val out = Transform.addFxAmountBase(df, Transform.fxToBase(fx, "USD"), "USD")
+      val out = Transform.toFactTransactions(sales, none(Schemas.expenses),
+        none(Schemas.payroll), none(Schemas.inventory), Transform.fxToBase(fx, "USD"), "USD")
+      assert(Transform.missingFxPairs(out).isEmpty)
       assert(out.filter(col("currency") === "USD" &&
         (col("rate") =!= 1.0 || col("amount_base") =!= bround(col("amount"), 2))).isEmpty)
       assert(out.filter(col("currency") =!= "USD" &&
@@ -98,12 +104,12 @@ class PropertySpec extends SparkSpec {
     forAllSeeded(Gen.listOfN(30, clean), n = 4) { rows0 =>
       val rows = rows0.distinctBy(_._3) // unique invoice ids
       val df = rows.toDF("date", "entity", "invoice_id", "account_code", "currency", "amount", "description")
-      val ex = Validator.exceptions(spark, df, Dq.salesSchema(Settings()))
+      val ex = Audits.of(df, Dq.salesSchema(Settings())).exceptions
       assert(ex.isEmpty)
       // plant one negative amount → exactly one greater_than(0.0) exception
       val bad = (rows.head.copy(_3 = "INV-BAD", _6 = "-5.0") +: rows.tail)
         .toDF("date", "entity", "invoice_id", "account_code", "currency", "amount", "description")
-      val exBad = Validator.exceptions(spark, bad, Dq.salesSchema(Settings())).collect()
+      val exBad = Audits.of(bad, Dq.salesSchema(Settings())).exceptions.collect()
       assert(exBad.length == 1)
       assert(exBad.head.getAs[String]("check") == "greater_than(0.0)")
     }
