@@ -35,7 +35,7 @@ object Corpus {
     * for <2-word texts (Spark's sequence(0,-1) would emit a phantom).
     */
   def withShingles(df: DataFrame): DataFrame =
-    // native codegen'd Shingles expression (r7) — one fused pass per row;
+    // native codegen'd Shingles expression — one fused pass per row;
     // bit-parity with the HOF chain `array_distinct(transform(sequence(0,
     // size(w)-2), i -> concat_ws(' ', w[i], w[i+1])))` over `w =
     // split(text, ' ')` (incl. the <2-words empty guard) is pinned in
@@ -69,7 +69,7 @@ object Corpus {
   def bandSignaturesCarrying(docsWithSh: DataFrame,
       carry: Seq[String]): DataFrame = {
     val keyCols = col("doc_id") +: carry.map(col)
-    // native MinHashBases + MinHashSignature (r7): one fused pass per row
+    // native MinHashBases + MinHashSignature: one fused pass per row
     // instead of H interpreted array_min(transform(...)) lambdas; a null
     // signature (empty shingle set) yields null mh columns, exactly like
     // array_min over an empty transform. Bit-parity pinned in
@@ -88,8 +88,7 @@ object Corpus {
   /** the lazy [[nearDupPairs]] frame over [[shingleSets]], valid while
     * `own`'s scope is open — lets [[updateClustersWithStats]] share ONE
     * shingled batch between the in-batch pair stage and the index
-    * cross-edge stage (each previously shingled the same docs
-    * independently).
+    * cross-edge stage.
     */
   private[graft] def nearDupPairsFrom(sh: DataFrame, threshold: Double,
       own: Caches): DataFrame = {
@@ -100,7 +99,7 @@ object Corpus {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-    // verify-regime dispatch (r14 — [[dispatchVerifySets]]): the two
+    // verify-regime dispatch ([[dispatchVerifySets]]): the two
     // set joins broadcast when the measured set bytes fit the budget
     // (the measuring agg also materializes sh's cache, work the verify
     // paid anyway), degrade to candidate-pruned broadcast, then SMJ.
@@ -142,8 +141,8 @@ object Corpus {
     * of linearly in the diameter (a 100-hop chain converges in ~7
     * rounds, not 100). Both hops live in ONE plan per round: a single
     * localCheckpoint action materializes it, and convergence is read
-    * from an [[Observation]] metric collected during that same action
-    * (the r2 shape paid a second join+count action per round).
+    * from an [[Observation]] metric collected during that same action,
+    * not a second join+count action per round.
     *
     * The working caches (shingles, signatures, symmetric edges) are
     * released before returning — the result is materialized into the
@@ -202,26 +201,15 @@ object Corpus {
     }
     val nNodes = metric(obs0, "n")
     def bcN(df: DataFrame): DataFrame = dispatchNodeFrame(df, nNodes, 2)
-    val explainRounds = sym.sparkSession.conf
-      .getOption("graft.debug.graphExplain").contains("true")
-    def explain(tag: String, df: DataFrame): Unit =
-      if (explainRounds)
-        // dev-only plan capture: the loop's OUTPUT is checkpoint-backed,
-        // so `Profile plan` over the returned frame can never show the
-        // per-round join strategy — this prints it where plans evidence
-        // is cut
-        System.err.println(s"[cc $tag]\n" + df.queryExecution
-          .explainString(org.apache.spark.sql.execution.FormattedMode))
     // one full label-propagation round (neighbor-label min + pointer
-    // jump) over the current labels. node-frame dispatch (r16): the
-    // label lookup side, the neighbor-min frame and the pointer-jump
-    // frame are all ≤ |V| rows of two longs — under budget they
-    // broadcast, so the CACHED edge table never re-exchanges (the
-    // un-hinted loop paid one O(E) shuffle of `sym` per round: labels
-    // come out of a checkpoint, whose default-sized stats make the
-    // static threshold blind, and AQE's runtime rescue still writes the
-    // edge map stage first). `carry` columns ride the projection
-    // unchanged (the fused first block carries round 1's chg flag
+    // jump) over the current labels. node-frame dispatch: the label
+    // lookup side, the neighbor-min frame and the pointer-jump frame are
+    // all ≤ |V| rows of two longs — under budget they broadcast, so the
+    // CACHED edge table never re-exchanges (unhinted, each round pays
+    // one O(E) shuffle of `sym`: labels come out of a checkpoint, whose
+    // default-sized stats make the static threshold blind, and AQE's
+    // runtime rescue still writes the edge map stage first). `carry`
+    // columns ride the projection unchanged (the fused first block carries round 1's chg flag
     // through round 2 so ONE Observation reads both rounds' counters).
     def fullRound(lbl: DataFrame, carry: Seq[String]): DataFrame = {
       val nm = sym
@@ -264,10 +252,9 @@ object Corpus {
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
           (coalesce(col("nmin"), col("label")) < col("label"))
             .cast("long").as("chg1")))
-      val block0 = fullRound(r1, Seq("chg1"))
+      fullRound(r1, Seq("chg1"))
         .observe(obsB, sum(col("chg1")).as("c1"), sum(col("chg")).as("c2"))
-      explain("rounds 1+2 (fused)", block0)
-      block0.localCheckpoint()
+        .localCheckpoint()
     }
     val c1 = metric(obsB, "c1")
     val c2 = metric(obsB, "c2")
@@ -281,10 +268,9 @@ object Corpus {
     while (changed > 0) {
       rounds += 1
       val obs = Observation()
-      val next0 = fullRound(labels, Nil)
+      val next = fullRound(labels, Nil)
         .observe(obs, sum(col("chg")).as("changed"))
-      explain(s"round $rounds", next0)
-      val next = next0.localCheckpoint()
+        .localCheckpoint()
       changed = metric(obs, "changed")
       labels = next.select("doc_id", "label")
     }
@@ -344,8 +330,8 @@ object Corpus {
     * instead. The recursion runs on the INFLOW frame:
     * round k+1 LEFT-joins the edge table with round k's inflow and
     * applies the rank update inline (absent sources take the base rank
-    * via the update's coalesce — what the per-round ids join used to
-    * provide), and the |V|-row ids join runs once after the loop. Each
+    * via the update's coalesce, so no per-round ids join is needed),
+    * and the |V|-row ids join runs once after the loop. Each
     * round's subtree appears exactly once inside round k+1 (linear
     * plan growth, no exponential re-execution, no lineage to truncate
     * at a 3-round horizon), and each round costs ONE broadcast-exchange
@@ -384,18 +370,15 @@ object Corpus {
     // the formula, so the regime decision is free, and under budget the
     // cached edge table stays un-exchanged through every round
     def bcN(df: DataFrame): DataFrame = dispatchNodeFrame(df, n, 2)
-    // deg as groupBy + broadcast-join, NOT a window (measured): a
-    // count().over(partitionBy(src)) window folds the degree into the
-    // eDeg build stage and drops the deg broadcast-build job, but it
-    // A/B-regressed (x27 min-of-6: 2.69 → 3.36 s) — the window's
-    // src-keyed exchange + sort of the O(E) frame costs more than the
-    // broadcast build, which AQE overlaps with the other futures anyway
-    // (the a22 lesson: concurrent-future work is ~free on a wide box).
+    // deg as groupBy + broadcast-join, NOT a window: a
+    // count().over(partitionBy(src)) window would drop the deg
+    // broadcast-build job, but its src-keyed exchange + sort of the O(E)
+    // frame costs more than the broadcast build, which AQE overlaps
+    // with the other futures anyway (x27 min-of-6: 2.69 s here, 3.36 s
+    // with the window).
     val deg = edges.groupBy(col(sCol).as("src")).agg(count(lit(1)).as("deg"))
     val eDeg = own(edges.select(col(sCol).as("src"), col(dCol).as("dst"))
       .join(bcN(deg), "src"))
-    val explainRounds = edges.sparkSession.conf
-      .getOption("graft.debug.graphExplain").contains("true")
     val base = (1.0 - damping) / n
     val lazyFixed = eps < 0
     var ranks = ids.withColumn("rank", roundAt(lit(1.0 / n), 10))
@@ -426,7 +409,7 @@ object Corpus {
           // lazy round k ≥ 2: attach rank = update(inflow_{k−1}) on the
           // edge table via a LEFT join with the previous inflow — sources
           // absent from it take the base rank through update's coalesce,
-          // exactly what the ids⨝inflow rank frame used to provide. Every
+          // as an ids⨝inflow rank frame would give them. Every
           // eDeg src IS a node id (edges are built over the node set; the
           // round-1 fusion above already relies on this), so the
           // inner-join-with-ranks filter this replaces was a no-op.
@@ -442,20 +425,12 @@ object Corpus {
         // Observation — the round's subtree appears exactly once inside
         // round k+1 (linear plan growth)
         lastInflow = inflow
-        if (explainRounds)
-          System.err.println(s"[pagerank round $rounds]\n" + inflow.queryExecution
-            .explainString(org.apache.spark.sql.execution.FormattedMode))
       } else {
         val obs = Observation()
-        val next0 = ranks.join(bcN(inflow), Seq("id"), "left")
+        val next = ranks.join(bcN(inflow), Seq("id"), "left")
           .select(col("id"), col("rank").as("prev"), update.as("rank"))
           .observe(obs, max(abs(col("rank") - col("prev"))).as("moved"))
-        if (explainRounds)
-          // dev-only plan capture — the returned frame is checkpoint-backed,
-          // so this is the only place the per-round join strategy is visible
-          System.err.println(s"[pagerank round $rounds]\n" + next0.queryExecution
-            .explainString(org.apache.spark.sql.execution.FormattedMode))
-        val next = next0.localCheckpoint()
+          .localCheckpoint()
         moved = obs.get("moved") match {
           case null => 0.0
           case x: java.lang.Number => x.doubleValue()
@@ -598,7 +573,7 @@ object Corpus {
     * delegates here).
     *
     * The rank pass (withRank = true) also carries the WEIGHTED prefix
-    * columns (r10 — Bayardo et al. WWW'07 §3 generalized to weighted
+    * columns (Bayardo et al. WWW'07 §3 generalized to weighted
     * overlap): `w` = N_docs / df (the idf weight, one IEEE division —
     * bit-identical across engines), `wsum` = the doc's full weighted
     * size Σw including its df = 1 singletons, and `wrem` = the weight
@@ -749,7 +724,7 @@ object Corpus {
     else indexPaths.map(p => spark.read.schema(schema).parquet(s"$p/$table")
       .select(schema.fieldNames.toIndexedSeq.map(col): _*)).reduce(_.unionByName(_))
 
-  // ---- exact-verify regime dispatch (r14) ---------------------------------
+  // ---- exact-verify regime dispatch ---------------------------------------
 
   /** Broadcast budget for the exact-verify joins, derived from task
     * memory: maxHeap / 8 (override: session conf
@@ -760,8 +735,8 @@ object Corpus {
     * so a side ≤ heap/8 keeps peak broadcast footprint ≤ heap/4 —
     * comfortably inside the 0.6·heap unified region next to the probe
     * side's working set. On a cluster the denominator rides
-    * per-EXECUTOR heap, the same memory-per-task lever the r9/r13 scale
-    * runs turned; the floor keeps tiny test JVMs from degrading to SMJ
+    * per-EXECUTOR heap, the memory-per-task lever of the scale runs; the
+    * floor keeps tiny test JVMs from degrading to SMJ
     * on KB-sized fixtures.
     */
   private[graft] def verifyBroadcastBudget(
@@ -778,7 +753,7 @@ object Corpus {
     * closed form, no measuring scan needed (the row count is already on
     * hand: PageRank counts |V| for its formula, CC observes it on the
     * seed checkpoint). The raw-row bytes are charged a 3× multiplier
-    * before the budget compare (r17, r16 ADVICE): the BUILT broadcast
+    * before the budget compare: the BUILT broadcast
     * relation costs a multiple of its UnsafeRow payload — the hash
     * relation's map structure plus the driver-side copy — and in lazy
     * fixed-horizon PageRank several per-round broadcasts are live inside
@@ -817,21 +792,17 @@ object Corpus {
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
-  /** Measured regime dispatch for a BATCH exact-verify join — the r13
-    * verdict's one `weak` finding made self-driving. The decade-3
-    * bracketing (BASELINE §r13) pinned the failure: at sf1 the two
-    * shingle-set verify joins broadcast and the plan is candidate-linear;
-    * at sf3 Spark's static threshold flips them to SortMergeJoin and the
-    * plan carries shingle-ARRAY rows through sorts — 547 s / 11 GB
-    * shuffle / 314 GB spill vs 87 s / 1.1 GB / 0 spill with the verify
-    * side broadcast (6×, and at sf10 the SMJ regime exceeds the box's
-    * disk entirely while broadcast completes). The exchange bytes are
-    * proven linear (fixed-plan 3.32→11.0 GB for 3×), so the PLAN CHOICE
-    * is the failure, not the movement — exactly x28's situation before
-    * its probe-volume dispatch, so this is the same idea: one measured
-    * statistic chooses the regime, and both regimes are output-identical
-    * (VerifyRegimeSpec pins it), so the dispatch can change the plan but
-    * never the answer.
+  /** Measured regime dispatch for a BATCH exact-verify join. At sf1 the
+    * two shingle-set verify joins broadcast and the plan is
+    * candidate-linear; at sf3 Spark's static threshold flips them to
+    * SortMergeJoin and the plan carries shingle-ARRAY rows through sorts:
+    * 547 s / 11 GB shuffle / 314 GB spill against 87 s / 1.1 GB / 0
+    * spill with the verify side broadcast, while the exchange bytes grow
+    * linearly (3.32 → 11.0 GB for 3×). So the PLAN CHOICE is the
+    * failure, not the data movement. One measured statistic chooses the
+    * regime, and both regimes are output-identical (VerifyRegimeSpec
+    * pins it), so the dispatch can change the plan but never the
+    * answer.
     *
     * Regimes, in measured order of preference:
     *  1. whole-set broadcast — [[setFrameBytes]](sets) < budget (strict,
@@ -851,10 +822,10 @@ object Corpus {
     *     (memory per task × aggregate spill disk) scale with the
     *     deployment.
     *
-    * The hint wraps a LOCAL reference used only by the verify joins —
-    * the r13 `shuffle_hash` experiment proved that hinting the SHARED
-    * cached frame poisons the candidate machinery upstream (62 GB W,
-    * reverted), so the candidate side always sees the unhinted plan.
+    * The hint wraps a LOCAL reference used only by the verify joins:
+    * hinting the SHARED cached frame would poison the candidate
+    * machinery upstream, so the candidate side always sees the unhinted
+    * plan.
     *
     * `key` is the sets' id column and `measure` re-measures a pruned
     * set frame (the multimodal evidence sets pass `media_id` and their
@@ -885,7 +856,7 @@ object Corpus {
     * sets, jaccard rounded at 6 dp before thresholding (the oracle
     * contract).
     *
-    * Regime dispatch (r14), static-side only: the index shingle frame is
+    * Regime dispatch, static-side only: the index shingle frame is
     * broadcast when its file-listing size estimate fits the task-memory
     * budget ([[verifyBroadcastBudget]]) — the estimate is the optimizer's
     * own stats over the parquet read (file bytes; works on any Hadoop
@@ -1105,7 +1076,7 @@ object Corpus {
       .join(kept.select("doc_id", "cluster_id"), Seq("doc_id")))
   }
 
-  /** LSM-style compaction of LSH index segments (r11 — the small-files
+  /** LSM-style compaction of LSH index segments (the small-files
     * problem for the DEDUP INDEX, the same disease the reference's S10
     * parquet compaction treats for data files): under the rolling-
     * ingest discipline every batch appends one immutable segment, so
@@ -1119,9 +1090,10 @@ object Corpus {
     * pins curate-against-compacted ≡ curate-against-N-segments).
     * Segments being write-once, the swap is coordination-free: write
     * the compacted segment, point the next ingest's `indexPaths` at it,
-    * delete the inputs at leisure — [[gcSegments]] is that deletion for
-    * the managed seg_/cmp_ layout, with the replay-safety watermark
-    * derived for you.
+    * delete the inputs at leisure —
+    * [[graft.streaming.StreamingOps.gcSegments]] is that deletion for the
+    * managed seg_/cmp_ layout, with the replay-safety watermark derived
+    * for you.
     */
   def compactSegments(spark: org.apache.spark.sql.SparkSession,
       indexPaths: Seq[String], outPath: String): Unit = {
@@ -1130,21 +1102,6 @@ object Corpus {
     writeLshSegment(readIndexSignatures(spark, indexPaths),
       readIndexShingles(spark, indexPaths), outPath)
   }
-
-  /** Retention sweep for a MANAGED segment directory (the seg_N/cmp_N
-    * layout the ingest streams write) — the dual of [[compactSegments]]:
-    * compaction bounds the read set, this reclaims the superseded
-    * artifacts no legal replay can reach, bounding on-disk growth too.
-    * Thin alias for [[graft.streaming.StreamingOps.gcSegments]], which
-    * owns the layout and the watermark derivation (newest compacted
-    * artifact at or below the checkpoint-committed batch) — see its
-    * scaladoc for the replay-safety argument and the loud-failure
-    * contract below the watermark. Returns the deleted paths.
-    */
-  def gcSegments(segmentBasePath: String,
-      lastCommittedBatchId: Long): Seq[String] =
-    graft.streaming.StreamingOps.gcSegments(segmentBasePath,
-      lastCommittedBatchId)
 
   /** The DAILY operation of a 100 TB corpus: curate a NEW batch against
     * the already-curated corpus without touching it. Pipeline:

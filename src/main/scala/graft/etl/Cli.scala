@@ -254,7 +254,7 @@ object Cli {
       // committed — passing a too-new id would take artifacts a pending
       // replay still needs (see StreamingOps.gcSegments scaladoc).
       val opts = parse(args)
-      val gone = graft.corpus.Corpus.gcSegments(
+      val gone = graft.streaming.StreamingOps.gcSegments(
         opts("segments"), opts("committed").toLong)
       println(s"gc-segments=${opts("segments")} deleted=${gone.size} " +
         s"watermark=${graft.streaming.StreamingOps.gcWatermark(opts("segments")).getOrElse(-1L)}")

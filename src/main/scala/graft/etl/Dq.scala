@@ -8,26 +8,28 @@ import org.apache.spark.sql.types._
 
 /** Declarative data-quality engine ≙ reference quality.py (SURVEY §2.9
   * V1–V8): per-column and per-dataframe checks compiled to Column
-  * predicates, evaluated lazily into a unioned exceptions DataFrame —
-  * validation never filters rows, it only reports. Severity, summary and
-  * the gate reproduce quality.py:123–249.
+  * predicates, the lazy collection of every failing row into one
+  * exceptions frame ([[audit]]), severity, summary and the gate
+  * (quality.py:123–249). Validation never filters rows, it only reports.
   *
-  * Scale: every column check is a narrow filter over one scan (Catalyst
-  * collapses the per-check filters into one pass via union + column
-  * pruning); dataframe checks are single aggregates. Nothing here
-  * collects raw data to the driver.
+  * Plan: a table's column checks evaluate in one pass over its typed
+  * view (a per-row array of fired-check structs, exploded); each frame
+  * check is one aggregate; header and corrupt-line rows come from the
+  * read. Every exceptions row, whatever made it, is built by
+  * [[auditRows]]. Nothing here collects raw data to the driver.
   */
 object Dq {
 
   /** A named violation predicate over one column: a row is an exception
-    * when `violation` is true. `checkNo` mirrors pandera's check_number.
+    * when `violation` is true.
     */
-  final case class ColumnCheck(column: String, name: String, violation: Column, checkNo: Option[Int] = None)
+  final case class ColumnCheck(column: String, name: String, violation: Column)
 
-  /** Whole-dataframe check returning exception rows already in the
-    * [[Schemas.dqExceptions]] shape (minus dataset).
+  /** Whole-dataframe check: `failures` returns one `failure_case` string
+    * column, one row per failure; the audit adds the rest of the row
+    * with `check = name`.
     */
-  final case class FrameCheck(name: String, exceptions: DataFrame => DataFrame)
+  final case class FrameCheck(name: String, failures: DataFrame => DataFrame)
 
   /** Table contract: typed schema + natural-key order (defines the
     * deterministic `index` — SURVEY §7.4.2) + checks. `strict` reports
@@ -40,8 +42,23 @@ object Dq {
       columnChecks: Seq[ColumnCheck],
       frameChecks: Seq[FrameCheck] = Nil)
 
+  /** `df` as dq_exceptions rows, exactly [[Schemas.dqExceptions]]
+    * (names, types, order): the one place an audit row is built.
+    * pandera's `check_number` is always null.
+    */
+  def auditRows(df: DataFrame, dataset: String, index: Column, column: Column,
+      check: Column, failureCase: Column, context: String): DataFrame =
+    df.select(
+      lit(dataset).as("dataset"),
+      index.cast(LongType).as("index"),
+      column.cast(StringType).as("column"),
+      check.as("check"),
+      failureCase.cast(StringType).as("failure_case"),
+      lit(context).as("schema_context"),
+      lit(null).cast(IntegerType).as("check_number"))
+
   // ---- check constructors (the DSL) --------------------------------------
-  // Checks run over [[Validator.audit]]'s typed frame: `c` is the typed
+  // Checks run over [[audit]]'s typed frame: `c` is the typed
   // column, `rawCol(c)` the original string. notNull looks at the raw value
   // so a dtype-coercion failure (raw non-null, typed null) reports exactly
   // once.
@@ -78,13 +95,7 @@ object Dq {
     FrameCheck(s"no_duplicates(${keys.mkString(", ")})", df =>
       df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1)
-        .select(
-          lit(null).cast("long").as("index"),
-          lit(null).cast("string").as("column"),
-          lit(s"no_duplicates(${keys.mkString(", ")})").as("check"),
-          concat_ws("|", keys.map(col): _*).as("failure_case"),
-          lit("DataFrameSchema").as("schema_context"),
-          lit(null).cast("int").as("check_number")))
+        .select(concat_ws("|", keys.map(col): _*).as("failure_case")))
 
   /** payroll identity |gross − deductions − net| < 0.01 (quality.py:59–65):
     * a single global aggregate exception when violated.
@@ -93,13 +104,7 @@ object Dq {
     FrameCheck("payroll_identity", df =>
       df.agg(max(abs(col("gross") - col("deductions") - col("net"))).as("mx"))
         .filter(col("mx") >= 0.01)
-        .select(
-          lit(null).cast("long").as("index"),
-          lit(null).cast("string").as("column"),
-          lit("payroll_identity").as("check"),
-          col("mx").cast("string").as("failure_case"),
-          lit("DataFrameSchema").as("schema_context"),
-          lit(null).cast("int").as("check_number")))
+        .select(col("mx").cast("string").as("failure_case")))
 
   // ---- table contracts ≙ quality.py:16–95 --------------------------------
 
@@ -145,6 +150,129 @@ object Dq {
       notNull("to_currency"), isin("to_currency", Seq(s.baseCurrency)),
       dtypeCoerce("rate", DoubleType), notNull("rate"), gt("rate", 0)),
     Seq(dupKeys(Seq("date", "from_currency", "to_currency"))))
+
+  // ---- lazy collect ≙ quality.validate_or_collect (quality.py:98–115) ----
+  // Every check runs and every failing row is reported; the data rows
+  // pass through unfiltered and the gate decides. Contract notes (SURVEY
+  // §7.4):
+  //  - `index` is the row's rank (0-based) in the table's natural-key
+  //    order, not a pandas file index — deterministic under any
+  //    partitioning;
+  //  - dtype checks mirror pandera coerce=True by validating the raw
+  //    string against the target type (the close's all-strings read
+  //    happens in [[EtlIO.readCsvRawAudited]]);
+  //  - strict=True column-set enforcement compares the actual CSV header
+  //    (driver-side) against the contract.
+
+  /** full deterministic ordering: natural keys first, then every other
+    * contract column, then the raw strings — duplicate-natural-key rows
+    * (the very case dupKeys reports) and rows whose typed values tie
+    * but whose raw strings differ (two different unparseable dates)
+    * still index by file content alone.
+    */
+  private def indexOrder(table: TableSchema): Seq[Column] = {
+    val names = table.orderKeys ++
+      table.schema.fieldNames.filterNot(table.orderKeys.contains)
+    (names ++ table.schema.fieldNames.map(rawCol)).map(col)
+  }
+
+  /** typed view of an all-strings frame + per-column raw copies */
+  private def typedView(raw: DataFrame, table: TableSchema): DataFrame = {
+    val fields = table.schema.fields.toSeq
+    raw.select(
+      fields.map(f => col(f.name).cast(f.dataType).as(f.name)) ++
+        fields.map(f => col(f.name).as(rawCol(f.name))): _*)
+  }
+
+  /** one table as the close audits it: `typed` is the typed view plus
+    * the raw strings and `__idx`, `exceptions` its lazy exception rows,
+    * corrupt lines included
+    */
+  final case class Audit(typed: DataFrame, exceptions: DataFrame)
+
+  /** The close's validation of one audited read, lazily: `typed` is the
+    * read in [[indexOrder]] as one sorted partition, and every reader of
+    * it (the exception generators, the fact) plans over that one order,
+    * so rows that tie downstream (two movements of one sku on one day,
+    * in the fact's order) keep the order their index gives them. `coa`
+    * holds the chart of accounts for a table under the account_in_coa
+    * check. The exceptions are the column-check, frame-check, header,
+    * account_in_coa and corrupt-line rows, in that order.
+    */
+  def audit(spark: SparkSession, read: EtlIO.AuditedCsv, table: TableSchema,
+      coa: Option[DataFrame]): Audit = {
+    val typed = typedView(read.clean, table).coalesce(1)
+      .sortWithinPartitions(indexOrder(table): _*)
+      // in one partition the id is exactly the row's position, 0..n-1
+      .withColumn("__idx", monotonically_increasing_id())
+    val exceptions = columnRows(typed, table) ++ frameRows(typed, table) ++
+      headerRows(spark, table, read.header) ++ coa.map(accountInCoa(typed, table.name, _)) :+
+      read.exceptions
+    Audit(typed, exceptions.reduce(_.unionByName(_)))
+  }
+
+  /** ALL column checks evaluate in ONE pass (SURVEY §2.9 V1): a per-row
+    * array of fired-check structs, exploded and null-filtered. One scan
+    * and one small plan per table instead of one filter branch per check
+    * — with ~12 checks × 5 tables the per-branch plan was dominated by
+    * Catalyst analysis time, not data.
+    */
+  private[etl] def columnRows(typed: DataFrame, table: TableSchema): Seq[DataFrame] =
+    if (table.columnChecks.isEmpty) Nil else {
+      val fired = table.columnChecks.map { ck =>
+        // dtype failures report the raw string; the rest the typed value
+        // when it has one
+        val failureCase =
+          if (ck.name.startsWith("dtype")) col(rawCol(ck.column))
+          else coalesce(col(ck.column).cast("string"), col(rawCol(ck.column)))
+        when(ck.violation, struct(
+          lit(ck.column).as("column"), lit(ck.name).as("check"), failureCase.as("failure_case")))
+      }
+      Seq(auditRows(
+        typed.select(col("__idx"), explode(array(fired: _*)).as("ck")).filter(col("ck").isNotNull),
+        table.name, col("__idx"), col("ck.column"), col("ck.check"), col("ck.failure_case"), "Column"))
+    }
+
+  /** each frame check's rows, `check` its name */
+  private[etl] def frameRows(typed: DataFrame, table: TableSchema): Seq[DataFrame] =
+    table.frameChecks.map(fc => auditRows(fc.failures(typed), table.name,
+      lit(null), lit(null), lit(fc.name), col("failure_case"), "DataFrameSchema"))
+
+  /** strict=True header rows (driver-side, quality.py:29 etc.): one local
+    * frame over the file's unexpected columns, then the contract's
+    * missing ones; none when the header matches
+    */
+  private[etl] def headerRows(spark: SparkSession, table: TableSchema,
+      header: Seq[String]): Seq[DataFrame] = {
+    import spark.implicits._
+    val expected = table.schema.fieldNames.toSeq
+    val found = header.filterNot(expected.contains)
+      .map(c => (c, "column_in_schema", s"unexpected column '$c'")) ++
+      expected.filterNot(header.contains).map(c => (c, "column_required", s"missing column '$c'"))
+    if (found.isEmpty) Nil
+    else Seq(auditRows(found.toDF("column", "check", "failure_case"), table.name,
+      lit(null), col("column"), col("check"), col("failure_case"), "DataFrameSchema"))
+  }
+
+  /** referential-integrity rows ≙ pipeline._dq_account_in_coa
+    * (pipeline.py:30–47): rows of the audited `typed` whose account_code
+    * is not in the COA (broadcast, SURVEY J6), a null code included,
+    * each reported once at its `__idx`
+    */
+  private[etl] def accountInCoa(typed: DataFrame, dataset: String,
+      coaCodes: DataFrame): DataFrame =
+    auditRows(
+      typed.join(broadcast(coaCodes.select(col("account_code").cast("string").as("account_code"))),
+        Seq("account_code"), "left_anti"),
+      dataset, col("__idx"), lit("account_code"), lit("account_in_coa"), col("account_code"), "Column")
+
+  /** the audit's row order: (dataset, check, index), and the rows of one
+    * duplicate-key check (null index) by their key, so they do not come
+    * out in the order the check's hash aggregate emits them. Header and
+    * corrupt-line rows tie on every key and keep their order.
+    */
+  val auditOrder: Seq[Column] = Seq(col("dataset"), col("check"), col("index"),
+    when(col("check").startsWith("no_duplicates("), col("failure_case")))
 
   // ---- severity / summary / gate ≙ quality.py:123–249 --------------------
 
@@ -216,12 +344,5 @@ object Dq {
       case _            => errors > 0
     }
     if (fails) "FAIL" else "PASS"
-  }
-
-  /** empty exceptions frame with the audit schema + severity (V8). */
-  def emptyExceptions(spark: SparkSession): DataFrame = {
-    val schema = StructType(Schemas.dqExceptions.fields :+
-      StructField("severity", StringType, nullable = true))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 }

@@ -18,7 +18,7 @@ import graft.core.{Caches, Publish, Scratch}
   *
   * CSV reads are schema'd, never inferred. [[readCsvRawAudited]] reads
   * every column as string so the DQ engine can report pandera-style
-  * dtype-coercion failures; [[Validator.audit]] applies the typed cast
+  * dtype-coercion failures; [[Dq.audit]] applies the typed cast
   * afterward. Missing files raise (reference io_utils.py:9–10).
   */
 object EtlIO {
@@ -99,16 +99,11 @@ object EtlIO {
     * silently dropping (quality.py:98–115); without this channel a
     * broken line became silent nulls.
     */
-  private def corruptExceptions(raw: DataFrame, dataset: String): DataFrame =
-    raw.filter(org.apache.spark.sql.functions.col(CorruptCol).isNotNull)
-      .select(
-        org.apache.spark.sql.functions.lit(dataset).as("dataset"),
-        org.apache.spark.sql.functions.lit(null).cast("long").as("index"),
-        org.apache.spark.sql.functions.lit(null).cast(StringType).as("column"),
-        org.apache.spark.sql.functions.lit("corrupt_record").as("check"),
-        org.apache.spark.sql.functions.col(CorruptCol).as("failure_case"),
-        org.apache.spark.sql.functions.lit("DataFrameSchema").as("schema_context"),
-        org.apache.spark.sql.functions.lit(null).cast("int").as("check_number"))
+  private def corruptExceptions(raw: DataFrame, dataset: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    Dq.auditRows(raw.filter(col(CorruptCol).isNotNull), dataset,
+      lit(null), lit(null), lit("corrupt_record"), col(CorruptCol), "DataFrameSchema")
+  }
 
   /** an audited CSV read: the clean rows in contract order, the
     * corrupt-line exceptions and the file's header as read.

@@ -91,16 +91,17 @@ object Pipeline {
           // fills the read's cache in this chain's own job, before either
           // branch reads it (isEmpty: one job; count would take two)
           read.clean.isEmpty
-          ts -> Validator.audit(spark, read, ts, coaCheck)
+          ts -> Dq.audit(spark, read, ts, coaCheck)
         }
       }).map(_.get)
 
       // exception frames are audit-sized by CONTRACT (human-readable
-      // output, quality.py:205–249; the sink below is single-file CSV).
-      // Only the DQ branch reads this cache, one action after the other.
-      val withSeverity = own(EtlIO.sortedLocally(
-        Dq.addSeverity(audits.map(_._2.exceptions).reduce(_.unionByName(_))),
-        "dataset", "check", "index"))
+      // output, quality.py:205–249; the sink below is single-file CSV),
+      // so they sort locally as [[EtlIO.sortedLocally]] does, in
+      // [[Dq.auditOrder]]. Only the DQ branch reads this cache, one
+      // action after the other.
+      val withSeverity = own(Dq.addSeverity(audits.map(_._2.exceptions).reduce(_.unionByName(_)))
+        .repartition(1).sortWithinPartitions(Dq.auditOrder: _*))
 
       // the curated branch's inputs, built before any branch starts so
       // that nothing between the branches' start and their settling can

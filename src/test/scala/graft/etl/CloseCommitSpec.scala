@@ -9,7 +9,7 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
 
 import graft.SparkSpec
 
-/** The close's commit and its lazy row index:
+/** The close's commit and its audit:
   *
   *  - the three curated tables are published only when the gate passes
   *    and the fact has every FX rate; a rejected or missing-FX close over
@@ -17,9 +17,9 @@ import graft.SparkSpec
   *    with no staging debris;
   *  - the gate's verdict wins over missing FX rates;
   *  - no job of the close outlives the call;
-  *  - a table is indexed only when a row check fires, and the audit is
-  *    the same either way (expected bytes written by hand from the
-  *    injected defects' row numbers).
+  *  - the audit's bytes for RI-only, one-dtype and clean months (expected
+  *    bytes written by hand from the injected defects' row numbers);
+  *  - duplicate-key rows keep one order under any shuffle partitioning.
   */
 class CloseCommitSpec extends SparkSpec {
 
@@ -148,9 +148,9 @@ class CloseCommitSpec extends SparkSpec {
        |""".stripMargin
 
   test("the audit is the same whether or not a table needed its row index") {
-    // RI only: no column check fires anywhere, so only the account_in_coa
-    // probe asks for the index of sales and expenses; SampleData writes
-    // both in natural-key order, so a row's index is its row number
+    // RI only: no column check fires anywhere; SampleData writes sales
+    // and expenses in natural-key order, so a row's index is its row
+    // number
     val ri = sample("lazy_ri")
     patchCell(ri, "sales.csv", 5, 3, "49999999")
     patchCell(ri, "expenses.csv", 7, 3, "69999999")
@@ -161,7 +161,7 @@ class CloseCommitSpec extends SparkSpec {
     assert(read(riOut.summaryPath) ==
       summary("1,0,1,FAIL", "1,0,1,FAIL", "0,0,0,PASS"))
 
-    // one dtype defect in one table: only payroll is indexed
+    // one dtype defect in payroll
     val dtype = sample("lazy_dtype")
     patchCell(dtype, "payroll.csv", 3, 4, "abc")
     val dtypeOut = intercept[Pipeline.DqGateFailedException](close(dtype))
@@ -170,11 +170,33 @@ class CloseCommitSpec extends SparkSpec {
     assert(read(dtypeOut.summaryPath) ==
       summary("0,0,0,PASS", "0,0,0,PASS", "1,0,1,FAIL"))
 
-    // a clean month: no table is indexed
+    // a clean month
     val cleanOut = close(sample("lazy_clean"))
     assert(read(cleanOut.dqExceptions) == header)
     assert(read(cleanOut.dqSummary) ==
       summary("0,0,0,PASS", "0,0,0,PASS", "0,0,0,PASS"))
+  }
+
+  test("duplicate-key rows come out in one order under any shuffle partitioning") {
+    // three no_duplicates(entity, invoice_id) groups in sales: TLM rows 9
+    // and 10 with a blank invoice id, TLM row 12 repeating row 11's id and
+    // UPE row 45 repeating row 44's; the audit lists them by failure_case
+    // whatever the partition count
+    val base = sample("dup_order")
+    Seq(9 -> "", 10 -> "", 12 -> "INV-TLM-0011", 45 -> "INV-UPE-0004").foreach {
+      case (row, id) => patchCell(base, "sales.csv", row, 2, id)
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.getOption(key)
+    val audits = Seq("1", "7").map { n =>
+      spark.conf.set(key, n)
+      try read(close(base, FailOn.Never).dqExceptions)
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    assert(audits.distinct.size == 1)
+    assert(audits.head.linesIterator.filter(_.contains("no_duplicates")).toSeq ==
+      Seq("TLM", "TLM|INV-TLM-0011", "UPE|INV-UPE-0004").map(dup =>
+        s"""sales,,,"no_duplicates(entity, invoice_id)",$dup,DataFrameSchema,,WARN"""))
   }
 
   private def files(dir: Path): Seq[Path] = {

@@ -84,7 +84,7 @@ class CloseIndexSpec extends SparkSpec {
       Caches.scoped { own =>
         val audited = EtlIO.readCsvRawAudited(spark, s"$raw/$file", ts.schema, ts.name, own)
         val keyCols = ts.orderKeys.map(k => col(Dq.rawCol(k)))
-        val rows = withCloseAqe(Validator.audit(spark, audited, ts, None).typed
+        val rows = withCloseAqe(Dq.audit(spark, audited, ts, None).typed
           .select(col("__idx") +: keyCols: _*).collect())
         val n = expected(ts.name)
         assert(rows.length == n, s"${ts.name}: ${rows.length} coerced rows, $n raw")

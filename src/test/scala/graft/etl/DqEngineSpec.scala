@@ -111,6 +111,41 @@ class DqEngineSpec extends SparkSpec {
       .map { case (i, code) => ("sales", i, "account_code", code, "Column", None) })
   }
 
+  test("every exception generator writes exactly the dq_exceptions row") {
+    val sales = Dq.salesSchema(settings)
+    val typed = Audits.of(salesRaw(Seq(
+      ("2025-12-01", "TLM", "INV-1", "99999999", "USD", "-1", "bad amount, unknown code"),
+      ("2025-12-02", "TLM", "INV-1", "40000001", "USD", "1", "duplicate key"))), sales).typed
+    val payroll = Dq.payrollSchema(settings)
+    val payrollTyped = Audits.of(Seq(("2025-12", "TLM", "E1", "USD", "1000", "100", "850"))
+      .toDF("month", "entity", "employee_id", "currency", "gross", "deductions", "net"), payroll).typed
+    val csv = java.nio.file.Paths.get(tmpDir("generators"), "sales.csv")
+    java.nio.file.Files.writeString(csv,
+      "date,entity,invoice_id,account_code,currency,amount,description\n2025-12-01,TLM\n")
+    val contract = Schemas.dqExceptions.fields.toSeq
+    def conforms(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      assert(df.schema.fields.toSeq.map(f => (f.name, f.dataType)) == contract.map(f => (f.name, f.dataType)),
+        s"$name: ${df.schema.simpleString}")
+      val rows = df.collect()
+      assert(rows.nonEmpty, s"$name wrote no row")
+      contract.zipWithIndex.filterNot(_._1.nullable).foreach { case (f, i) =>
+        assert(rows.forall(!_.isNullAt(i)), s"$name: null ${f.name}")
+      }
+      assert(rows.forall(_.isNullAt(contract.indexWhere(_.name == "check_number"))), name)
+    }
+    Seq(
+      "column check" -> Dq.columnRows(typed, sales).head,
+      "header" -> Dq.headerRows(spark, sales, Seq("date", "rogue")).head,
+      "duplicate key" -> Dq.frameRows(typed, sales).head,
+      "payroll identity" -> Dq.frameRows(payrollTyped, payroll).head,
+      "account_in_coa" -> Dq.accountInCoa(typed, "sales", Seq("40000001").toDF("account_code"))
+    ).foreach { case (name, df) => conforms(name, df) }
+    graft.core.Caches.scoped { own =>
+      conforms("corrupt line",
+        EtlIO.readCsvRawAudited(spark, csv.toString, sales.schema, "sales", own).exceptions)
+    }
+  }
+
   test("summary has the five-dataset backbone with zero-fill and gate status") {
     val ex = Dq.addSeverity(
       Seq(("sales", 0L, "amount", "greater_than(0.0)", "-1", "Column", null: Integer))
