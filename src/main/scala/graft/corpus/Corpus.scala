@@ -717,7 +717,7 @@ object Corpus {
       indexPaths: Seq[String]): DataFrame =
     readSegments(spark, indexPaths, "shingles", ShingleSchema)
 
-  private def readSegments(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def readSegments(spark: org.apache.spark.sql.SparkSession,
       indexPaths: Seq[String], table: String, schema: StructType): DataFrame =
     if (indexPaths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

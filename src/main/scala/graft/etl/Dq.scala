@@ -2,7 +2,7 @@ package graft.etl
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,11 +12,14 @@ import org.apache.spark.sql.types._
   * exceptions frame ([[audit]]), severity, summary and the gate
   * (quality.py:123–249). Validation never filters rows, it only reports.
   *
-  * Plan: a table's column checks evaluate in one pass over its typed
-  * view (a per-row array of fired-check structs, exploded); each frame
-  * check is one aggregate; header and corrupt-line rows come from the
-  * read. Every exceptions row, whatever made it, is built by
-  * [[auditRows]]. Nothing here collects raw data to the driver.
+  * Plan: a table's column checks, account_in_coa included, evaluate in
+  * one pass over its typed view (a per-row array of fired-check structs,
+  * exploded); each frame check is one aggregate; header and corrupt-line
+  * rows come from the read. Every exceptions row, whatever made it, is
+  * built by [[auditRows]]. The summary and the gate read per (dataset,
+  * severity) counts that the audit write observes as it goes
+  * ([[observeSeverities]]), not a second job. Nothing here collects raw
+  * data to the driver.
   */
 object Dq {
 
@@ -80,6 +83,19 @@ object Dq {
 
   def ne(c: String, bound: Double): ColumnCheck =
     ColumnCheck(c, s"not_equal_to($bound)", col(c).isNotNull && !(col(c) =!= bound))
+
+  /** referential integrity ≙ pipeline._dq_account_in_coa
+    * (pipeline.py:30–47): the code is null or not among the chart of
+    * accounts' non-null codes. The codes are one scalar subquery, run
+    * once per query that reads the check (audits over one `coa` share
+    * it); the COA is reference-sized, so it aggregates in one partition,
+    * one job and no exchange.
+    */
+  def inCoa(coa: DataFrame): ColumnCheck = {
+    val codes = coa.coalesce(1).select(collect_set(col("account_code").cast(StringType))).scalar()
+    ColumnCheck("account_code", "account_in_coa",
+      col("account_code").isNull || !array_contains(codes, col("account_code")))
+  }
 
   /** pandera coerce=True parity: the raw string is present but doesn't
     * cast to the target type.
@@ -194,10 +210,10 @@ object Dq {
     * read in [[indexOrder]] as one sorted partition, and every reader of
     * it (the exception generators, the fact) plans over that one order,
     * so rows that tie downstream (two movements of one sku on one day,
-    * in the fact's order) keep the order their index gives them. `coa`
-    * holds the chart of accounts for a table under the account_in_coa
-    * check. The exceptions are the column-check, frame-check, header,
-    * account_in_coa and corrupt-line rows, in that order.
+    * in the fact's order) keep the order their index gives them. A table
+    * given the chart of accounts `coa` also runs the [[inCoa]] column
+    * check. The exceptions are the column-check (account_in_coa
+    * included), frame-check, header and corrupt-line rows, in that order.
     */
   def audit(spark: SparkSession, read: EtlIO.AuditedCsv, table: TableSchema,
       coa: Option[DataFrame]): Audit = {
@@ -205,9 +221,9 @@ object Dq {
       .sortWithinPartitions(indexOrder(table): _*)
       // in one partition the id is exactly the row's position, 0..n-1
       .withColumn("__idx", monotonically_increasing_id())
-    val exceptions = columnRows(typed, table) ++ frameRows(typed, table) ++
-      headerRows(spark, table, read.header) ++ coa.map(accountInCoa(typed, table.name, _)) :+
-      read.exceptions
+    val checked = table.copy(columnChecks = table.columnChecks ++ coa.map(inCoa))
+    val exceptions = columnRows(typed, checked) ++ frameRows(typed, table) ++
+      headerRows(spark, table, read.header) :+ read.exceptions
     Audit(typed, exceptions.reduce(_.unionByName(_)))
   }
 
@@ -254,18 +270,6 @@ object Dq {
       lit(null), col("column"), col("check"), col("failure_case"), "DataFrameSchema"))
   }
 
-  /** referential-integrity rows ≙ pipeline._dq_account_in_coa
-    * (pipeline.py:30–47): rows of the audited `typed` whose account_code
-    * is not in the COA (broadcast, SURVEY J6), a null code included,
-    * each reported once at its `__idx`
-    */
-  private[etl] def accountInCoa(typed: DataFrame, dataset: String,
-      coaCodes: DataFrame): DataFrame =
-    auditRows(
-      typed.join(broadcast(coaCodes.select(col("account_code").cast("string").as("account_code"))),
-        Seq("account_code"), "left_anti"),
-      dataset, col("__idx"), lit("account_code"), lit("account_in_coa"), col("account_code"), "Column")
-
   /** the audit's row order: (dataset, check, index), and the rows of one
     * duplicate-key check (null index) by their key, so they do not come
     * out in the order the check's hash aggregate emits them. Header and
@@ -305,14 +309,30 @@ object Dq {
   val datasets: Seq[String] =
     Seq("sales", "expenses", "payroll", "inventory_movements", "fx_rates")
 
-  /** exception rows per (dataset, severity): the one grouped count that
-    * both the summary and the gate read
+  /** exception rows per (dataset, severity): the counts that both the
+    * summary and the gate read
     */
   type SeverityCounts = Map[(String, String), Long]
 
-  def severityCounts(exceptions: DataFrame): SeverityCounts =
-    exceptions.groupBy("dataset", "severity").count().collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+  /** `exceptions` (with severity) counting its rows per (dataset,
+    * severity) over [[datasets]] × {ERROR, WARN} as an action reads
+    * them: one `Dataset.observe` aggregate, so the action that writes the
+    * audit also counts it. The counts block until that action has run.
+    * Observe the frame the action reads, above any exchange: observed
+    * below the close's one-partition exchange, a clean close's
+    * observation completed with no counts in it.
+    */
+  def observeSeverities(exceptions: DataFrame): (DataFrame, () => SeverityCounts) = {
+    val pairs = for (d <- datasets; s <- Seq("ERROR", "WARN")) yield (d, s)
+    val counts = pairs.map { case (d, s) =>
+      count(when(col("dataset") === d && col("severity") === s, 1)).as(s"$d/$s")
+    }
+    val seen = Observation()
+    (exceptions.observe(seen, counts.head, counts.tail: _*), () => {
+      val row = seen.get
+      pairs.map { case (d, s) => (d, s) -> row(s"$d/$s").asInstanceOf[Long] }.toMap
+    })
+  }
 
   /** per-dataset error/warn/issue counts with PASS/FAIL status
     * (quality.py:205–249): the static dataset backbone in the

@@ -17,7 +17,8 @@ import EtlIO.settle
   *
   * Plan shape (SURVEY §3.1): after the per-table coerce chains, the
   * close is two concurrent branches over the chains' caches. The DQ
-  * branch writes the audit and decides the gate from one grouped count.
+  * branch writes the audit and decides the gate from the per-severity
+  * counts that the audit write observes.
   * The curated branch writes the fact, then the KPI from the fact's
   * stage, and the dim, each into its own [[graft.core.Publish.stage]].
   * The three tables are published only once the gate has passed and the
@@ -85,23 +86,24 @@ object Pipeline {
       // jobs overlap. Every future is awaited before the first failure is
       // rethrown, so no chain is still creating caches when the scope
       // releases them.
-      val audits = settle(tables.map { case (ts, path, coaCheck) =>
-        inPhase(s"coerce-${ts.name}") {
+      val audits = EtlIO.concurrently(spark, tables.map { case (ts, path, coaCheck) =>
+        s"close: coerce-${ts.name}" -> (() => {
           val read = EtlIO.readCsvRawAudited(spark, path, ts.schema, ts.name, own)
           // fills the read's cache in this chain's own job, before either
           // branch reads it (isEmpty: one job; count would take two)
           read.clean.isEmpty
           ts -> Dq.audit(spark, read, ts, coaCheck)
-        }
-      }).map(_.get)
+        })
+      })
 
       // exception frames are audit-sized by CONTRACT (human-readable
       // output, quality.py:205–249; the sink below is single-file CSV),
       // so they sort locally as [[EtlIO.sortedLocally]] does, in
-      // [[Dq.auditOrder]]. Only the DQ branch reads this cache, one
-      // action after the other.
-      val withSeverity = own(Dq.addSeverity(audits.map(_._2.exceptions).reduce(_.unionByName(_)))
-        .repartition(1).sortWithinPartitions(Dq.auditOrder: _*))
+      // [[Dq.auditOrder]]. The one action that reads them, the audit
+      // write, also counts them per severity for the summary and the gate.
+      val (withSeverity, severityCounts) = Dq.observeSeverities(
+        Dq.addSeverity(audits.map(_._2.exceptions).reduce(_.unionByName(_)))
+          .repartition(1).sortWithinPartitions(Dq.auditOrder: _*))
 
       // the curated branch's inputs, built before any branch starts so
       // that nothing between the branches' start and their settling can
@@ -125,7 +127,7 @@ object Pipeline {
       val sumPath = s"$curatedDir/dq_summary.csv"
       val gate = Future(blocking {
         phase("dq-exceptions")(EtlIO.writeSingleCsv(withSeverity, exPath))
-        val counts = phase("dq-gate")(Dq.severityCounts(withSeverity))
+        val counts = severityCounts()
         phase("dq-summary")(EtlIO.writeSingleCsv(Dq.summaryTable(spark, counts, mode), sumPath))
         Dq.overallStatus(counts, mode) == "PASS"
       })

@@ -548,38 +548,16 @@ object Multimodal {
       .filter(col("rk") <= repCap)
       .select("media_id", "fhash48")
 
-  /** readers for [[writeFrameArtifacts]]' layout — multi-path (an index
-    * is a set of immutable segments, unioned at read time, the same
-    * composition rule as the text LSH index). Empty path list = empty
-    * index (day-0 bootstrap).
+  /** [[writeFrameArtifacts]]' two tables as fixed schemas: an index is a
+    * set of immutable segments, read and unioned by
+    * [[graft.corpus.Corpus.readSegments]] like the text LSH index (no
+    * segment = an empty index, the day-0 bootstrap), and no read runs a
+    * footer job to infer a schema
     */
-  private[graft] def readFrameIndexPostings(spark: SparkSession,
-      paths: Seq[String]): DataFrame =
-    if (paths.isEmpty) emptyFrame(spark,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("media_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("fhash48",
-          org.apache.spark.sql.types.LongType))))
-    else paths.map(p => spark.read.parquet(s"$p/postings"))
-      .reduce(_.unionByName(_))
-
-  private[graft] def readFrameIndexSets(spark: SparkSession,
-      paths: Seq[String]): DataFrame =
-    if (paths.isEmpty) emptyFrame(spark,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("media_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("fhs",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType)))))
-    else paths.map(p => spark.read.parquet(s"$p/sets"))
-      .reduce(_.unionByName(_))
-
-  private def emptyFrame(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  private[graft] val FramePostings =
+    org.apache.spark.sql.types.StructType.fromDDL("media_id BIGINT, fhash48 BIGINT")
+  private[graft] val FrameSets =
+    org.apache.spark.sql.types.StructType.fromDDL("media_id BIGINT, fhs ARRAY<BIGINT>")
 
   /** loud layout gate shared by every frame-index READER path (the
     * r11 ADVICE pattern, marker equality): fails at construction on a
@@ -682,12 +660,12 @@ object Multimodal {
     // through non-rep hashes still counts: the verify intersects FULL
     // truth-capped sets.
     val idxMatches = ev.select(col("media_id").as("new_id"), col("fhash48"))
-      .join(readFrameIndexPostings(spark, indexPaths)
+      .join(graft.corpus.Corpus.readSegments(spark, indexPaths, "postings", FramePostings)
         .select(col("media_id").as("index_id"), col("fhash48")), Seq("fhash48"))
       .select("new_id", "index_id").dropDuplicates("new_id", "index_id")
       .join(sets.select(col("media_id").as("new_id"), col("fhs").as("fha")),
         Seq("new_id"))
-      .join(readFrameIndexSets(spark, indexPaths)
+      .join(graft.corpus.Corpus.readSegments(spark, indexPaths, "sets", FrameSets)
         .select(col("media_id").as("index_id"), col("fhs").as("fhb")),
         Seq("index_id"))
       .filter(size(array_intersect(col("fha"), col("fhb"))) >= minShared)
@@ -765,7 +743,7 @@ object Multimodal {
     paths.foreach(requireFrameIndexLayout)
     Publish.requireDisjoint(outPath, paths, "compactFrameSegments")
     writeFrameArtifacts(
-      readFrameIndexSets(spark, paths)
+      graft.corpus.Corpus.readSegments(spark, paths, "sets", FrameSets)
         .select(col("media_id"), explode(col("fhs")).as("fhash48"))
         .distinct(),
       outPath)

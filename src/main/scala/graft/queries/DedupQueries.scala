@@ -31,14 +31,10 @@ import graft.functions.MoneyFunctions._
 object DedupQueries {
   import RelationalQueries.{Q, QFn}
 
-  /** distinct word-bigram shingle set of `text` (column `sh`) — shared
-    * with the library surface ([[graft.corpus.Corpus.withShingles]];
-    * guard notes there). DuckDB's range-comprehension twin is
-    * [[shinglesSql]].
+  /** DuckDB's range-comprehension twin of
+    * [[graft.corpus.Corpus.withShingles]] (distinct word-bigram shingle
+    * set of `text`, column `sh`; guard notes there).
     */
-  private def withShingles(df: DataFrame): DataFrame =
-    graft.corpus.Corpus.withShingles(df)
-
   private val shinglesSql =
     """SELECT doc_id, list_distinct([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS sh
       |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)""".stripMargin
@@ -104,14 +100,8 @@ object DedupQueries {
     * the LSH signature build (x2) and the sketch UDAF (x9).
     */
   private def withShingleBases(df: DataFrame): DataFrame =
-    withShingles(df).withColumn("bases",
+    graft.corpus.Corpus.withShingles(df).withColumn("bases",
       graft.functions.MinHashBases(col("sh")))
-
-  /** MinHash→LSH band signatures — shared with the library surface
-    * ([[graft.corpus.Corpus.bandSignatures]]; construction notes there).
-    */
-  private def bandSignatures(docsWithSh: DataFrame): DataFrame =
-    graft.corpus.Corpus.bandSignatures(docsWithSh)
 
   /** exact common-shingle counts per (doc_a < doc_b) pair within a lang
     * block — the inverted-index self-join behind x4, with per-key salt
@@ -938,7 +928,7 @@ object DedupQueries {
     (s"$base/clusters", s"$base/index")
   }
 
-  /** the DuckDB mirror of [[bandSignatures]] as WITH-clause text (CTEs
+  /** the DuckDB mirror of [[graft.corpus.Corpus.bandSignatures]] as WITH-clause text (CTEs
     * d → base → mh → sig), shared by the x2 and x10 oracles.
     */
   private[queries] lazy val lshSigCtesSql: String = lshSigCtesSqlOver(shinglesSql)

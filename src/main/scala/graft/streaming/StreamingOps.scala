@@ -314,8 +314,8 @@ object StreamingOps {
     // micro-batch, so per-batch cost rode INDEX size instead of batch
     // size (the disease the text path's persisted shingle table killed;
     // StreamBench's frame_dedup A/B pins the independence).
-    val idx = Multimodal.readFrameIndexPostings(spark, Seq(indexPath))
-    val idxSets = Multimodal.readFrameIndexSets(spark, Seq(indexPath))
+    val idx = graft.corpus.Corpus.readSegments(spark, Seq(indexPath), "postings", Multimodal.FramePostings)
+    val idxSets = graft.corpus.Corpus.readSegments(spark, Seq(indexPath), "sets", Multimodal.FrameSets)
       .select(col("media_id").as("index_id"), col("fhs").as("idx_fhs"))
     hashed.select(col("new_id"), col("fhs"), explode(col("fhs")).as("fhash48"))
       .join(idx, Seq("fhash48"))

@@ -19,7 +19,9 @@ import graft.SparkSpec
   *  - no job of the close outlives the call;
   *  - the audit's bytes for RI-only, one-dtype and clean months (expected
   *    bytes written by hand from the injected defects' row numbers);
-  *  - duplicate-key rows keep one order under any shuffle partitioning.
+  *  - duplicate-key rows keep one order under any shuffle partitioning;
+  *  - under every fail-on mode the summary and the gate follow a recount
+  *    of the audit written.
   */
 class CloseCommitSpec extends SparkSpec {
 
@@ -197,6 +199,41 @@ class CloseCommitSpec extends SparkSpec {
     assert(audits.head.linesIterator.filter(_.contains("no_duplicates")).toSeq ==
       Seq("TLM", "TLM|INV-TLM-0011", "UPE|INV-UPE-0004").map(dup =>
         s"""sales,,,"no_duplicates(entity, invoice_id)",$dup,DataFrameSchema,,WARN"""))
+  }
+
+  test("the summary and the gate follow a recount of the audit under every fail-on mode") {
+    // RI (sales), WARN only (expenses' negative amount), dtype (payroll)
+    // and corrupt-line (inventory) defects
+    val base = sample("recount")
+    patchCell(base, "sales.csv", 5, 3, "49999999")
+    patchCell(base, "expenses.csv", 4, 5, "-5")
+    patchCell(base, "payroll.csv", 3, 4, "abc")
+    val inventory = s"$base/raw/inventory_movements.csv"
+    Files.writeString(Paths.get(inventory),
+      read(inventory) + "2025-12-03,TLM,SKU-001,receipt,1,2,TZS,SPURIOUS\n")
+    Seq(FailOn.Error, FailOn.Warn, FailOn.Never).foreach { mode =>
+      val passed =
+        try { close(base, mode); true }
+        catch { case _: Pipeline.DqGateFailedException => false }
+      val recount = spark.read.option("header", "true").csv(s"$base/curated/dq_exceptions.csv")
+        .groupBy("dataset", "severity").count().collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      assert(recount.keySet == Set("sales" -> "ERROR", "expenses" -> "WARN",
+        "payroll" -> "ERROR", "inventory_movements" -> "ERROR"), mode)
+      def fails(errors: Long, warns: Long): Boolean = mode match {
+        case FailOn.Never => false
+        case FailOn.Warn => errors + warns > 0
+        case _ => errors > 0
+      }
+      val rows = Dq.datasets.map { d =>
+        val (e, w) = (recount.getOrElse(d -> "ERROR", 0L), recount.getOrElse(d -> "WARN", 0L))
+        s"$d,$e,$w,${e + w},${if (fails(e, w)) "FAIL" else "PASS"}"
+      }
+      assert(read(s"$base/curated/dq_summary.csv") ==
+        rows.mkString("dataset,error_count,warn_count,issue_count,status\n", "\n", "\n"), mode)
+      val (errors, warns) = recount.partition(_._1._2 == "ERROR")
+      assert(passed == !fails(errors.values.sum, warns.values.sum), mode)
+    }
   }
 
   private def files(dir: Path): Seq[Path] = {

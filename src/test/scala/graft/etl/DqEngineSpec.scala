@@ -138,7 +138,8 @@ class DqEngineSpec extends SparkSpec {
       "header" -> Dq.headerRows(spark, sales, Seq("date", "rogue")).head,
       "duplicate key" -> Dq.frameRows(typed, sales).head,
       "payroll identity" -> Dq.frameRows(payrollTyped, payroll).head,
-      "account_in_coa" -> Dq.accountInCoa(typed, "sales", Seq("40000001").toDF("account_code"))
+      "account_in_coa" -> Dq.columnRows(typed,
+        sales.copy(columnChecks = Seq(Dq.inCoa(Seq("40000001").toDF("account_code"))))).head
     ).foreach { case (name, df) => conforms(name, df) }
     graft.core.Caches.scoped { own =>
       conforms("corrupt line",
@@ -151,8 +152,12 @@ class DqEngineSpec extends SparkSpec {
       Seq(("sales", 0L, "amount", "greater_than(0.0)", "-1", "Column", null: Integer))
         .toDF("dataset", "index", "column", "check", "failure_case", "schema_context", "check_number")
         .withColumn("check_number", col("check_number").cast("int")))
-    // the close's one grouped count feeds both the summary and the gate
-    val counts = Dq.severityCounts(ex)
+    // the counts one action over the audit observes feed both the
+    // summary and the gate
+    val (observed, severityCounts) = Dq.observeSeverities(ex)
+    observed.collect()
+    val counts = severityCounts()
+    assert(counts.size == 10 && counts(("sales", "WARN")) == 1 && counts.values.sum == 1)
     val sum = Dq.summaryTable(spark, counts, FailOn.Error).collect()
     assert(sum.map(_.getString(0)).toSeq ==
       Seq("sales", "expenses", "payroll", "inventory_movements", "fx_rates"))

@@ -19,6 +19,11 @@ import graft.multimodal.Multimodal
 class MediaStreamSpec extends SparkSpec {
   import spark.implicits._
 
+  private def framePostings(paths: Seq[String]) =
+    graft.corpus.Corpus.readSegments(spark, paths, "postings", Multimodal.FramePostings)
+  private def frameSets(paths: Seq[String]) =
+    graft.corpus.Corpus.readSegments(spark, paths, "sets", Multimodal.FrameSets)
+
   private val sfDir = "/root/testdata/sf0.001"
 
   /** a long repeated text so every twin pair shares well over
@@ -140,7 +145,7 @@ class MediaStreamSpec extends SparkSpec {
     // probe slowdown at scale.
     (Seq(seedBase) ++ arts(gcBase).map(n => s"$gcBase/segments/$n"))
       .foreach { p =>
-        val worst = Multimodal.readFrameIndexPostings(spark, Seq(p))
+        val worst = framePostings(Seq(p))
           .groupBy("fhash48").count()
           .agg(org.apache.spark.sql.functions.max("count")).collect()(0)
         if (!worst.isNullAt(0))
@@ -169,7 +174,7 @@ class MediaStreamSpec extends SparkSpec {
     val cmp = s"$base/cmp_all"
     Multimodal.compactFrameSegments(spark, paths, cmp)
     def probe(idx: Seq[String]): Set[(Long, Long)] = {
-      val post = Multimodal.readFrameIndexPostings(spark, idx)
+      val post = framePostings(idx)
       val r = post.as("a").join(post.as("b"),
           $"a.fhash48" === $"b.fhash48" && $"a.media_id" < $"b.media_id")
         .select($"a.media_id", $"b.media_id")
@@ -181,8 +186,8 @@ class MediaStreamSpec extends SparkSpec {
     // sets table re-derived: every media with a posting has its set row
     // (under the bounded layout postings are REPS — a subset of the
     // evidence holders the sets table carries, so ⊆ not ==)
-    val post = Multimodal.readFrameIndexPostings(spark, Seq(cmp))
-    val sets = Multimodal.readFrameIndexSets(spark, Seq(cmp))
+    val post = framePostings(Seq(cmp))
+    val sets = frameSets(Seq(cmp))
     assert(post.select("media_id").distinct()
         .join(sets, Seq("media_id"), "left_anti").count() == 0,
       "compacted sets table out of sync with its postings")
@@ -372,13 +377,13 @@ class MediaStreamSpec extends SparkSpec {
           .withColumn("n_chars", length($"text").cast("long")), path)
     seg(s"$base/seg_a", nA, 910000000L)
     seg(s"$base/seg_b", nB, 920000000L)
-    val aPost = Multimodal.readFrameIndexPostings(spark, Seq(s"$base/seg_a"))
-    val bPost = Multimodal.readFrameIndexPostings(spark, Seq(s"$base/seg_b"))
+    val aPost = framePostings(Seq(s"$base/seg_a"))
+    val bPost = framePostings(Seq(s"$base/seg_b"))
     assert(aPost.count() > 0 && bPost.count() > 0,
       "each segment must carry the hot hashes under its own cap")
     val cmp = s"$base/cmp"
     Multimodal.compactFrameSegments(spark, Seq(s"$base/seg_a", s"$base/seg_b"), cmp)
-    val cmpPost = Multimodal.readFrameIndexPostings(spark, Seq(cmp)).cache()
+    val cmpPost = framePostings(Seq(cmp)).cache()
     val perHash = cmpPost.groupBy("fhash48").count()
       .select("count").distinct().collect().map(_.getLong(0)).toSet
     assert(perHash == Set(cap.toLong),
@@ -394,7 +399,7 @@ class MediaStreamSpec extends SparkSpec {
       s"global re-rank must keep the union's lowest ids, got ${repIds.size}")
     // full evidence survives in sets: every holder, none evicted
     // (union df is far under the boilerplate bound)
-    assert(Multimodal.readFrameIndexSets(spark, Seq(cmp)).count() == nA + nB,
+    assert(frameSets(Seq(cmp)).count() == nA + nB,
       "the sets table must keep every holder's evidence under the truth bound")
     // the TRUTH bound is the only full-eviction edge, pinned with the
     // writer's test lever (a reachable bound): the same union evidence
@@ -402,13 +407,12 @@ class MediaStreamSpec extends SparkSpec {
     // entirely — and the custom-cap artifact can never pass the
     // production layout gate (its marker records the caps it was
     // written with)
-    val evAll = Multimodal.readFrameIndexSets(spark,
-        Seq(s"$base/seg_a", s"$base/seg_b"))
+    val evAll = frameSets(Seq(s"$base/seg_a", s"$base/seg_b"))
       .select($"media_id", explode($"fhs").as("fhash48")).distinct()
     val tiny = s"$base/tiny_truth"
     Multimodal.writeFrameArtifacts(evAll, tiny, truthCap = cap / 2)
-    assert(Multimodal.readFrameIndexPostings(spark, Seq(tiny)).count() == 0 &&
-        Multimodal.readFrameIndexSets(spark, Seq(tiny)).count() == 0,
+    assert(framePostings(Seq(tiny)).count() == 0 &&
+        frameSets(Seq(tiny)).count() == 0,
       "a hash class past the truth bound must be evicted from both tables")
     intercept[IllegalArgumentException](
       Multimodal.requireFrameIndexLayout(tiny))
