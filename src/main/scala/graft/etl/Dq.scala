@@ -2,7 +2,7 @@ package graft.etl
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,10 +16,10 @@ import org.apache.spark.sql.types._
   * one pass over its typed view (a per-row array of fired-check structs,
   * exploded); each frame check is one aggregate; header and corrupt-line
   * rows come from the read. Every exceptions row, whatever made it, is
-  * built by [[auditRows]]. The summary and the gate read per (dataset,
-  * severity) counts that the audit write observes as it goes
-  * ([[observeSeverities]]), not a second job. Nothing here collects raw
-  * data to the driver.
+  * built by [[auditRows]]. The close collects the sorted audit once and
+  * writes those rows; the summary and the gate count them per (dataset,
+  * severity) ([[severityCounts]]), not in a second job. Only the audit,
+  * audit-sized by contract, reaches the driver.
   */
 object Dq {
 
@@ -314,24 +314,12 @@ object Dq {
     */
   type SeverityCounts = Map[(String, String), Long]
 
-  /** `exceptions` (with severity) counting its rows per (dataset,
-    * severity) over [[datasets]] × {ERROR, WARN} as an action reads
-    * them: one `Dataset.observe` aggregate, so the action that writes the
-    * audit also counts it. The counts block until that action has run.
-    * Observe the frame the action reads, above any exchange: observed
-    * below the close's one-partition exchange, a clean close's
-    * observation completed with no counts in it.
+  /** the audit rows `audit` (with severity) counted per (dataset,
+    * severity), zero-filled over [[datasets]] × {ERROR, WARN}
     */
-  def observeSeverities(exceptions: DataFrame): (DataFrame, () => SeverityCounts) = {
-    val pairs = for (d <- datasets; s <- Seq("ERROR", "WARN")) yield (d, s)
-    val counts = pairs.map { case (d, s) =>
-      count(when(col("dataset") === d && col("severity") === s, 1)).as(s"$d/$s")
-    }
-    val seen = Observation()
-    (exceptions.observe(seen, counts.head, counts.tail: _*), () => {
-      val row = seen.get
-      pairs.map { case (d, s) => (d, s) -> row(s"$d/$s").asInstanceOf[Long] }.toMap
-    })
+  def severityCounts(audit: Seq[Row]): SeverityCounts = {
+    val seen = audit.map(r => (r.getAs[String]("dataset"), r.getAs[String]("severity")))
+    (for (d <- datasets; s <- Seq("ERROR", "WARN")) yield (d, s) -> seen.count(_ == (d, s)).toLong).toMap
   }
 
   /** per-dataset error/warn/issue counts with PASS/FAIL status

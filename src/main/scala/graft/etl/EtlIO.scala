@@ -5,13 +5,16 @@ import java.nio.file.{Files, Paths}
 import scala.concurrent.{blocking, Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.core.{Caches, Publish, Scratch}
+import graft.core.{Caches, Publish}
 
 /** IO layer ≙ reference io_utils.py + the single-file CSV output contract
   * (SURVEY §2.1 S1–S4, §7.4.6).
@@ -199,20 +202,20 @@ object EtlIO {
     * accrete thousands of KB-sized files and at 100 TB the scan becomes
     * footer- and task-scheduling-bound instead of IO-bound. File count
     * is sized from the dataset's ACTUAL on-disk bytes (not a row
-    * guess), the rewrite is one round-robin (or partition-key)
-    * repartition — no driver-side row handling — and the rewritten
+    * guess, listed through the path's Hadoop FileSystem, so a `file:`
+    * URI or a cluster path compacts as it reads), the rewrite is one
+    * round-robin (or partition-key) repartition — no driver-side row handling — and the rewritten
     * dataset replaces the old one through [[graft.core.Publish.dir]].
     */
   def compactParquet(spark: SparkSession, path: String,
       targetBytesPerFile: Long = 128L * 1024 * 1024,
       partitionCols: Seq[String] = Nil): Unit = {
     import org.apache.spark.sql.functions.col
-    val walk = Files.walk(Paths.get(path))
-    val bytes =
-      try walk.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map(Files.size).sum
-      finally walk.close()
+    val fs = new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def parquetBytes(p: HPath): Long = fs.listStatus(p).iterator.map(st =>
+      if (st.isDirectory) parquetBytes(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) st.getLen else 0L).sum
+    val bytes = parquetBytes(new HPath(path))
     val nFiles = math.max(1L, (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
     val df = spark.read.parquet(path)
     val rebucketed =
@@ -225,19 +228,31 @@ object EtlIO {
   }
 
   /** single-file CSV sink: the reference writes one `name.csv` per table
-    * (io_utils.py:19–21); Spark writes a directory of parts, so we
-    * coalesce(1) (output is already small/aggregated by contract) and
-    * publish the one part file. Caller guarantees deterministic row order.
+    * from the rows it holds (io_utils.py:19–21); so do we. The rows are
+    * collected and rendered by [[csvFile]]. Output is small by contract
+    * (aggregates, audits, one month's fact); caller guarantees
+    * deterministic row order.
     */
-  def writeSingleCsv(df: DataFrame, path: String): Unit = Publish.file(path) { stage =>
-    val parts = Files.createTempDirectory(Paths.get(stage).getParent, ".csv_parts")
-    try {
-      df.coalesce(1).write.mode("overwrite").option("header", "true").csv(parts.toString)
-      val part = Files.list(parts).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-"))
-        .getOrElse(sys.error(s"no part file written under $parts"))
-      Files.move(part, Paths.get(stage))
-    } finally Scratch.deleteTree(parts)
+  def writeSingleCsv(df: DataFrame, path: String): Unit =
+    csvFile(df.sparkSession, df.schema, df.collect().toSeq, path)
+
+  /** `rows` of `schema` as one CSV file at `path`, published through
+    * [[graft.core.Publish.file]]: the header, then one line per row, as
+    * `df.write.option("header", "true").csv` writes one partition. It
+    * uses Spark's own CSV generator with the options the writer builds,
+    * under the session's conf, so the bytes match by construction.
+    */
+  private[etl] def csvFile(spark: SparkSession, schema: StructType, rows: Seq[Row],
+      path: String): Unit = Publish.file(path) { stage =>
+    val conf = spark.sessionState.conf
+    SQLConf.withExistingConf(conf) {
+      val options = new CSVOptions(Map("header" -> "true"), conf.csvColumnPruning, conf.sessionLocalTimeZone)
+      val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+      val gen = new UnivocityGenerator(schema,
+        new java.io.OutputStreamWriter(Files.newOutputStream(Paths.get(stage)), options.charset), options)
+      try { gen.writeHeaders(); rows.foreach(r => gen.write(toInternal(r).asInstanceOf[InternalRow])) }
+      finally gen.close()
+    }
   }
 
   def writeText(path: String, content: String): Unit =

@@ -17,8 +17,8 @@ import EtlIO.settle
   *
   * Plan shape (SURVEY §3.1): after the per-table coerce chains, the
   * close is two concurrent branches over the chains' caches. The DQ
-  * branch writes the audit and decides the gate from the per-severity
-  * counts that the audit write observes.
+  * branch collects the audit once, writes it, and decides the gate from
+  * a count of the rows it wrote.
   * The curated branch writes the fact, then the KPI from the fact's
   * stage, and the dim, each into its own [[graft.core.Publish.stage]].
   * The three tables are published only once the gate has passed and the
@@ -99,11 +99,10 @@ object Pipeline {
       // exception frames are audit-sized by CONTRACT (human-readable
       // output, quality.py:205–249; the sink below is single-file CSV),
       // so they sort locally as [[EtlIO.sortedLocally]] does, in
-      // [[Dq.auditOrder]]. The one action that reads them, the audit
-      // write, also counts them per severity for the summary and the gate.
-      val (withSeverity, severityCounts) = Dq.observeSeverities(
-        Dq.addSeverity(audits.map(_._2.exceptions).reduce(_.unionByName(_)))
-          .repartition(1).sortWithinPartitions(Dq.auditOrder: _*))
+      // [[Dq.auditOrder]]. One collect reads them: the rows are written
+      // and counted per severity for the summary and the gate.
+      val withSeverity = Dq.addSeverity(audits.map(_._2.exceptions).reduce(_.unionByName(_)))
+        .repartition(1).sortWithinPartitions(Dq.auditOrder: _*)
 
       // the curated branch's inputs, built before any branch starts so
       // that nothing between the branches' start and their settling can
@@ -121,13 +120,16 @@ object Pipeline {
       val inventory = inWindow(typed("inventory_movements"))
       val payroll = typed("payroll").filter(col("month") === month)
       val fx = Transform.fxToBase(typed("fx_rates"), settings.baseCurrency)
+      val factFrame = Transform.toFactTransactions(
+        sales, expenses, payroll, inventory, fx, settings.baseCurrency)
 
       // DQ branch: write the audit trail, then decide (pipeline.py:129–162)
       val exPath = s"$curatedDir/dq_exceptions.csv"
       val sumPath = s"$curatedDir/dq_summary.csv"
       val gate = Future(blocking {
-        phase("dq-exceptions")(EtlIO.writeSingleCsv(withSeverity, exPath))
-        val counts = severityCounts()
+        val rows = phase("dq-exceptions")(withSeverity.collect().toSeq)
+        EtlIO.csvFile(spark, withSeverity.schema, rows, exPath)
+        val counts = Dq.severityCounts(rows)
         phase("dq-summary")(EtlIO.writeSingleCsv(Dq.summaryTable(spark, counts, mode), sumPath))
         Dq.overallStatus(counts, mode) == "PASS"
       })
@@ -138,21 +140,21 @@ object Pipeline {
       val outKpi = s"$curatedDir/kpi_monthly.parquet"
       // the missing-rate probe rides the fact write: the write counts the
       // rows without a rate, and only a close that has some pays a second
-      // job, over the staged fact, to list them
+      // job, over the staged fact, to list them. Readers of the stage
+      // take the schema the write wrote, so they infer none.
+      def readFact(stage: String) = spark.read.schema(factFrame.schema).parquet(stage)
       val fact = inPhase("fact-write")(Publish.stage(outFact) { stage =>
         val noRate = Observation()
-        EtlIO.writeParquet(Transform.toFactTransactions(
-          sales, expenses, payroll, inventory, fx, settings.baseCurrency)
-          .observe(noRate, count(when(col("rate").isNull, 1)).as("rows")), stage)
+        EtlIO.writeParquet(factFrame.observe(noRate, count(when(col("rate").isNull, 1)).as("rows")), stage)
         if (noRate.get("rows").asInstanceOf[Long] > 0)
-          throw Transform.MissingFxRatesException(Transform.missingFxPairs(spark.read.parquet(stage)))
+          throw Transform.MissingFxRatesException(Transform.missingFxPairs(readFact(stage)))
       })
       val dim = inPhase("dim-write")(Publish.stage(outDim)(EtlIO.writeParquet(dimAccounts, _)))
       // the KPI derives from the fact's stage: one columnar scan of the
       // durable output instead of a second transform or a fact-sized
       // cache (parquet round-trips the columns exactly)
       val kpi = fact.flatMap(f => inPhase("kpi-write")(Publish.stage(outKpi)(
-        EtlIO.writeParquet(Transform.kpiMonthly(spark.read.parquet(f.path), dimAccounts), _))))
+        EtlIO.writeParquet(Transform.kpiMonthly(readFact(f.path), dimAccounts), _))))
 
       // commit: nothing returns or throws while a branch still runs; the
       // gate's verdict wins over the fact's missing rates, as it did when

@@ -152,11 +152,9 @@ class DqEngineSpec extends SparkSpec {
       Seq(("sales", 0L, "amount", "greater_than(0.0)", "-1", "Column", null: Integer))
         .toDF("dataset", "index", "column", "check", "failure_case", "schema_context", "check_number")
         .withColumn("check_number", col("check_number").cast("int")))
-    // the counts one action over the audit observes feed both the
-    // summary and the gate
-    val (observed, severityCounts) = Dq.observeSeverities(ex)
-    observed.collect()
-    val counts = severityCounts()
+    // the counts of the collected audit rows feed both the summary and
+    // the gate
+    val counts = Dq.severityCounts(ex.collect().toSeq)
     assert(counts.size == 10 && counts(("sales", "WARN")) == 1 && counts.values.sum == 1)
     val sum = Dq.summaryTable(spark, counts, FailOn.Error).collect()
     assert(sum.map(_.getString(0)).toSeq ==

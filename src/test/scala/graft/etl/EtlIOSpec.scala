@@ -1,8 +1,56 @@
 package graft.etl
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
+
 import graft.SparkSpec
 
 class EtlIOSpec extends SparkSpec {
+
+  /** the bytes of `df` written by Spark's CSV writer as one part file */
+  private def sparkCsv(df: DataFrame): Array[Byte] = {
+    val dir = s"${tmpDir("etlio_spark_csv")}/out"
+    df.coalesce(1).write.option("header", "true").csv(dir)
+    val parts = Files.list(Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    assert(parts.size == 1, s"expected one part file, found $parts")
+    Files.readAllBytes(parts.head)
+  }
+
+  /** the bytes of `df` written by [[EtlIO.writeSingleCsv]] */
+  private def singleCsv(df: DataFrame): Array[Byte] = {
+    val path = s"${tmpDir("etlio_single_csv")}/out.csv"
+    EtlIO.writeSingleCsv(df, path)
+    Files.readAllBytes(Paths.get(path))
+  }
+
+  private val edgeSchema = StructType(Seq(
+    StructField("text", StringType), StructField("amount", DoubleType),
+    StructField("day", DateType), StructField("n", LongType)))
+
+  test("writeSingleCsv writes the bytes Spark's CSV writer writes") {
+    val day = java.sql.Date.valueOf("2025-12-31")
+    val df = spark.createDataFrame(Seq(
+      Row("a,b", 1.5, day, 1L),
+      Row("say \"hi\"", Double.NaN, day, 2L),
+      Row("", -0.0, null, null),
+      Row(null, 1.0e7, day, 4L),
+      Row("line one\nline two", null, day, 5L)).asJava, edgeSchema)
+    val written = singleCsv(df)
+    assert(new String(written, "UTF-8").startsWith("text,amount,day,n\n"))
+    assert(written.toSeq == sparkCsv(df).toSeq, new String(written, "UTF-8"))
+  }
+
+  test("writeSingleCsv writes an empty frame as its header alone") {
+    val df = spark.createDataFrame(java.util.List.of[Row](), edgeSchema)
+    val written = singleCsv(df)
+    assert(new String(written, "UTF-8") == "text,amount,day,n\n")
+    assert(written.toSeq == sparkCsv(df).toSeq)
+  }
 
   test("csvHeader parses quoted fields with embedded commas and escaped quotes") {
     val p = s"${tmpDir("etlio")}/h.csv"
@@ -73,6 +121,16 @@ class EtlIOSpec extends SparkSpec {
     val back = spark.read.parquet(dir)
     assert(back.count() == 10000)
     assert(back.agg(sum("id")).head.getLong(0) == sumBefore)
+  }
+
+  test("compaction sizes, reads and publishes a file: URI") {
+    val dir = s"${tmpDir("etlio_compact_uri")}/wide"
+    spark.range(1000).toDF("id").repartition(8).write.parquet(dir)
+    EtlIO.compactParquet(spark, Paths.get(dir).toUri.toString)
+    val parts = Files.list(Paths.get(dir)).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))
+    assert(parts == 1, s"expected 1 file after compaction, found $parts")
+    assert(spark.read.parquet(dir).count() == 1000)
   }
 
   test("partitioned compaction keeps the Hive layout, one file per partition") {

@@ -11,7 +11,10 @@ through DuckDB: the same columns with the same types, and the same rows
 once both sides are sorted on every column, since part-file names and
 order differ between runs. Every other file (CSV, HTML, text) is
 compared byte for byte; `.crc` checksums are skipped. A file or dataset
-present on one side only is a difference.
+present on one side only is a difference. A dot-named entry (a
+`.stage_*` or `.aside_*` left by a publish, a `.csv_parts*` temp dir)
+is debris no run should leave, so each one found in either tree is a
+difference, even when both trees hold it.
 
 Prints one line per difference and exits 1 if there is any, else prints
 a one-line summary and exits 0.
@@ -25,11 +28,17 @@ SHOW = 10
 
 
 def scan(root):
-    """(parquet dataset dirs, other files), both relative to `root`: a
-    dataset is a directory named *.parquet or one holding *.parquet parts"""
-    datasets, files = set(), set()
+    """(parquet dataset dirs, other files, dot-named entries), all relative
+    to `root`: a dataset is a directory named *.parquet or one holding
+    *.parquet parts; a dot-named entry is reported, not descended into"""
+    datasets, files, dotted = set(), set(), set()
     for dirpath, dirnames, filenames in os.walk(root):
         rel = os.path.relpath(dirpath, root)
+        for name in [d for d in dirnames if d.startswith(".")] + \
+                [f for f in filenames if f.startswith(".") and not f.endswith(".crc")]:
+            dotted.add(os.path.normpath(os.path.join(rel, name)))
+        dirnames[:] = [d for d in dirnames if not d.startswith(".")]
+        filenames = [f for f in filenames if not f.startswith(".")]
         if dirpath.endswith(".parquet") or any(f.endswith(".parquet") for f in filenames):
             datasets.add(rel)
             dirnames[:] = []
@@ -37,7 +46,7 @@ def scan(root):
         for f in filenames:
             if not f.endswith(".crc"):
                 files.add(os.path.normpath(os.path.join(rel, f)))
-    return datasets, files
+    return datasets, files, dotted
 
 
 def table(con, path):
@@ -84,8 +93,9 @@ def main(argv):
     if len(argv) != 3 or not all(os.path.isdir(d) for d in argv[1:]):
         sys.exit("usage: closediff.py DIR_A DIR_B (two existing directories)")
     a, b = argv[1], argv[2]
-    (sets_a, files_a), (sets_b, files_b) = scan(a), scan(b)
-    diffs = []
+    (sets_a, files_a, dots_a), (sets_b, files_b, dots_b) = scan(a), scan(b)
+    diffs = ["%s: dot-named entry in %s" % (rel, d)
+             for d, dots in ((a, dots_a), (b, dots_b)) for rel in sorted(dots)]
     for rel in sorted(sets_a ^ sets_b):
         diffs.append("%s: parquet dataset only in %s" % (rel, a if rel in sets_a else b))
     for rel in sorted(files_a ^ files_b):
